@@ -60,7 +60,7 @@ def _scalac(jars, classpath, dest, files):
 
 
 def ensure_built(root, out):
-    """Compile if needed; return the runtime classpath."""
+    """Compile if needed; return the runtime classpath and the source stamp."""
     main = _sources(root, "src/main/scala")
     harness = _sources(root, "perfbench/harness")
     if not main or not harness:
@@ -81,9 +81,9 @@ def ensure_built(root, out):
         _scalac(spark, main_cls + os.pathsep + all_jars, harness_cls, harness)
         with open(stamp_file, "w") as f:
             f.write(stamp)
-    return os.pathsep.join([harness_cls, main_cls, jars])
+    return os.pathsep.join([harness_cls, main_cls, jars]), stamp
 
 
 if __name__ == "__main__":
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    print(ensure_built(repo, sys.argv[1] if len(sys.argv) > 1 else os.path.join(repo, ".bench_build")))
+    print(ensure_built(repo, sys.argv[1] if len(sys.argv) > 1 else os.path.join(repo, ".bench_build"))[0])

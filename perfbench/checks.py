@@ -3,20 +3,27 @@
 - sweep: every query result the harness kept is compared with
   DuckDB running the query's `SparkEntry.oracleSql` statement over the
   same generated Parquet files, as an order-insensitive hash of the
-  canonical rows (columns sorted by name, floats rounded to 9 places). Oracle hashes are computed once per input directory.
+  canonical rows (columns sorted by name, floats rounded to 9 places).
+  An oracle hash is computed once per input directory and oracle
+  statement: the cache key carries a digest of the statement's text.
   A query without an oracle statement must return rows, and the same
-  rows on every execution of the run and on every run of the seed.
+  rows on every execution of the run and on every run of the seed with
+  the same program: that reference is keyed by the build's source stamp,
+  so a changed program sets its own.
 - medallion: the gold mart keeps the order-items grain, its
   per-payment-type sums equal the generator's, and the silver tables
   hold nulls exactly in the malformed cells the generator injected.
 
-Each check names the operation it failed; `run` returns those names.
+Every timed iteration's outputs are checked. Each failed check is
+reported as "<operation> [it<n>]: <what>", so one operation of one
+iteration counts once however many of its checks fail.
 """
 import glob
 import hashlib
 import json
 import math
 import os
+import statistics
 
 import duckdb
 import pyarrow.parquet as pq
@@ -80,7 +87,11 @@ def _spark_hash(con, d):
     return result_hash(con, f"SELECT * FROM read_parquet('{d}/*.parquet')")
 
 
-def check_queries(check_dir, data_dir, record, cache_root):
+def _digest(text):
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+def check_queries(check_dir, data_dir, record, cache_root, program):
     os.makedirs(cache_root, exist_ok=True)
     cache_path = os.path.join(cache_root, os.path.basename(data_dir) + ".json")
     cache = {}
@@ -96,18 +107,19 @@ def check_queries(check_dir, data_dir, record, cache_root):
             continue  # the query threw; the harness already counted it
         got = [_spark_hash(con, d) for d in runs]
         if name in oracle:
-            if name not in cache:
-                cache[name] = list(result_hash(con, oracle[name]))
-            want = tuple(cache[name])
+            key = f"{name}:oracle:{_digest(oracle[name])}"
+            if key not in cache:
+                cache[key] = list(result_hash(con, oracle[name]))
+            want = tuple(cache[key])
         else:
-            want = tuple(cache.setdefault(name, list(got[0])))
-            if want[0] == 0:
-                wrong.append(f"{name}: empty result and no oracle statement")
-                continue
+            want = tuple(cache.setdefault(f"{name}:program:{program}", list(got[0])))
         for d, g in zip(runs, got):
-            if g != want:
-                wrong.append(f"{name}: {os.path.basename(os.path.dirname(d))} "
-                             f"gave {g[0]} rows ({g[1]}), expected {want[0]} rows ({want[1]})")
+            it = os.path.basename(os.path.dirname(d))
+            if g[0] == 0 and name not in oracle:
+                wrong.append(f"{name} [{it}]: empty result and no oracle statement")
+            elif g != want:
+                wrong.append(f"{name} [{it}]: gave {g[0]} rows ({g[1]}), "
+                             f"expected {want[0]} rows ({want[1]})")
     with open(cache_path + ".tmp", "w") as f:
         json.dump(cache, f)
     os.replace(cache_path + ".tmp", cache_path)
@@ -115,10 +127,19 @@ def check_queries(check_dir, data_dir, record, cache_root):
 
 
 def check_medallion(check_dir, facts):
-    """Returns (wrong, bad cells found) for the first timed iteration's outputs."""
-    out = os.path.join(check_dir, "it1")
-    if not os.path.isdir(out):
-        return [], 0
+    """Returns (wrong, misread cells per iteration, as the median). A
+    misread cell is a typed silver cell that is null where the generator
+    injected no malformed value, or not null where it did."""
+    wrong, misread = [], []
+    for out in sorted(glob.glob(os.path.join(check_dir, "it*"))):
+        w, m = _check_medallion_iteration(out, facts)
+        it = os.path.basename(out)
+        wrong += [f"{op} [{it}]:{what}" for op, what in (x.split(":", 1) for x in w)]
+        misread.append(m)
+    return wrong, statistics.median(misread) if misread else 0
+
+
+def _check_medallion_iteration(out, facts):
     con = _connect()
     wrong = []
     gold = os.path.join(out, "gold", "olist", "vendas")
@@ -134,7 +155,7 @@ def check_medallion(check_dir, facts):
     injected = {}
     for cell in facts["bad_cells"]:
         injected.setdefault(cell[0], set()).add(tuple(cell[1:]))
-    found = 0
+    misread = 0
     for table, (keys, typed) in OLIST_TYPED.items():
         d = os.path.join(out, "silver", "olist", table)
         if not os.path.isdir(d):
@@ -145,18 +166,19 @@ def check_medallion(check_dir, facts):
             wrong.append(f"ingest.{table}: {rows} silver rows, expected {facts['rows'][table]}")
         nulls = {tuple(str(t[k][r]) for k in keys) + (c,)
                  for c in typed for r, v in enumerate(t[c]) if v is None}
-        found += len(nulls)
         want = injected.get(table, set())
+        misread += len(nulls ^ want)
         if nulls != want:
             wrong.append(f"ingest.{table}: {len(nulls - want)} unexpected nulls, "
                          f"{len(want - nulls)} malformed cells not null")
-    return wrong, found
+    return wrong, misread
 
 
-def run(workload, check_dir, data_dir, facts, record, cache_root):
+def run(workload, check_dir, data_dir, facts, record, cache_root, program):
+    """(wrong, misread cells); `program` is the build's source stamp."""
     if workload == "medallion":
         return check_medallion(check_dir, facts)
-    return check_queries(check_dir, data_dir, record, cache_root), 0
+    return check_queries(check_dir, data_dir, record, cache_root, program), 0
 
 
 def corrupt(workload, check_dir):

@@ -20,23 +20,27 @@ import graft.sources.{IngestJob, OlistCatalog, OlistVendas}
   * timings, failures, spans) as JSON. `perfbench/run.py` generates the
   * inputs, checks the outputs and turns the record into metrics.
   *
-  *   Harness <workload> <dataDir> <sessionWarmDir> <workDir> <seconds> <trace> <out.json>
+  *   Harness <workload> <dataDir> <warmDataDir> <sessionWarmDir> <workDir> <seconds> <trace> <out.json>
   *
   * A workload is a sequence of parts, each run in a fresh session of its
-  * own; set-up (`GraftSession.configure` plus the warm-up query over the
-  * tiny `sessionWarmDir`) is timed for every session, and, untraced,
-  * `SetupProbes` more times before the loop. A part runs its one-time build phase,
-  * then its operations. Iterations over all parts repeat until `seconds`
-  * have passed (at least one). The outputs of the first two are kept
-  * under `<workDir>/check` for the correctness check. With `trace` = 1,
-  * every iteration records spans and engine counters.
+  * own. Set-up is `GraftSession.configure` plus the warm-up query over the
+  * tiny `sessionWarmDir`. A part runs its one-time build phase, then its
+  * operations. First comes one untimed iteration of every part over the
+  * tiny `warmDataDir`, which pays the JVM's class loading and compilation
+  * of the code paths the parts use. Untraced, set-up is then timed
+  * `SetupProbes` times, with the default configuration. Then timed
+  * iterations over all parts repeat until `seconds` have passed (at
+  * least one); the outputs of each are kept under `<workDir>/check/it<n>`
+  * for the correctness check. With `trace` = 1, every timed iteration
+  * records spans and engine counters.
   */
 object Harness {
   val Cores = 4
   val SetupProbes = 3
 
   def main(args: Array[String]): Unit = {
-    val Array(workload, dataDir, sessionWarmDir, workDir, secondsArg, traceArg, outPath) = args
+    val Array(workload, dataDir, warmDataDir, sessionWarmDir, workDir, secondsArg, traceArg,
+      outPath) = args
     val seconds = secondsArg.toDouble
     val tracing = traceArg == "1"
     val work = new File(workDir).getAbsoluteFile
@@ -44,28 +48,53 @@ object Harness {
     val parts = workloads(workload)
     rec.queries(parts.collect { case q: QuerySweep => q.names }.flatten)
 
+    val w0 = System.nanoTime()
+    parts.zipWithIndex.foreach { case (part, pi) =>
+      val dir = new File(work, s"warm-$pi")
+      val spark = session(dir, part.conf)
+      try {
+        warmUp(spark, sessionWarmDir)
+        val (tr, discarded) = (new Tracer(false), new Record)
+        part.iteration(spark, warmDataDir, new File(dir, "out"), tr, discarded)
+        if (tracing) part.probes(spark, warmDataDir, tr, discarded)
+      } finally {
+        spark.stop()
+        deleteTree(dir)
+      }
+    }
+    rec.extra("warmup_s", (System.nanoTime() - w0) / 1e9)
+    calibrate()
+    (1 to 2).foreach(_ => rec.extra("calibration_s", calibrate()))
     (1 to (if (tracing) 0 else SetupProbes)).foreach { i =>
       val dir = new File(work, s"setup$i")
       val t0 = System.nanoTime()
-      session(dir, sessionWarmDir, Map.empty).stop()
+      val s = session(dir, Map.empty)
+      warmUp(s, sessionWarmDir)
+      s.stop()
       rec.setup((System.nanoTime() - t0) / 1e9)
       deleteTree(dir)
     }
     val heap = new HeapSampler
     heap.start()
-    val t0 = System.nanoTime()
+    var measured = 0.0
     var it = 1
-    while (it == 1 || (System.nanoTime() - t0) / 1e9 < seconds) {
+    while (it == 1 || measured < seconds) {
+      val t0 = System.nanoTime()
       heap.reset()
       val res = parts.zipWithIndex.map { case (part, pi) =>
         val tr = new Tracer(tracing)
         val dir = new File(work, s"it$it-$pi")
-        val out = if (it <= 2) new File(work, s"check/it$it") else new File(dir, "out")
-        val s0 = System.nanoTime()
-        val spark = tr.span("session.configure")(session(dir, sessionWarmDir, part.conf))
-        rec.setup((System.nanoTime() - s0) / 1e9)
+        val out = new File(work, s"check/it$it")
         val listener = if (tracing) Some(new JobListener) else None
-        listener.foreach(spark.sparkContext.addSparkListener)
+        val spark = tr.span("session.configure") {
+          val s = session(dir, part.conf)
+          // The span began before its context existed: bind its job group
+          // now, so the warm-up query's jobs are charged to it.
+          listener.foreach(s.sparkContext.addSparkListener)
+          tr.bind()
+          warmUp(s, sessionWarmDir)
+          s
+        }
         try {
           val r = part.iteration(spark, dataDir, out, tr, rec)
           drain(spark)
@@ -79,6 +108,8 @@ object Harness {
         }
       }
       rec.iteration(it, tracing, res.reduce(_ + _), heap.peakMb)
+      measured += (System.nanoTime() - t0) / 1e9
+      (1 to 2).foreach(_ => rec.extra("calibration_s", calibrate()))
       it += 1
     }
     heap.finish()
@@ -191,20 +222,20 @@ object Harness {
     }
   }
 
-  /** The queries a pass runs, by family: the ones that dominate each
-    * family's cost at sf0.1, plus every query the open items name (the
-    * join-ladder, spill-bound and mart queries). A whole registry pass
-    * does not fit the run budget on four cores.
+  /** The queries a pass runs: each family's costliest query by the
+    * per-query sf0.1 times of the repository's latest measured sweep
+    * (VERDICT.md); perfbench/README.md lists them with their times. More
+    * queries do not fit the run budget on four cores.
     */
   val olapFamilies = Seq(
     "mart" -> pick(VendasMart.queries, "q_vendas_mart_bucketed"),
-    "relational" -> pick(Relational.queries, "q_join_anti", "q_resample_ffill"),
+    "relational" -> pick(Relational.queries, "q_resample_ffill"),
     "analytics" -> pick(Analytics.queries, "q_approx_stats"),
-    "setops" -> pick(SetOpsJson.queries, "q_json_funcs"))
+    "setops" -> pick(SetOpsJson.queries, "q_intersect"))
   val corpusFamilies = Seq(
-    "dedup" -> pick(Dedup.queries, "q_dedup_jaccard", "q_dedup_simhash"),
-    "similarity" -> pick(Similarity.queries, "q_sim_lsh_topk"),
-    "text" -> pick(TextAnalysis.queries, "q_text_lm_score", "q_text_quality_filter"),
+    "dedup" -> pick(Dedup.queries, "q_dedup_jaccard"),
+    "similarity" -> pick(Similarity.queries, "q_sim_recall"),
+    "text" -> pick(TextAnalysis.queries, "q_text_lm_score"),
     "multimodal" -> pick(Multimodal.queries, "q_multimodal_meta"))
 
   private def pick(m: Map[String, (SparkSession, String) => DataFrame], names: String*) = {
@@ -241,13 +272,45 @@ object Harness {
     docs.unpersist(true); vecs.unpersist(true)
   }
 
+  /** Host speed: the wall time of a fixed job that runs none of the
+    * library's code, on `Cores` threads at once. Each thread fills one
+    * million longs from a linear congruential generator and sorts them,
+    * `CalibrationRounds` times. Run once untimed after the warm-up
+    * iteration, then twice after the warm-up and after every timed
+    * iteration; `perfbench/metrics.py` divides the end-to-end times by
+    * the median, so that a shared host's changing speed cancels out.
+    */
+  val CalibrationRounds = 4
+
+  def calibrate(): Double = {
+    val t0 = System.nanoTime()
+    val threads = (1 to Cores).map { k =>
+      val t = new Thread(() => {
+        val a = new Array[Long](1 << 20)
+        var x = 0x9E3779B97F4A7C15L * k
+        (1 to CalibrationRounds).foreach { _ =>
+          var i = 0
+          while (i < a.length) {
+            x = x * 6364136223846793005L + 1442695040888963407L
+            a(i) = x
+            i += 1
+          }
+          java.util.Arrays.sort(a)
+        }
+      })
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    (System.nanoTime() - t0) / 1e9
+  }
+
   // ---- session -------------------------------------------------------------
 
   /** A session configured as `graft.Bench` builds it, with every path it
-    * writes kept under `iter`, followed by the warm-up query (the
-    * flagship mart over a tiny generated corpus).
+    * writes kept under `iter`.
     */
-  def session(iter: File, warmupDir: String, conf: Map[String, String]): SparkSession = {
+  def session(iter: File, conf: Map[String, String]): SparkSession = {
     iter.mkdirs()
     val spark = GraftSession.configure(SparkSession.builder().config(conf)
       .master(s"local[$Cores]")
@@ -260,9 +323,12 @@ object Harness {
       .config("spark.sql.warehouse.dir", new File(iter, "warehouse").getAbsolutePath))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    VendasMart.mart(spark, warmupDir).count()
     spark
   }
+
+  /** The warm-up query: the flagship mart over a tiny generated star schema. */
+  def warmUp(spark: SparkSession, warmupDir: String): Unit =
+    VendasMart.mart(spark, warmupDir).count()
 
   def drain(spark: SparkSession): Unit =
     try org.apache.spark.graft.ListenerShim.drain(spark.sparkContext)

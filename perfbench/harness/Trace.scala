@@ -4,21 +4,33 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Engine counters per Spark job, keyed later to spans by job group. */
 final class JobListener extends SparkListener {
-  final class Job(val group: String, val startMs: Long, val firstStage: String) {
+  /** `plan`: the physical plan of the SQL execution the job belongs to,
+    * or of that execution's root when it is nested in another one. */
+  final class Job(val group: String, val startMs: Long, val plan: String) {
     var endMs: Long = startMs
     var cpuNs, gcMs, fetchMs, shuffleW, shuffleR, spill, in, out = 0L
   }
   val jobs = mutable.ArrayBuffer.empty[Job]
   private val byId = mutable.HashMap.empty[Int, Job]
   private val byStage = mutable.HashMap.empty[Int, Job]
+  private val execPlan = mutable.HashMap.empty[Long, String]
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => synchronized {
+      val root = s.rootExecutionId.getOrElse(s.executionId)
+      execPlan(s.executionId) = execPlan.getOrElse(root, s.physicalPlanDescription)
+    }
+    case _ =>
+  }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-    val first = if (e.stageInfos.isEmpty) "" else e.stageInfos.minBy(_.stageId).name
-    val j = new Job(group, e.time, first)
+    val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+    val plan = prop("spark.sql.execution.id").flatMap(id => execPlan.get(id.toLong)).getOrElse("")
+    val j = new Job(prop("spark.jobGroup.id").orNull, e.time, plan)
     jobs += j
     byId(e.jobId) = j
     e.stageIds.foreach(byStage(_) = j)
@@ -66,6 +78,11 @@ final class Tracer(enabled: Boolean) {
         case None => sc.clearJobGroup()
       }
     }
+
+  /** Re-applies the current span's job group; for a span that began
+    * before the session it runs in was created.
+    */
+  def bind(): Unit = if (enabled) setGroup(current)
 
   def span[T](name: String)(body: => T): T =
     if (!enabled) body
@@ -144,10 +161,14 @@ final class Tracer(enabled: Boolean) {
     spans.toSeq.flatMap { s =>
       val js = jobsOf(s)
       val own = row(s.name, s.parent.map(_.name), s.wallS, selfS(s), s.startMs, js)
-      // OlistVendas.run is one call; its re-layout (saveAsTable) and mart
-      // write jobs are told apart by the call site Spark names them by.
+      // OlistVendas.run is one call: first the re-layout, whose writes are
+      // saveAsTable SQL executions, then the mart write. A job belongs to
+      // the re-layout when it starts before the last of those writes ends.
+      val relayoutEnd = js.filter(j => j.plan.contains("SaveAsV1TableCommand") ||
+        j.plan.contains("CreateDataSourceTableAsSelect")).map(_.endMs).maxOption
       val split = if (s.name != "gold.run") Nil else
-        js.groupBy(j => if (j.firstStage.startsWith("saveAsTable")) "gold.relayout" else "gold.mart_write")
+        js.groupBy(j => if (relayoutEnd.exists(j.startMs <= _)) "gold.relayout"
+          else "gold.mart_write")
           .toSeq.sortBy(_._1).map { case (n, g) =>
             val w = (g.map(_.endMs).max - g.map(_.startMs).min) / 1e3
             row(n, Some(s.name), w, w, g.map(_.startMs).min, g)

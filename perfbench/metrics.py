@@ -1,7 +1,9 @@
 """Turns the harness record into the benchmark's metrics.
 
 End-to-end (untraced run), each the median over the run's samples:
-  setup_s             session set-up: GraftSession.configure + warm-up query
+  setup_s             session set-up: GraftSession.configure + warm-up query,
+                      over the run's default-configuration probes, made
+                      after the untimed warm-up iteration
   peak_heap_mb        peak used JVM heap during an iteration
   build_s             one-time build phase: ingest (medallion); bucketed
                       layout, join statistics and index prewarm (sweep)
@@ -11,6 +13,12 @@ End-to-end (untraced run), each the median over the run's samples:
                       gold per bronze CSV byte (medallion); bucketed layout
                       and resident index per byte of the Parquet they index
                       (sweep)
+
+The three times are given at a fixed host speed: each is scaled by
+CALIBRATION_REF_S over the run's median calibration time, the wall time
+of a fixed job that runs none of the library's code (Harness.calibrate).
+They read as seconds on a host where that job takes CALIBRATION_REF_S;
+the measured seconds are printed beside them.
 
 Per-layer (traced run), from the spans, per iteration. A layer is the module
 the benchmark calls into, named by the span's first word.
@@ -26,6 +34,16 @@ EXPR_FNS = ["graft_minhash", "graft_simhash", "graft_shingles", "graft_char_fing
             "graft_dot", "graft_quantize_stats"]
 COUNTERS = [("spill_mb", "MB"), ("shuffle_write_mb", "MB"), ("input_mb", "MB"),
             ("output_mb", "MB")]
+# Layer counters the benchmark's calls cannot produce, left out: the
+# warm-up query is a count over a tiny input, the index prewarm only
+# caches, and the expression probes are exchange-free noop writes over
+# cached input.
+NOT_PRODUCED = {"session.spill_mb", "session.output_mb", "index.output_mb",
+                "expr.spill_mb", "expr.shuffle_write_mb", "expr.output_mb"}
+
+
+CALIBRATION_REF_S = 0.5
+HOST_SCALED = ("setup_s", "build_s", "work_s")
 
 
 def _median(xs):
@@ -44,9 +62,21 @@ def percentile(xs, q):
 
 
 def end_to_end(record):
+    """The end-to-end metrics, with the three times at the fixed host speed."""
+    scale = CALIBRATION_REF_S / _median(record["extras"]["calibration_s"])
+    return {n: ((v * scale, u) if n in HOST_SCALED else (v, u))
+            for n, (v, u) in measured(record).items()}
+
+
+def measured(record):
+    """The end-to-end metrics as measured."""
     its = record["iterations"]
+    # A traced run makes no set-up probes; its sessions' spans stand in
+    # (for the tracing-overhead lines only).
+    setup = record["extras"].get("setup_s") or [
+        s["wall_s"] for s in record["spans"] if s["name"] == "session.configure"]
     return {
-        "setup_s": (_median(record["extras"]["setup_s"]), "s"),
+        "setup_s": (_median(setup), "s"),
         "peak_heap_mb": (_median([i["peak_heap_mb"] for i in its]), "MB"),
         "build_s": (_median([i["build_s"] for i in its]), "s"),
         "work_s": (_median([i["work_s"] for i in its]), "s"),
@@ -75,7 +105,7 @@ def _layer(span):
     return span["name"].split(".")[0]
 
 
-def per_layer(record, bad_cells):
+def per_layer(record, misread_cells):
     spans = record["spans"]
     top = _top(spans)
     total_wall = sum(s["wall_s"] for s in top) or 1.0
@@ -99,12 +129,13 @@ def per_layer(record, bad_cells):
         ss = [s for s in top if _layer(s) == layer]
         out[f"{layer}.wall_share"] = (sum(s["wall_s"] for s in ss) / total_wall, "ratio")
         for c, unit in COUNTERS:
-            out[f"{layer}.{c}"] = (sum(s[c] for s in ss) / n_its, unit)
+            if f"{layer}.{c}" not in NOT_PRODUCED:
+                out[f"{layer}.{c}"] = (sum(s[c] for s in ss) / n_its, unit)
     gold = [s for s in spans if s["parent"] == "gold.run"]
     for part in ("gold.relayout", "gold.mart_write"):
         out[f"{part}_share"] = (sum(s["wall_s"] for s in gold if s["name"] == part) / total_wall,
                                 "ratio")
-    out["ingest.bad_cells"] = (bad_cells, "count")
+    out["ingest.misread_cells"] = (misread_cells, "count")
     out["index.resident_mb"] = (_median(record["extras"].get("index.resident_mb", [])), "MB")
     for fn in EXPR_FNS:
         out[f"expr.{fn}.rows_per_s"] = (

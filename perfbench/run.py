@@ -42,18 +42,30 @@ WORKLOADS = {
 RUN_LIMIT_S = 170
 
 
-def inputs(workload, seed, data_root, scale=None):
+def inputs(workload, seed, data_root):
     cfg = WORKLOADS[workload]
     if workload == "medallion":
         n = cfg["orders"]
         return datagen.cached(data_root, f"olist-{n}-s{seed}",
                               lambda d: datagen.olist_bronze(d, seed, n))
-    sf = scale or cfg["scale"]
+    sf = cfg["scale"]
     return datagen.cached(data_root, f"star-{sf}-s{seed}",
                           lambda d: datagen.star_corpus(d, seed, sf))
 
 
-def run_harness(args, classpath, data_dir, warm_dir, work, record, log, deadline):
+def warm_inputs(workload, data_root):
+    """(tiny inputs of the untimed warm-up iteration, the star schema the
+    session warm-up query reads)."""
+    star, _ = datagen.cached(data_root, "star-0.001-s0",
+                             lambda d: datagen.star_corpus(d, 0, 0.001))
+    if workload == "sweep":
+        return star, star
+    olist, _ = datagen.cached(data_root, "olist-300-s0",
+                              lambda d: datagen.olist_bronze(d, 0, 300))
+    return olist, star
+
+
+def run_harness(args, classpath, data_dir, warm_data, warm_dir, work, record, log, deadline):
     cfg = WORKLOADS[args.workload]
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
@@ -64,7 +76,8 @@ def run_harness(args, classpath, data_dir, warm_dir, work, record, log, deadline
         "-XX:+UnlockDiagnosticVMOptions", "-XX:GCLockerRetryAllocationCount=100",
         "-XX:-UsePerfData",  # no hsperfdata file outside the checkout
         "-cp", classpath, "graft.perfbench.Harness",
-        args.workload, data_dir, warm_dir, work, str(args.seconds), str(args.trace), record])
+        args.workload, data_dir, warm_data, warm_dir, work, str(args.seconds), str(args.trace),
+        record])
     with open(log, "w") as out:
         proc = subprocess.Popen(cmd, stdout=out, stderr=subprocess.STDOUT, cwd=work)
         try:
@@ -108,12 +121,11 @@ def main():
     root = os.path.dirname(HERE)
     out_root = os.path.join(root, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
     t0 = time.monotonic()
-    classpath = build.ensure_built(root, out_root)
+    classpath, stamp = build.ensure_built(root, out_root)
     note("build", t0)
     data_root = os.path.join(out_root, "data")
     data_dir, facts = inputs(args.workload, args.seed, data_root)
-    # The session warm-up query reads a tiny star schema (sf0.001).
-    warm_dir, _ = inputs("sweep", 0, data_root, scale=0.001)
+    warm_data, warm_dir = warm_inputs(args.workload, data_root)
     note("inputs", t0)
     deadline = time.monotonic() + RUN_LIMIT_S
 
@@ -124,29 +136,41 @@ def main():
     log = os.path.join(out_root, "logs", f"{args.workload}-s{args.seed}-t{args.trace}.log")
     os.makedirs(os.path.dirname(log), exist_ok=True)
     try:
-        run_harness(args, classpath, data_dir, warm_dir, work, record_path, log, deadline)
+        run_harness(args, classpath, data_dir, warm_data, warm_dir, work, record_path, log,
+                    deadline)
         note("harness", t0)
         with open(record_path) as f:
             record = json.load(f)
         check_dir = os.path.join(work, "check")
         if args.corrupt:
             checks.corrupt(args.workload, check_dir)
-        wrong, bad_cells = checks.run(args.workload, check_dir, data_dir, facts, record,
-                                      os.path.join(data_root, "oracle"))
+        wrong, misread = checks.run(args.workload, check_dir, data_dir, facts, record,
+                                    os.path.join(data_root, "oracle"), stamp[:16])
         note("checks", t0)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
     attempted = record["attempted"]
+    # One operation of one iteration fails once: it threw, or any of its
+    # output checks failed.
     failed = len(record["failures"]) + len({w.split(":")[0] for w in wrong})
     for f in record["failures"]:
         print(f"FAILED {f['op']}: {f['error']}")
     for w in wrong:
         print(f"WRONG  {w}")
     e2e = metrics.end_to_end(record)
+    print(f"untimed warm-up iteration {record['extras']['warmup_s'][0]:.4g} s")
+    for name in ("calibration_s", "setup_s"):
+        print(f"{name} samples " + " ".join(f"{v:.4g}" for v in record["extras"].get(name, [])))
+    print("measured " + ", ".join(f"{n} {v:.4g} {u}" for n, (v, u)
+                                  in metrics.measured(record).items()
+                                  if n in metrics.HOST_SCALED))
+    for i in record["iterations"]:
+        print(f"iteration {i['it']}: build_s {i['build_s']:.4g}, work_s {i['work_s']:.4g}, "
+              f"peak_heap_mb {i['peak_heap_mb']:.4g}")
     result_path = os.path.join(out_root, "results", f"{args.workload}-s{args.seed}.json")
     if args.trace:
-        values = metrics.per_layer(record, bad_cells)
+        values = metrics.per_layer(record, misread)
         # Tracing overhead: this traced run against the untraced run of the
         # same workload and seed, when one has been made in this checkout.
         if os.path.exists(result_path):
