@@ -4,6 +4,10 @@
   DuckDB running the query's `SparkEntry.oracleSql` statement over the
   same generated Parquet files, as an order-insensitive hash of the
   canonical rows (columns sorted by name, floats rounded to 9 places).
+  The statement's `round(x, n)` rounds as Spark's does: half up on the
+  value's shortest decimal form. DuckDB's own `round` works on the
+  binary double, so a value that prints as an exact tie (35678.14515)
+  would round the other way (35678.1451 against Spark's 35678.1452).
   An oracle hash is computed once per input directory and oracle
   statement: the cache key carries a digest of the statement's text.
   A query without an oracle statement must return rows, and the same
@@ -14,15 +18,16 @@
   per-payment-type sums equal the generator's, and the silver tables
   hold nulls exactly in the malformed cells the generator injected.
 
-Every timed iteration's outputs are checked. Each failed check is
+Every pass's outputs are checked. Each failed check is
 reported as "<operation> [it<n>]: <what>", so one operation of one
-iteration counts once however many of its checks fail.
+pass counts once however many of its checks fail.
 """
 import glob
 import hashlib
 import json
 import math
 import os
+import re
 import statistics
 
 import duckdb
@@ -73,10 +78,16 @@ def result_hash(con, sql):
     return n, f"{names}:{h}"
 
 
+ROUND_CALL = re.compile(r"\bround\s*\(", re.IGNORECASE)
+ROUND_MACRO = ("CREATE MACRO round_half_up(x, n) AS CAST(round(CAST(CAST(CAST(x AS DOUBLE) "
+               "AS VARCHAR) AS DECIMAL(38, 20)), n) AS DOUBLE)")
+
+
 def _connect(data_dir=None):
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     con.execute("SET threads TO 4")
+    con.execute(ROUND_MACRO)
     if data_dir:
         for t in TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'")
@@ -107,9 +118,10 @@ def check_queries(check_dir, data_dir, record, cache_root, program):
             continue  # the query threw; the harness already counted it
         got = [_spark_hash(con, d) for d in runs]
         if name in oracle:
-            key = f"{name}:oracle:{_digest(oracle[name])}"
+            sql = ROUND_CALL.sub("round_half_up(", oracle[name])
+            key = f"{name}:oracle:{_digest(ROUND_MACRO + sql)}"
             if key not in cache:
-                cache[key] = list(result_hash(con, oracle[name]))
+                cache[key] = list(result_hash(con, sql))
             want = tuple(cache[key])
         else:
             want = tuple(cache.setdefault(f"{name}:program:{program}", list(got[0])))
@@ -127,7 +139,7 @@ def check_queries(check_dir, data_dir, record, cache_root, program):
 
 
 def check_medallion(check_dir, facts):
-    """Returns (wrong, misread cells per iteration, as the median). A
+    """Returns (wrong, misread cells per pass, as the median). A
     misread cell is a typed silver cell that is null where the generator
     injected no malformed value, or not null where it did."""
     wrong, misread = [], []

@@ -9,8 +9,9 @@ Two generators, both pure functions of (seed, scale):
   sf-N test data. `scale` is the TPC-H style scale factor: 0.1 gives
   600,000 lineitem rows and 5,000 documents.
 - `olist_bronze` writes the eight Olist bronze CSV prefixes that
-  `IngestJob.runAll` reads: several files per prefix, one file per table
-  with reordered or extra columns, and seeded malformed cells in typed
+  `IngestJob.runAll` reads: several files per prefix, all with the
+  table's header; a third of the tables have their columns reversed and
+  a third carry an extra column; and seeded malformed cells in typed
   columns. It returns the facts the correctness check needs (row counts,
   per-payment-type gold sums, and where each malformed cell went).
 
@@ -19,6 +20,7 @@ gives byte-identical files.
 """
 import csv
 import datetime as dt
+import hashlib
 import json
 import os
 
@@ -284,22 +286,23 @@ def olist_bronze(out, seed, n_orders, files_per_table=3, bad_share=0.004):
     rng = np.random.default_rng([seed, 2])
     tables = _olist_tables(rng, n_orders)
     bad = []  # [table, key values..., column]
-    for name, cols in tables.items():
+    for t_idx, (name, cols) in enumerate(tables.items()):
         keys, typed = OLIST_TYPED[name]
         n = len(cols[keys[0]])
         for c in typed:
             for r in np.flatnonzero(rng.random(n) < bad_share):
                 cols[c][r] = str(rng.choice(GARBAGE))
                 bad.append([name] + [cols[k][r] for k in keys] + [c])
+        # One header per table, shared by all of its files: the declared
+        # order, the reverse order, or the declared order plus a column
+        # the declared schema does not know, in turn over the tables.
         header = list(cols)
+        hdr = [header, header[::-1], header + ["ingest_note"]][t_idx % 3]
         d = os.path.join(out, "olist", name)
         os.makedirs(d, exist_ok=True)
         bounds = np.linspace(0, n, files_per_table + 1).astype(int)
         for f in range(files_per_table):
             lo, hi = bounds[f], bounds[f + 1]
-            # File 1 reverses the column order; file 2 carries an extra
-            # column the declared schema does not know.
-            hdr = header[::-1] if f == 1 else header + (["ingest_note"] if f == 2 else [])
             with open(os.path.join(d, f"part-{f:02d}.csv"), "w", newline="") as fh:
                 w = csv.writer(fh)
                 w.writerow(hdr)
@@ -330,9 +333,13 @@ def olist_bronze(out, seed, n_orders, files_per_table=3, bad_share=0.004):
     }
 
 
+_SOURCE = hashlib.sha256(open(__file__, "rb").read()).hexdigest()[:12]
+
+
 def cached(root, key, make):
-    """Run `make(dir)` once per key; later calls reuse the directory."""
-    d = os.path.join(root, key)
+    """Run `make(dir)` once per key and version of this file; later calls
+    reuse the directory."""
+    d = os.path.join(root, f"{key}-g{_SOURCE}")
     done = os.path.join(d, "_facts.json")
     if not os.path.exists(done):
         tmp = d + ".tmp"

@@ -1,10 +1,15 @@
 package graft.perfbench
 
 import java.io.File
-import java.lang.management.ManagementFactory
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.file.{Files, Paths}
+import javax.management.{Notification, NotificationEmitter, NotificationListener}
+import javax.management.openmbean.CompositeData
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import com.sun.management.GarbageCollectionNotificationInfo
 
 import org.apache.hadoop.fs.Path
 
@@ -15,104 +20,79 @@ import graft.operators._
 import graft.plans.GraftExtensions
 import graft.sources.{IngestJob, OlistCatalog, OlistVendas}
 
-/** The benchmark's JVM side: runs one workload as a closed loop from a
-  * single client thread and writes the raw record (per-iteration
-  * timings, failures, spans) as JSON. `perfbench/run.py` generates the
-  * inputs, checks the outputs and turns the record into metrics.
+/** The benchmark's JVM side: runs one pass of a workload as a closed
+  * loop from a single client thread in this fresh JVM, and writes the
+  * raw record (timings, failures, spans) as JSON. `perfbench/run.py`
+  * generates the inputs, starts one JVM per pass, checks the outputs
+  * and turns the records into metrics.
   *
-  *   Harness <workload> <dataDir> <warmDataDir> <sessionWarmDir> <workDir> <seconds> <trace> <out.json>
+  *   Harness <workload> <dataDir> <sessionWarmDir> <workDir> <pass> <trace> <out.json>
   *
   * A workload is a sequence of parts, each run in a fresh session of its
   * own. Set-up is `GraftSession.configure` plus the warm-up query over the
   * tiny `sessionWarmDir`. A part runs its one-time build phase, then its
-  * operations. First comes one untimed iteration of every part over the
-  * tiny `warmDataDir`, which pays the JVM's class loading and compilation
-  * of the code paths the parts use. Untraced, set-up is then timed
-  * `SetupProbes` times, with the default configuration. Then timed
-  * iterations over all parts repeat until `seconds` have passed (at
-  * least one); the outputs of each are kept under `<workDir>/check/it<n>`
-  * for the correctness check. With `trace` = 1, every timed iteration
-  * records spans and engine counters.
+  * operations. The pass is timed as a scheduled batch task meets it: in
+  * a JVM that has run nothing before, so class loading, JIT and code
+  * generation are part of the time. Its outputs are kept under
+  * `<workDir>/check/it<pass>` for the correctness check. With `trace` =
+  * 1 the pass records spans and engine counters. Untraced, set-up is
+  * then timed `SetupProbes` times with the default configuration, after
+  * one untimed probe.
   */
 object Harness {
   val Cores = 4
   val SetupProbes = 3
 
   def main(args: Array[String]): Unit = {
-    val Array(workload, dataDir, warmDataDir, sessionWarmDir, workDir, secondsArg, traceArg,
-      outPath) = args
-    val seconds = secondsArg.toDouble
+    val Array(workload, dataDir, sessionWarmDir, workDir, passArg, traceArg, outPath) = args
+    val pass = passArg.toInt
     val tracing = traceArg == "1"
     val work = new File(workDir).getAbsoluteFile
     val rec = new Record
     val parts = workloads(workload)
     rec.queries(parts.collect { case q: QuerySweep => q.names }.flatten)
 
-    val w0 = System.nanoTime()
-    parts.zipWithIndex.foreach { case (part, pi) =>
-      val dir = new File(work, s"warm-$pi")
-      val spark = session(dir, part.conf)
+    calibrate()
+    (1 to 2).foreach(_ => rec.extra("calibration_s", calibrate()))
+    val heap = new HeapPeak
+    heap.start()
+    val res = parts.zipWithIndex.map { case (part, pi) =>
+      val tr = new Tracer(tracing)
+      val dir = new File(work, s"it$pass-$pi")
+      val out = new File(work, s"check/it$pass")
+      val listener = if (tracing) Some(new JobListener) else None
+      val spark = tr.span("session.configure") {
+        val s = session(dir, part.conf)
+        // The span began before its context existed: bind its job group
+        // now, so the warm-up query's jobs are charged to it.
+        listener.foreach(s.sparkContext.addSparkListener)
+        tr.bind()
+        warmUp(s, sessionWarmDir)
+        s
+      }
       try {
-        warmUp(spark, sessionWarmDir)
-        val (tr, discarded) = (new Tracer(false), new Record)
-        part.iteration(spark, warmDataDir, new File(dir, "out"), tr, discarded)
-        if (tracing) part.probes(spark, warmDataDir, tr, discarded)
+        val r = part.iteration(spark, dataDir, out, tr, rec)
+        drain(spark)
+        if (tracing) part.probes(spark, dataDir, tr, rec)
+        drain(spark)
+        listener.foreach(l => rec.spans(tr, l))
+        r
       } finally {
         spark.stop()
         deleteTree(dir)
       }
     }
-    rec.extra("warmup_s", (System.nanoTime() - w0) / 1e9)
-    calibrate()
+    rec.iteration(pass, tracing, res.reduce(_ + _), heap.finish())
     (1 to 2).foreach(_ => rec.extra("calibration_s", calibrate()))
-    (1 to (if (tracing) 0 else SetupProbes)).foreach { i =>
+    (0 to (if (tracing) -1 else SetupProbes)).foreach { i =>
       val dir = new File(work, s"setup$i")
       val t0 = System.nanoTime()
       val s = session(dir, Map.empty)
       warmUp(s, sessionWarmDir)
       s.stop()
-      rec.setup((System.nanoTime() - t0) / 1e9)
+      if (i > 0) rec.setup((System.nanoTime() - t0) / 1e9)
       deleteTree(dir)
     }
-    val heap = new HeapSampler
-    heap.start()
-    var measured = 0.0
-    var it = 1
-    while (it == 1 || measured < seconds) {
-      val t0 = System.nanoTime()
-      heap.reset()
-      val res = parts.zipWithIndex.map { case (part, pi) =>
-        val tr = new Tracer(tracing)
-        val dir = new File(work, s"it$it-$pi")
-        val out = new File(work, s"check/it$it")
-        val listener = if (tracing) Some(new JobListener) else None
-        val spark = tr.span("session.configure") {
-          val s = session(dir, part.conf)
-          // The span began before its context existed: bind its job group
-          // now, so the warm-up query's jobs are charged to it.
-          listener.foreach(s.sparkContext.addSparkListener)
-          tr.bind()
-          warmUp(s, sessionWarmDir)
-          s
-        }
-        try {
-          val r = part.iteration(spark, dataDir, out, tr, rec)
-          drain(spark)
-          if (tracing) part.probes(spark, dataDir, tr, rec)
-          drain(spark)
-          listener.foreach(l => rec.spans(tr, l))
-          r
-        } finally {
-          spark.stop()
-          deleteTree(dir)
-        }
-      }
-      rec.iteration(it, tracing, res.reduce(_ + _), heap.peakMb)
-      measured += (System.nanoTime() - t0) / 1e9
-      (1 to 2).foreach(_ => rec.extra("calibration_s", calibrate()))
-      it += 1
-    }
-    heap.finish()
     Files.writeString(Paths.get(outPath), rec.json)
   }
 
@@ -275,10 +255,10 @@ object Harness {
   /** Host speed: the wall time of a fixed job that runs none of the
     * library's code, on `Cores` threads at once. Each thread fills one
     * million longs from a linear congruential generator and sorts them,
-    * `CalibrationRounds` times. Run once untimed after the warm-up
-    * iteration, then twice after the warm-up and after every timed
-    * iteration; `perfbench/metrics.py` divides the end-to-end times by
-    * the median, so that a shared host's changing speed cancels out.
+    * `CalibrationRounds` times. Run once untimed, then twice before and
+    * twice after the pass; `perfbench/metrics.py` divides the
+    * end-to-end times by the median, so that a shared host's changing
+    * speed cancels out.
     */
   val CalibrationRounds = 4
 
@@ -350,20 +330,36 @@ object Harness {
     f.delete()
   }
 
-  /** Peak used heap, sampled every 10 ms between resets. */
-  final class HeapSampler extends Thread("perfbench-heap") {
-    setDaemon(true)
+  /** Peak heap in use after a garbage collection, over the collections
+    * between `start` and `finish`: the most memory the pass held on to.
+    * A sampled peak of used heap also counts the garbage in the young
+    * generation, whose size at each collection depends on the collector's
+    * timing; over ten seeds on a shared four-core VM its spread reached
+    * 0.22 of its median. If no collection ran, `finish` requests one, so
+    * there is a sample.
+    */
+  final class HeapPeak extends NotificationListener {
     @volatile private var peak = 0L
-    @volatile private var running = true
-    private val mem = ManagementFactory.getMemoryMXBean
-    def reset(): Unit = peak = 0L
-    def peakMb: Double = peak / 1e6
-    override def run(): Unit = while (running) {
-      val u = mem.getHeapMemoryUsage.getUsed
-      if (u > peak) peak = u
-      Thread.sleep(10)
+    private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    private val collectors = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .collect { case e: NotificationEmitter => e }
+    def handleNotification(n: Notification, handback: AnyRef): Unit =
+      if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+        val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+        val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
+          .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+        synchronized { if (used > peak) peak = used }
+      }
+    def start(): Unit = collectors.foreach(_.addNotificationListener(this, null, null))
+    /** The peak in MB, once the collector has reported. */
+    def finish(): Double = {
+      if (peak == 0L) System.gc()
+      val deadline = System.nanoTime() + 5000000000L
+      while (peak == 0L && System.nanoTime() < deadline) Thread.sleep(10)
+      collectors.foreach(_.removeNotificationListener(this))
+      peak / 1e6
     }
-    def finish(): Unit = { running = false; join() }
   }
 
   // ---- the raw record ------------------------------------------------------

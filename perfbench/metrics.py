@@ -3,8 +3,9 @@
 End-to-end (untraced run), each the median over the run's samples:
   setup_s             session set-up: GraftSession.configure + warm-up query,
                       over the run's default-configuration probes, made
-                      after the untimed warm-up iteration
-  peak_heap_mb        peak used JVM heap during an iteration
+                      after the pass
+  peak_heap_mb        peak JVM heap in use after a garbage collection, over
+                      the collections of a pass
   build_s             one-time build phase: ingest (medallion); bucketed
                       layout, join statistics and index prewarm (sweep)
   work_s              the work after it: gold mart (medallion), the query
@@ -20,7 +21,7 @@ of a fixed job that runs none of the library's code (Harness.calibrate).
 They read as seconds on a host where that job takes CALIBRATION_REF_S;
 the measured seconds are printed beside them.
 
-Per-layer (traced run), from the spans, per iteration. A layer is the module
+Per-layer (traced run), from the spans, per pass. A layer is the module
 the benchmark calls into, named by the span's first word.
 """
 import statistics

@@ -6,11 +6,13 @@
 
 Run from the root of a checkout. It builds the library and the harness
 from source (cached under `.bench_build/`), generates the seeded inputs
-(cached per workload and seed), runs the harness JVM as a closed loop
-from one client on local[4], checks every output, and prints a summary
-followed by the result as the last stdout line:
+(cached per workload and seed), runs passes of the workload, each in a
+fresh harness JVM as a closed loop from one client on local[4], until
+`--seconds` have been measured (at least one pass), checks every
+output, and prints a summary followed by the result as the last stdout
+line:
 
-    {"correct": true, "attempted": 22, "failed": 0, "metrics": {...}}
+    {"correct": true, "attempted": 10, "failed": 0, "metrics": {...}}
 
 `--trace 0` reports the end-to-end metrics, `--trace 1` the per-layer
 ones, and also writes every span to `.bench_build/trace/`. See
@@ -53,22 +55,19 @@ def inputs(workload, seed, data_root):
                           lambda d: datagen.star_corpus(d, seed, sf))
 
 
-def warm_inputs(workload, data_root):
-    """(tiny inputs of the untimed warm-up iteration, the star schema the
-    session warm-up query reads)."""
+def session_warm_inputs(data_root):
+    """The tiny star schema the session warm-up query reads."""
     star, _ = datagen.cached(data_root, "star-0.001-s0",
                              lambda d: datagen.star_corpus(d, 0, 0.001))
-    if workload == "sweep":
-        return star, star
-    olist, _ = datagen.cached(data_root, "olist-300-s0",
-                              lambda d: datagen.olist_bronze(d, 0, 300))
-    return olist, star
+    return star
 
 
-def run_harness(args, classpath, data_dir, warm_data, warm_dir, work, record, log, deadline):
+def run_pass(args, classpath, data_dir, warm_dir, work, n, log, deadline):
+    """One pass in a fresh harness JVM; returns its record."""
     cfg = WORKLOADS[args.workload]
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
+    out = os.path.join(work, f"record{n}.json")
     cmd = (["java", f"-Xmx{cfg['heap']}"] + build.JVM_OPENS + [
         "-Dspark.ui.enabled=false",
         f"-Djava.io.tmpdir={tmp}",
@@ -76,10 +75,9 @@ def run_harness(args, classpath, data_dir, warm_data, warm_dir, work, record, lo
         "-XX:+UnlockDiagnosticVMOptions", "-XX:GCLockerRetryAllocationCount=100",
         "-XX:-UsePerfData",  # no hsperfdata file outside the checkout
         "-cp", classpath, "graft.perfbench.Harness",
-        args.workload, data_dir, warm_data, warm_dir, work, str(args.seconds), str(args.trace),
-        record])
-    with open(log, "w") as out:
-        proc = subprocess.Popen(cmd, stdout=out, stderr=subprocess.STDOUT, cwd=work)
+        args.workload, data_dir, warm_dir, work, str(n), str(args.trace), out])
+    with open(log, "a") as f:
+        proc = subprocess.Popen(cmd, stdout=f, stderr=subprocess.STDOUT, cwd=work)
         try:
             rc = proc.wait(timeout=max(1.0, deadline - time.monotonic()))
         except subprocess.TimeoutExpired:
@@ -92,6 +90,21 @@ def run_harness(args, classpath, data_dir, warm_data, warm_dir, work, record, lo
         with open(log) as f:
             sys.stderr.write(f.read()[-4000:])
         raise SystemExit(f"harness exited with {rc}; log: {log}")
+    with open(out) as f:
+        return json.load(f)
+
+
+def merge(records):
+    """One record of several passes: lists joined, attempts summed."""
+    rec = dict(records[0])
+    for k in ("failures", "iterations", "spans"):
+        rec[k] = [x for r in records for x in r[k]]
+    rec["attempted"] = sum(r["attempted"] for r in records)
+    rec["extras"] = {}
+    for r in records:
+        for k, vs in r["extras"].items():
+            rec["extras"].setdefault(k, []).extend(vs)
+    return rec
 
 
 def note(msg, t0):
@@ -111,7 +124,7 @@ def main():
     p.add_argument("--orders", type=int,
                    help="override the medallion order count (smoke test)")
     args = p.parse_args()
-    # A terminated run stops its JVM too (run_harness's cleanup).
+    # A terminated run stops its JVM too (run_pass's cleanup).
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if args.scale:
         WORKLOADS["sweep"]["scale"] = args.scale
@@ -125,22 +138,29 @@ def main():
     note("build", t0)
     data_root = os.path.join(out_root, "data")
     data_dir, facts = inputs(args.workload, args.seed, data_root)
-    warm_data, warm_dir = warm_inputs(args.workload, data_root)
+    warm_dir = session_warm_inputs(data_root)
     note("inputs", t0)
     deadline = time.monotonic() + RUN_LIMIT_S
 
     work = os.path.join(out_root, "work", f"{args.workload}-s{args.seed}-p{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    record_path = os.path.join(work, "record.json")
     log = os.path.join(out_root, "logs", f"{args.workload}-s{args.seed}-t{args.trace}.log")
     os.makedirs(os.path.dirname(log), exist_ok=True)
+    open(log, "w").close()
     try:
-        run_harness(args, classpath, data_dir, warm_data, warm_dir, work, record_path, log,
-                    deadline)
-        note("harness", t0)
-        with open(record_path) as f:
-            record = json.load(f)
+        # Passes, each in a fresh JVM, until --seconds have been measured
+        # (at least one); no pass starts that might not end in time.
+        records, measured, longest = [], 0.0, 0.0
+        while not records or (measured < args.seconds
+                               and deadline - time.monotonic() > 2 * longest):
+            p0 = time.monotonic()
+            records.append(run_pass(args, classpath, data_dir, warm_dir, work,
+                                    len(records) + 1, log, deadline))
+            longest = max(longest, time.monotonic() - p0)
+            measured += sum(i["build_s"] + i["work_s"] for i in records[-1]["iterations"])
+        record = merge(records)
+        note(f"harness, {len(records)} pass(es)", t0)
         check_dir = os.path.join(work, "check")
         if args.corrupt:
             checks.corrupt(args.workload, check_dir)
@@ -151,7 +171,7 @@ def main():
         shutil.rmtree(work, ignore_errors=True)
 
     attempted = record["attempted"]
-    # One operation of one iteration fails once: it threw, or any of its
+    # One operation of one pass fails once: it threw, or any of its
     # output checks failed.
     failed = len(record["failures"]) + len({w.split(":")[0] for w in wrong})
     for f in record["failures"]:
@@ -159,14 +179,13 @@ def main():
     for w in wrong:
         print(f"WRONG  {w}")
     e2e = metrics.end_to_end(record)
-    print(f"untimed warm-up iteration {record['extras']['warmup_s'][0]:.4g} s")
     for name in ("calibration_s", "setup_s"):
         print(f"{name} samples " + " ".join(f"{v:.4g}" for v in record["extras"].get(name, [])))
     print("measured " + ", ".join(f"{n} {v:.4g} {u}" for n, (v, u)
                                   in metrics.measured(record).items()
                                   if n in metrics.HOST_SCALED))
     for i in record["iterations"]:
-        print(f"iteration {i['it']}: build_s {i['build_s']:.4g}, work_s {i['work_s']:.4g}, "
+        print(f"pass {i['it']}: build_s {i['build_s']:.4g}, work_s {i['work_s']:.4g}, "
               f"peak_heap_mb {i['peak_heap_mb']:.4g}")
     result_path = os.path.join(out_root, "results", f"{args.workload}-s{args.seed}.json")
     if args.trace:
