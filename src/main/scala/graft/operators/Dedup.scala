@@ -455,8 +455,7 @@ object Dedup {
 
     /** Validated long knob: names the conf key on a malformed or
       * out-of-range value instead of surfacing a bare
-      * NumberFormatException (same contract as the resample fanOut
-      * knob, `Relational.scala`).
+      * NumberFormatException.
       */
     def confLong(spark: SparkSession, key: String, default: Long,
         min: Long): Long =

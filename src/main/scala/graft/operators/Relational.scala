@@ -348,81 +348,6 @@ object Relational {
         round(cume_dist().over(w), 4).as("cume"))
   }
 
-  /** In-sorter bytes per row of the resample union frame (unsafe row
-    * for (long, timestamp, double, int) plus sorter pointer/page
-    * overhead) — calibrated against the measured regime: 21.3 GB of
-    * sort spill over ~324 M rows at sf30 ≈ 66 B/row.
-    */
-  private val TaggedRowSortBytes = 64L
-
-  /** Per-task sort budget the counted fan-out aims for. Execution
-    * memory per concurrently-running task at the 8 GiB/32-thread
-    * harness is ~72–144 MB (unified pool × execution half ÷ slots,
-    * depending on cache residency); 64 MB keeps a whole task's sort
-    * in memory with headroom at exactly the geometry a 1000-executor
-    * cluster gives each core.
-    */
-  private val TargetSortBytesPerTask = 64L << 20
-
-  /** Counted shuffle width for a sort-heavy stage: enough partitions
-    * that `rows × bytesPerRow` fits [[TargetSortBytesPerTask]] per
-    * task, never below the session default (small frames keep the
-    * default plan bit-for-bit) UNLESS the configured cap is lower —
-    * `spark.graft.sort.fanOutCap` (default 1024) takes precedence
-    * over the session-default floor, so a deliberately tiny cap
-    * narrows even small frames (spec-pinned as the intended
-    * contract: the cap is the operator's hard width ceiling).
-    *
-    * The cap is a conf because its right value is a CLUSTER property,
-    * not an operator property: on this 32-thread single JVM the r16
-    * width matrix showed fan-outs past ~3 tasks/core pay scheduling
-    * and per-file bookkeeping that no spill saving repays, while the
-    * sf100 fanOut A/B showed the counted width WANTS ~6,500
-    * partitions for a 64 MB/task sort set at 10.5 B grid rows — the
-    * formula is right and the single-node cap is the binding
-    * constraint. A 1000-executor deployment (32k cores) should raise
-    * the cap toward `cores × 2-3` so the counted width can breathe;
-    * the default stays at the measured single-node knee. Validated
-    * like the index-ladder knobs: errors name the conf key, min 1.
-    */
-  private[graft] def sortFanOut(spark: SparkSession, rows: Long, bytesPerRow: Long): Int = {
-    val default = spark.sessionState.conf.numShufflePartitions
-    val cap = math.min(
-      Dedup.IndexHolder.confLong(spark, "spark.graft.sort.fanOutCap", 1024L, min = 1L),
-      Int.MaxValue.toLong)
-    val need = (rows * bytesPerRow + TargetSortBytesPerTask - 1) / TargetSortBytesPerTask
-    math.min(cap, math.max(default.toLong, need)).toInt
-  }
-
-  /** Memoized row count of the resample union frame (grid + hourly) —
-    * the sizing input of its counted sort fan-out. One counting pass
-    * per (session, corpus), same contract as Dedup's memoized corpus
-    * counts; the pass is the query's own plan minus the window, so it
-    * costs seconds where the un-widened sort pays tens of GB of
-    * spill. Stopped-session keys are swept on access.
-    */
-  private val resampleRowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  private def resampleRows(spark: SparkSession, sfDir: String): Long = {
-    resampleRowCache.keySet.foreach { k =>
-      if (k._1.sparkContext.isStopped) resampleRowCache.remove(k)
-    }
-    resampleRowCache.getOrElseUpdate((spark, sfDir), {
-      val hourly = Tables.events(spark, sfDir)
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"))
-      // Grid rows per user = span hours + 1, computed arithmetically
-      // from the hour-truncated bounds (no need to materialize the
-      // 300 M-row explode just to count it). DIV keeps it integer.
-      val spans = hourly.groupBy("user_id")
-        .agg(max(unix_micros(col("h"))).as("h1"), min(unix_micros(col("h"))).as("h0"),
-          count(lit(1)).as("obs_rows"))
-        .select((expr("(h1 - h0) DIV 3600000000") + lit(1L) + col("obs_rows")).as("rows"))
-      val r = spans.agg(sum(col("rows"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    })
-  }
-
   /** Time-series resample + forward-fill: per user, an hourly grid
     * spanning [first, last] active hour; missing buckets inherit the
     * last observed hourly total. The grid explode is
@@ -485,42 +410,13 @@ object Relational {
       .select(col("user_id"), col("h"),
         lit(null).cast("double").as("v"), lit(0).as("src"))
       .unionByName(hourly.select(col("user_id"), col("h"), col("v"), lit(1).as("src")))
-    // Sort-width A/B gate, and a REJECTED lever (r16): "off"
-    // (default) = the session-default, AQE-coalescible exchange;
-    // "auto" = the r15 counted 64 MB/task width; an integer pins an
-    // explicit width. The r15 counted form shipped unmeasured and the
-    // r16 same-night profile matrix at sf30 rejected it: once the
-    // grid explode is parallel (below), widths 32/128/192 all read
-    // 38-41 s (spill 15/8.6/12.9 GB — the sort's sequential spill
-    // writes cost no measurable wall at this harness) while the
-    // counted 344 reads 53.4 s (0 spill): +30% wall to erase disk
-    // traffic nothing was waiting on — the same wide-fan-out
-    // bookkeeping cost that rejected the r10 initialPartitionNum
-    // lever and the r16 mart factParts knob. The knob reproduces all
-    // four regimes under the exact bench harness.
-    val fanOutMode = spark.conf.getOption("spark.graft.resample.fanOut")
-      .getOrElse("off")
-    // An explicit integer pins the width, but only widths ABOVE the
-    // session default take effect (the repartition below is guarded by
-    // `parts > defaultParts` so small corpora stay AQE-coalescible);
-    // a pinned width at or under the default is a documented no-op.
-    val parts = fanOutMode match {
-      case "auto" => sortFanOut(spark, resampleRows(spark, sfDir), TaggedRowSortBytes)
-      case "off"  => 0
-      case n      =>
-        try n.toInt
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.resample.fanOut must be 'auto', 'off', or an integer; got '$n'")
-        }
-    }
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
     val fill = Window.partitionBy("user_id")
       .orderBy(col("h"), col("src").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val presence = Window.partitionBy("user_id", "h")
-    (if (parts > defaultParts) tagged.repartition(parts, col("user_id"))
-     else tagged)
+    // The sort stays at the session width: a counted wider fan-out
+    // erased the sf30 spill but cost +30% wall (SCALE.md, r16).
+    tagged
       .withColumn("filled", last("v", ignoreNulls = true).over(fill))
       .withColumn("has_obs",
         max(when(col("v").isNotNull, col("src")).otherwise(lit(0))).over(presence))

@@ -1220,36 +1220,6 @@ class OperatorSpec extends SparkSpec {
     }
   }
 
-  test("sortFanOut cap is a validated conf; counted width honors it") {
-    // r18: the sf100 fanOut A/B showed the counted 64 MB/task width
-    // wants ~6,500 partitions at 10.5 B grid rows while the 1024 cap
-    // (the measured single-node knee) binds — the right cap is a
-    // cluster property, so it is a conf, validated like the ladder
-    // knobs.
-    val s = spark.newSession()
-    val default = s.sessionState.conf.numShufflePartitions
-    // Small frame: stays at the session default (plan unchanged).
-    assert(Relational.sortFanOut(s, 1000L, 40L) == default)
-    // Big frame: counted width, default cap 1024.
-    assert(Relational.sortFanOut(s, 10_500_000_000L, 40L) == 1024)
-    // Raised cap: the counted need (~6,258 tasks of 64 MB) breathes.
-    s.conf.set("spark.graft.sort.fanOutCap", "8192")
-    val counted = Relational.sortFanOut(s, 10_500_000_000L, 40L)
-    assert(counted > 1024 && counted <= 8192)
-    assert(counted == ((10_500_000_000L * 40L + (64L << 20) - 1) / (64L << 20)).toInt)
-    // Lowered cap binds; cap below the session default still wins
-    // (an operator-pinned width may undercut the default by intent).
-    s.conf.set("spark.graft.sort.fanOutCap", "64")
-    assert(Relational.sortFanOut(s, 10_500_000_000L, 40L) == 64)
-    // Bad values: error names the conf key.
-    for (bad <- Seq("0", "-5", "wide")) {
-      s.conf.set("spark.graft.sort.fanOutCap", bad)
-      val e = intercept[IllegalArgumentException](
-        Relational.sortFanOut(s, 10_500_000_000L, 40L))
-      assert(e.getMessage.contains("spark.graft.sort.fanOutCap"))
-    }
-  }
-
   test("session-build IO codec is owned by GraftSession and validated") {
     // r19: spark.io.compression.codec / spark.shuffle.spill.compress
     // are CORE confs Spark 4 refuses at runtime (CANNOT_MODIFY_CONFIG)
