@@ -475,20 +475,9 @@ object VendasMart {
         else evpRaw
     }
 
-    // A/B knob (r16, default ABSENT = byte-identical plan): widen the
-    // two fact-carrying sort exchanges — the SMJ's orderkey exchange
-    // and the item-grain custkey exchange — to a pinned width, the
-    // resample counted-fan-out playbook applied to the plain mart's
-    // 18 GB sf30 sort spill. Set spark.graft.mart.factParts for the
-    // SpillProfile A/B; promoted to a counted auto only if the leg
-    // shows the spill is the sorts' (and not the SHJ builds') to shave.
-    val factParts = spark.conf.getOption("spark.graft.mart.factParts").map(_.toInt)
-    val liW = factParts.fold(li)(n => li.repartition(n, li("l_orderkey")))
-    val base = liW
+    li
       .join(ord, li("l_orderkey") === ord("o_orderkey"), "left")
       .join(prt, li("l_partkey") === prt("p_partkey"), "left")
-    val based = factParts.fold(base)(n => base.repartition(n, ord("o_custkey")))
-    based
       .join(cst, ord("o_custkey") === cst("c_custkey"), "left")
       .join(evp, ord("o_custkey") === evp("user_id"), "left")
       .na.fill(0.0, EventTypes)
