@@ -37,27 +37,16 @@ object Bench {
         s""", "round_env": "$e""""
       case _ => ""
     }
-    // AQE initial shuffle fan-out. Default = cores (Spark's own
-    // default: initialPartitionNum falls back to shuffle.partitions).
-    // The r9-named "input-sized fan-out" lever for the jaccard spill
-    // knee was built, A/B'd on identical data, and REJECTED: at 8 GiB
-    // it slowed q_dedup_jaccard 2.2x at sf1 (150 initial partitions),
-    // 1.3x at sf3 (449) and 2.1x at sf10 (1024) versus 32, and a flat
-    // 512 cost +10% total_min at sf0.1 — the wide fan-out multiplies
-    // sort/spill bookkeeping in the pair-explosion stages instead of
-    // bounding them (committed legs: bench_sf{1,3,10}_probe_init32 vs
-    // the lever-era bench_sf1_fanout150_r10 / bench_sf3_fanout449_r10
-    // / bench_sf10_probe_r10).
-    // SPARK_GRAFT_INIT_PARTS keeps the knob for same-data A/B
-    // reproduction; the spill-regime adjudication itself lives in
-    // SCALE_EXEMPTIONS.json, which scale_curve.py reads.
-    val initPartitions = sys.env.get("SPARK_GRAFT_INIT_PARTS").map(_.toInt)
-      .getOrElse(cpus.toInt)
+    // AQE initial shuffle fan-out = cores (Spark's own default). An
+    // input-sized fan-out was A/B'd on identical data and rejected:
+    // it slowed q_dedup_jaccard 1.3-2.2x at sf1/sf3/sf10 and cost +10%
+    // total_min at sf0.1 (bench_sf{1,3,10}_probe_init32 vs
+    // bench_sf1_fanout150_r10 / bench_sf3_fanout449_r10 /
+    // bench_sf10_probe_r10).
     val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initPartitions)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
       // AQE is pinned ON (the Spark 4 default) rather than assumed:
       // Dedup.lshVerified deliberately carries no broadcast() hint on
       // its participants semi-join and relies on AQE runtime stats to
@@ -67,13 +56,6 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
-    // Dev A/B knob mirroring SpillProfile's: override the session's
-    // AQE broadcast threshold so a bench subset can isolate a
-    // threshold-driven plan flip under the exact harness that produced
-    // the committed legs. This is how the r13 48m-vs-default jaccard
-    // A/B was taken (see GraftSession's threshold scaladoc).
-    sys.env.get("SPARK_GRAFT_AQE_BROADCAST").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v))
     // Generic runtime-conf pass-through (same contract as
     // SpillProfile's) so operator-level A/B knobs read via spark.conf
     // (e.g. spark.graft.mart.factParts) can run under the EXACT bench
@@ -540,7 +522,7 @@ object Bench {
       val pr = q.probesMs.map(r3).mkString("[", ",", "]")
       s"""  "${q.name}": {"min_s": ${r3(q.min)}, "median_s": ${r3(q.median)}, "runs": ${q.runs}, "shuffle_write_mb": ${r3(q.shuffleWriteMb)}, "shuffle_read_mb": ${r3(q.shuffleReadMb)}, "spill_mb": ${r3(q.spillMb)}, "probe_ms": $pr}"""
     }.mkString(
-      s"""{\n  "_meta": {"round": "$roundTag"$roundEnvNote$confNote$ladderNote$heapNote$codecNote, "sf": "$sfDir", "cpus": $cpus, "init_partitions": $initPartitions, "action": "noop-write", "attempt_order": "round-robin", "index_build_s": ${r3(indexBuild)}, "prewarm_ok": $prewarmOk, "prewarm_phases_s": $prewarmPhasesJson, "cache_probe": $cacheProbeJson, "total_median_s": ${r3(totalMedian)}, "total_min_s": ${r3(totalMin)}, "n_queries": ${results.size}, "probe_floor_ms": ${r3(probeFloor)}, "probe_median_ms": ${r3(probeMedian)}, "probe_max_ms": ${r3(probeMax)}, "steal_probes": $stealProbes, "n_probes": ${allProbes.size}, "par_probe_ms": $parProbesJson, "mem_probe_ms": $memProbesJson, "mem_probe_spread": ${r3(memSpread)}, "bandwidth_class": "$bandwidthClass", "mem_probe_mb_per_thread": 48, "par_probe_threads": ${Runtime.getRuntime.availableProcessors()}, "attempts": $nAttempts, "errors": $errors, "reduced_sample": $reduced},\n""",
+      s"""{\n  "_meta": {"round": "$roundTag"$roundEnvNote$confNote$ladderNote$heapNote$codecNote, "sf": "$sfDir", "cpus": $cpus, "init_partitions": $cpus, "action": "noop-write", "attempt_order": "round-robin", "index_build_s": ${r3(indexBuild)}, "prewarm_ok": $prewarmOk, "prewarm_phases_s": $prewarmPhasesJson, "cache_probe": $cacheProbeJson, "total_median_s": ${r3(totalMedian)}, "total_min_s": ${r3(totalMin)}, "n_queries": ${results.size}, "probe_floor_ms": ${r3(probeFloor)}, "probe_median_ms": ${r3(probeMedian)}, "probe_max_ms": ${r3(probeMax)}, "steal_probes": $stealProbes, "n_probes": ${allProbes.size}, "par_probe_ms": $parProbesJson, "mem_probe_ms": $memProbesJson, "mem_probe_spread": ${r3(memSpread)}, "bandwidth_class": "$bandwidthClass", "mem_probe_mb_per_thread": 48, "par_probe_threads": ${Runtime.getRuntime.availableProcessors()}, "attempts": $nAttempts, "errors": $errors, "reduced_sample": $reduced},\n""",
       ",\n", "\n}\n")
     val sideBytes = side.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     java.nio.file.Files.write(java.nio.file.Paths.get(sidePath), sideBytes)

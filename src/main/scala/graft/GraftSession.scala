@@ -197,8 +197,8 @@ object GraftSession {
       // sort-merge join's streaming locality. Isolated same-window A/B
       // at sf10/local[32]: SMJ min 51.5 s / median 55.9 s vs BHJ
       // 58.1 s / 70.0 s (3 runs each, probe floors 70/75 ms, mem
-      // probes quiet; tools/run_bench.sh with SPARK_GRAFT_AQE_BROADCAST
-      // isolating the conf). Lesson recorded in SCALE.md: a measured
+      // probes quiet; tools/run_bench.sh with only the threshold
+      // changed). Lesson recorded in SCALE.md: a measured
       // broadcast is safe against OOM but not automatically faster —
       // raise the bound only per-plan, with hints, from an A/B.
 

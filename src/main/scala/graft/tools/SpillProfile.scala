@@ -60,10 +60,7 @@ object SpillProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Dev A/B knob for the AQE broadcast threshold experiment
-    // (GraftSession sets the production value; this overrides it).
-    val aqeBroadcast = sys.env.get("SPARK_GRAFT_AQE_BROADCAST")
-    val b0 = graft.GraftSession.configure(SparkSession.builder()
+    val spark = graft.GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toInt)
       .config("spark.sql.adaptive.enabled", "true")
@@ -71,8 +68,6 @@ object SpillProfile {
       // ...") at WARN so they pass the log filter during diagnosis.
       .config("spark.sql.adaptive.logLevel", "WARN")
       .config("spark.ui.enabled", "false"))
-    val spark = aqeBroadcast
-      .fold(b0)(v => b0.config("spark.sql.adaptive.autoBroadcastJoinThreshold", v))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Generic runtime-conf pass-through for A/B knobs the operators
