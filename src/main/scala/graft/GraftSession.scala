@@ -63,15 +63,15 @@ object GraftSession {
     * frozen r19-end classes, code-identical to the lz4 control) came
     * back 1,634.4 s — total sum-of-mins ABOVE the lz4 control (+2.6%)
     * and the zero-shuffle text-kernel control class +6–27%, outside
-    * the gate's ±5% band (`tools/r20_codec_confirm.sh`). The
+    * the gate's ±5% band. The
     * text-kernel drift also shows leg-to-leg CPU noise exceeds the
     * codec effect on this host, so the honest reading is "wash within
     * noise" — and the gate's else-branch is revert. The MECHANISM
     * stays real and measured: zstd exchanges cut summed shuffle bytes
     * 29% (60.4 → 42.6 GB, r19 pair), which is why disk-bound rungs
     * (sf100, where lz4 shuffle ENOSPC'd the jaccard leg in r18) and
-    * network-bound clusters should pin SPARK_GRAFT_CODEC=zstd — the
-    * sf100 chain scripts do. At sf0.1, the driver's bench rung, the
+    * network-bound clusters should pin SPARK_GRAFT_CODEC=zstd, as the
+    * sf100 leg does. At sf0.1, the driver's bench rung, the
     * codec is a wash (±1.2%) in either direction.
     */
   def DefaultCodec = "lz4"
