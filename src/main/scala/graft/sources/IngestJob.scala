@@ -1,5 +1,11 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.net.URI
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -41,14 +47,26 @@ final class IngestJob(spec: TableSpec) {
     * also where pandas-style per-cell leniency lives. Header names
     * still drive the by-name alignment, so reordered/extra/missing
     * columns behave identically to the inferring variant.
+    *
+    * One CSV read maps every file by the FIRST file's header, so a
+    * prefix whose files disagree on their headers is read per header:
+    * the files are grouped by their first line, each group is read and
+    * aligned on its own, and the groups are unioned. A prefix with one
+    * header stays a single read.
     */
   def extract(spark: SparkSession, bronzeRoot: String): DataFrame = {
-    val raw = spark.read
+    val reader = spark.read
       .option("header", true)
       .option("sep", ",")
       .option("mode", "PERMISSIVE")
-      .csv(s"$bronzeRoot/${spec.prefix}")
-    align(raw)
+    val prefix = s"$bronzeRoot/${spec.prefix}"
+    val byHeader = spark.read.text(prefix).inputFiles.toSeq
+      .map(f => new Path(new URI(f)).toString).sorted
+      .groupBy(IngestJob.firstLine(spark, _))
+    if (byHeader.size <= 1) align(reader.csv(prefix))
+    else byHeader.values.toSeq.sortBy(_.head)
+      .map(files => align(reader.csv(files: _*)))
+      .reduce(_ union _)
   }
 
   /** By-name alignment: every declared column selected (cast to its
@@ -96,6 +114,21 @@ final class IngestJob(spec: TableSpec) {
 
 object IngestJob {
   def apply(spec: TableSpec): IngestJob = new IngestJob(spec)
+
+  /** A file's first line (its CSV header), read through Hadoop's
+    * FileSystem and the codec its extension names, as Spark reads it;
+    * empty for an empty file.
+    */
+  private def firstLine(spark: SparkSession, file: String): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(file)
+    val raw = path.getFileSystem(conf).open(path)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(path))
+      .fold[InputStream](raw)(_.createInputStream(raw))
+    val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    try Option(reader.readLine()).fold("")(_.stripSuffix("\r"))
+    finally reader.close()
+  }
 
   /** Run all eight bronze→silver jobs (the whole reference b2s layer). */
   def runAll(spark: SparkSession, bronzeRoot: String, silverRoot: String): Unit =

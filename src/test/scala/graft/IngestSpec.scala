@@ -51,6 +51,26 @@ class IngestSpec extends SparkSpec {
     assert(!df.columns.contains("bonus_col"))
   }
 
+  test("mixed headers in one prefix: every file aligns by its own header") {
+    val bronze = tmpDir("bronze")
+    val d = s"$bronze/olist/customers"
+    val declared = OlistCatalog.customers.schema.fieldNames.toSeq
+    writeCsv(d, "a.csv", declared.mkString(","),
+      "c1,u1,01310,sao paulo,SP")
+    writeCsv(d, "b.csv", declared.reverse.mkString(","),
+      "RJ,rio de janeiro,20040,u2,c2")
+    writeCsv(d, "c.csv", (declared :+ "ingest_note").mkString(","),
+      "c3,u3,30110,belo horizonte,MG,late")
+    val df = IngestJob(OlistCatalog.customers).extract(spark, bronze)
+    assert(df.columns.toSeq == declared)
+    val rows = df.collect().map(r => declared.map(r.getAs[String]))
+      .sortBy(_.head).toSeq
+    assert(rows == Seq(
+      Seq("c1", "u1", "01310", "sao paulo", "SP"),
+      Seq("c2", "u2", "20040", "rio de janeiro", "RJ"),
+      Seq("c3", "u3", "30110", "belo horizonte", "MG")))
+  }
+
   test("align is source-agnostic: JSON-lines bronze aligns to the same silver schema") {
     val bronze = tmpDir("bronze_json")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(bronze))
