@@ -135,6 +135,26 @@ object GraftSession {
     sys.props.get(sysprop).orElse(sys.env.get(env)).map(_.trim)
       .filter(_.nonEmpty)
 
+  /** Set the runtime SQL confs listed in `SPARK_GRAFT_CONF="k1=v1;k2=v2"`
+    * on a built session: how Bench, SpillProfile and StreamingBench
+    * take any knob the operators read through `spark.conf`.
+    */
+  def applyEnvConf(spark: SparkSession): Unit =
+    parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+      .foreach { case (k, v) => spark.conf.set(k, v) }
+
+  /** `k1=v1;k2=v2` → pairs; an entry without `=` or with an empty key
+    * throws, naming the entry.
+    */
+  private[graft] def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
+      }
+    }
+
   /** Effective io codec for sessions built through [[configure]];
     * throws with the conf key and allowed values on a typo (the
     * index-ladder knob validation pattern).

@@ -70,15 +70,7 @@ object SpillProfile {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Generic runtime-conf pass-through for A/B knobs the operators
-    // read via spark.conf (e.g. spark.graft.mart.factParts):
-    //   SPARK_GRAFT_CONF="k1=v1;k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").foreach { kvs =>
-      kvs.split(';').filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
+    graft.GraftSession.applyEnvConf(spark)
     @volatile var captured: Option[QueryExecution] = None
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =

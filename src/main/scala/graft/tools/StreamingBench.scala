@@ -62,13 +62,7 @@ object StreamingBench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def enabled(name: String): Boolean = only.forall(_.contains(name))
     val confStr = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-    confStr.split(';').map(_.trim).filter(_.nonEmpty).foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_CONF entry must be key=value; got '$kv'")
-      }
-    }
+    graft.GraftSession.applyEnvConf(spark)
     val confNote =
       if (confStr.isEmpty) ""
       else s""""conf":"${confStr.replace("\\", "\\\\").replace("\"", "\\\"")}","""
