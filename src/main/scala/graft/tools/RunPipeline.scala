@@ -53,7 +53,7 @@ object RunPipeline {
       // no-layout form for no-warehouse targets or tiny corpora.
       // Remaining positionals are the optional JDBC target.
       val (flags, rest) = rest0.partition(isLayoutFlag)
-      val buckets = bucketsOf(flags)
+      val buckets = bucketsOrExit(flags)
       if (rest.length != 0 && rest.length != 2) { usage(); sys.exit(2) }
       withSpark { s =>
         val jdbc = rest match {
@@ -87,7 +87,7 @@ object RunPipeline {
       // `--plain-silver` keeps the no-layout form for A/B.
       val (flags, rest) = rest0.partition(isLayoutFlag)
       if (rest.nonEmpty) { usage(); sys.exit(2) }
-      val buckets = bucketsOf(flags)
+      val buckets = bucketsOrExit(flags)
       withSpark { s =>
         val tR0 = System.nanoTime()
         val mart = buckets match {
@@ -136,16 +136,26 @@ object RunPipeline {
     * [[operators.VendasMart.SilverBuckets]] unless explicitly widened
     * (`--bucketed-silver=N`) or disabled (`--plain-silver`, or
     * `--bucketed-silver=0` so orchestration templates can pass the
-    * flag unconditionally and toggle via a variable). Last flag wins.
+    * flag unconditionally and toggle via a variable). Last flag wins;
+    * a width that is not an integer throws, naming the flag.
     */
   private[graft] def bucketsOf(flags: List[String]): Option[Int] =
     flags.lastOption match {
       case Some("--plain-silver") => None
       case Some(f) =>
-        val n = f.split('=').lift(1).map(_.toInt)
-          .getOrElse(operators.VendasMart.SilverBuckets)
+        val n = f.split("=", 2).lift(1).map { v =>
+          v.toIntOption.getOrElse(throw new IllegalArgumentException(
+            s"--bucketed-silver expects an integer width; got '$v'"))
+        }.getOrElse(operators.VendasMart.SilverBuckets)
         if (n > 0) Some(n) else None
       case None => Some(operators.VendasMart.SilverBuckets)
+    }
+
+  private def bucketsOrExit(flags: List[String]): Option[Int] =
+    try bucketsOf(flags)
+    catch {
+      case e: IllegalArgumentException =>
+        System.err.println(e.getMessage); usage(); sys.exit(2)
     }
 
   private def usage(): Unit =

@@ -166,6 +166,11 @@ class OlistPipelineSpec extends SparkSpec {
     // Last flag wins, and bare --bucketed-silver keeps the default width.
     assert(bucketsOf(List("--plain-silver", "--bucketed-silver"))
       .contains(graft.operators.VendasMart.SilverBuckets))
+    // A width that is not an integer is rejected, naming the flag.
+    for (bad <- Seq("--bucketed-silver=abc", "--bucketed-silver=")) {
+      val e = intercept[IllegalArgumentException](bucketsOf(List(bad)))
+      assert(e.getMessage.contains("--bucketed-silver"))
+    }
     assert(isLayoutFlag("--plain-silver") && isLayoutFlag("--bucketed-silver=4"))
     assert(!isLayoutFlag("jdbc:derby:whatever"))
   }
