@@ -287,7 +287,7 @@ object Bench {
           operators.VendasMart.ensureBucketedSilver(spark, sfDir)
           prewarmPhases :+= ("bucketed_silver" -> (System.nanoTime() - tB0) / 1e9)
         }
-        // The mart's join-strategy ladders read memoized statistics
+        // The mart's BuildSide hints read memoized statistics
         // (approx-distinct user count for the pivot, metadata counts
         // for part/customer) — one scan each, amortized across every
         // mart build exactly like the index frames, so charge them

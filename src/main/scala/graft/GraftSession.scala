@@ -105,12 +105,12 @@ object GraftSession {
     * key — the stream-side sort is pure overhead (11.8 / 8.1 / 3.4 GB
     * of sort spill at sf30) exactly like the r18 join_inner case, but
     * unlike the dim joins there is no metadata-cheap count to drive
-    * [[graft.operators.VendasMart.dimLadderHint]]. AQE's conversion
+    * [[graft.operators.BuildSide]]. AQE's conversion
     * decides from MEASURED per-partition build sizes after the
     * exchange: every build partition must be ≤ this threshold
     * (post-coalescing), so the rule self-disables where a build side
     * is genuinely large or skewed and the sort's spill robustness is
-    * the right tool — the scale-adaptive form of the counted ladder.
+    * the right tool — the scale-adaptive form of the counted rule.
     * Spark requires the threshold ≥ advisoryPartitionSizeInBytes
     * (64 MB default) for the rule to fire at all; `0` disables.
     * Default decided by the r20 sf30 full-sweep pair
@@ -201,14 +201,14 @@ object GraftSession {
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // AQE SMJ→SHJ conversion bound (see ShjThresholdKey scaladoc):
       // runtime-measured, per-partition-gated join selection for the
-      // aggregated-build-side joins no counted ladder can reach.
+      // aggregated-build-side joins no counted bound can reach.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sessionShjThreshold)
       // The AQE broadcast threshold stays at Spark's default. A raised
       // 48 MB bound shipped briefly to fix the sf10 mart pivot spill,
       // but the mart now pins its pivot and dimension joins with
       // explicit broadcast/SHUFFLE_HASH hints sized from counted
-      // bounds (VendasMart), so the global raise had exactly one
+      // bounds (BuildSide), so the global raise had exactly one
       // remaining effect in the whole 83-query registry: it flipped a
       // ~40 MB measured stage inside q_dedup_jaccard's prefix-filter
       // join to a broadcast-hash join (shuffle 15,059→14,574 MB) that

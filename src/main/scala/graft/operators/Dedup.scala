@@ -715,18 +715,14 @@ object Dedup {
     */
   def ngramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     val nDocs = documentCount(spark, sfDir)
-    // The two thresholds coincide today (both 100 k), so on the prefix
-    // rung hashVerify is always true; they stay separate knobs because
-    // they bound different regimes (plain-join spill onset vs the
-    // verify frame outgrowing broadcast/cheap-sort). On the prefix
-    // rung the Jaccard denominator rides inside the index (`n` in
-    // [[rankedOf]]); the plain rung derives it from the index with one
-    // tiny aggregate — the index holds one row per DISTINCT gram per
-    // doc (shingleSet semantics), so count per doc_id IS
-    // |shingleSet(text, 3)|: no second text scan either way.
+    // On the prefix rung the Jaccard denominator rides inside the
+    // index (`n` in [[rankedOf]]); the plain rung derives it from the
+    // index with one tiny aggregate — the index holds one row per
+    // DISTINCT gram per doc (shingleSet semantics), so count per doc_id
+    // IS |shingleSet(text, 3)|: no second text scan either way.
     if (nDocs >= PrefixVerifyMinDocs)
       jaccardFromRanked(jaccardPrefixIndex(spark, sfDir),
-        hashVerify = nDocs >= VerifyHashJoinMinDocs,
+        hashVerify = true,
         docsetsIndex = Some(jaccardDocsets(spark, sfDir)))
     else {
       val ex = shingleIndex(spark, sfDir)
@@ -778,54 +774,11 @@ object Dedup {
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Corpus size past which the exact verify forces SHUFFLE_HASH on
-    * its array joins (same occupancy-ladder discipline as
-    * [[simHashBandBits]]). Below it the participant gram-array frame
-    * sits at-or-under AQE's broadcast threshold (~25 k docs × ~0.4 KB
-    * ≈ 10 MB) or sorts trivially, and the hint would only FORBID the
-    * broadcast AQE would otherwise pick (measured +1.9 s on the 5 k-doc
-    * corpus). Above it the frame can neither broadcast nor sort
-    * cheaply — an un-hinted SMJ sorts the candidate×array stream,
-    * the measured multi-GB spill driver at 150 k docs+.
-    */
-  val VerifyHashJoinMinDocs: Long = 100000L
-
   /** Measured docset-index bytes per doc (441 B/doc at sf30 —
     * SCALE.md r15 footprint table; 480 B with headroom): one byte-packed
     * gram array (~0.43 KB) + doc_id + n per row.
     */
-  private val DocsetRowBytes = 480L
-
-  /** Per-partition byte budget for the verify SHJ's BUILD side. The
-    * first live sf50 rung (r16) found the cliff this bounds: a
-    * LongToUnsafeRowMap grows its page by doubling, so a build
-    * partition just past 32 MB requests one 64 MB page — and when the
-    * dedup index set fully occupies the protected storage region,
-    * execution's guaranteed floor is (heap−300 MB)×0.6×0.5/32 tasks
-    * ≈ 36 MB, so every build task past that line dies with "Can't
-    * acquire 67108864 bytes" (bench_sf50_subset_shjfail_r16.json, 75
-    * task failures, both attempts). 24 MB/partition caps the growth
-    * request at 32 MB — under the floor with margin — and keeps every
-    * rung ≤ sf30 at the session default width (1.5 M docs × 480 B /
-    * 24 MB = 29 < 32), so the committed sf30 record is unchanged.
-    */
-  private val VerifyBuildPartitionBytes = 24L << 20
-
-  /** Counted width for the docsets index (the verify SHJ's build
-    * side): enough partitions that each build fits
-    * [[VerifyBuildPartitionBytes]], never below the session default,
-    * capped at 4096 (a corpus needing more should raise the session
-    * default — its cluster is sized differently anyway).
-    */
-  private[graft] def verifyBuildParts(spark: SparkSession, nDocs: Long): Int = {
-    val default = spark.sessionState.conf.numShufflePartitions
-    val need = (nDocs * DocsetRowBytes + VerifyBuildPartitionBytes - 1) /
-      VerifyBuildPartitionBytes
-    // Cap applies to the counted need only, so the documented "never
-    // below the session default" floor holds even when the session
-    // default itself exceeds the cap.
-    math.max(default.toLong, math.min(4096L, need)).toInt
-  }
+  private[graft] val DocsetRowBytes = 480L
 
   private val prefixCache = newCache()
 
@@ -938,7 +891,7 @@ object Dedup {
     * budget. At cluster scale this is the third table of the dedup
     * index family (postings, prefix ranks, arrays).
     *
-    * Built at [[verifyBuildParts]]' counted width (r16): the verify
+    * Built at [[BuildSide.partitions]]' counted width (r16): the verify
     * SHJ builds its hash relation from these cached blocks AS
     * PARTITIONED, so the width that keeps each build under the hash
     * map's 64 MB growth cliff must be baked in HERE — at index-build
@@ -957,7 +910,8 @@ object Dedup {
     memoized(docsetsCache, spark, sfDir, label = "jaccard_docsets",
         readsPerSweep = 2.0) {
       val d = docsetsOf(jaccardPrefixIndex(spark, sfDir))
-      val parts = verifyBuildParts(spark, documentCount(spark, sfDir))
+      val parts = BuildSide.partitions(spark,
+        documentCount(spark, sfDir) * DocsetRowBytes)
       if (parts > spark.sessionState.conf.numShufflePartitions)
         d.repartition(parts, col("doc_id"))
       else d
@@ -1072,9 +1026,10 @@ object Dedup {
     // join would SORT that array-laden stream (measured as GBs of sort
     // spill at 150 k docs+). A shuffled hash join builds on the slim
     // docsets side (the hint names it) and streams the heavy side
-    // unsorted; same exchanges, zero sort. Hinted only past
-    // [[VerifyHashJoinMinDocs]]: on a small corpus the hint forbids
-    // the broadcast AQE would pick and costs more than it saves.
+    // unsorted; same exchanges, zero sort. Hinted only on the prefix
+    // rung (past [[PrefixVerifyMinDocs]]): on a small corpus the hint
+    // forbids the broadcast AQE would pick (~25 k docs × ~0.4 KB ≈
+    // 10 MB; measured +1.9 s on the 5 k-doc corpus).
     def verifySide(as: String, shAs: String, nAs: String) = {
       val d = docsets.select(col("doc_id").as(as), col("sh").as(shAs), col("n").as(nAs))
       if (hashVerify) d.hint("SHUFFLE_HASH") else d

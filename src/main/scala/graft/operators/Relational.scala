@@ -109,23 +109,21 @@ object Relational {
         count(lit(1)).as("n_rows"))
       .orderBy("l_returnflag")
 
-  /** Inner join + aggregate. part is the dimension side, and it walks
-    * the counted broadcast → shuffled-hash → sort-merge ladder
-    * ([[VendasMart.dimLadderHint]], r18) instead of Catalyst's static
+  /** Inner join + aggregate. part is the dimension side, sized by its
+    * counted bytes ([[BuildSide]], r18) instead of Catalyst's static
     * file-size estimate: past the broadcast budget the static plan
     * falls to a SortMergeJoin whose cost is the SORT of the enormous
     * fact side (sf30: 7.1 GB spill, the entire query's spill budget,
     * attributed by SpillProfile), while the dim side hashes per
     * partition at a few MB. The shuffled-hash form measured 12.1 vs
     * 14.6 s min at sf30 with spill → 0 and identical shuffle volume
-    * (`bench_sf30_joinInnerAB_{smj,shj}_r18.json`). At 100 TB the
-    * same ladder degrades to SMJ only for a genuinely fact-sized
-    * right side, where sort-spill robustness is the right tool.
+    * (`bench_sf30_joinInnerAB_{smj,shj}_r18.json`).
     */
   def joinInner(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
-    val p = VendasMart.dimLadderHint(spark, sfDir, "part",
-      Tables.part(spark, sfDir).filter(col("p_size") >= 25))
+    val p = BuildSide.hint(spark,
+      Tables.part(spark, sfDir).filter(col("p_size") >= 25),
+      VendasMart.dimBytes(spark, sfDir, "part"))
     // Exact decimal revenue — see aggPricing for why money sums must
     // not ride on order-dependent double accumulation.
     val revenue = col("l_extendedprice").cast("decimal(12,2)") *
@@ -156,18 +154,25 @@ object Relational {
     * map-side partial aggregate (the fact table is clustered by
     * orderkey, so per-task key sets are ~rows/4 — a small hash, no
     * sort fallback) that shrinks the exchange 4×, and the reduced
-    * build side then walks the counted ladder
-    * ([[VendasMart.dimLadderHint]] on the orders bound — distinct
-    * lineitem orderkeys ⊆ orders): broadcast under 512 MB,
-    * shuffled-hash to 8 GB (keys-only LongHashedRelation, no sorts on
-    * either side), SMJ only once the key set is genuinely fact-sized.
+    * build side is then sized by [[BuildSide]] on the orders bound
+    * (distinct lineitem orderkeys ⊆ orders): broadcast under 512 MB,
+    * shuffled-hash while each partition's keys fit 24 MB, sort-merge
+    * past that (sf30's 45 M keys over 32 partitions: the r19 control).
     * Anti-join semantics are untouched by the reduction — `===` never
     * matches NULL and duplicate keys add nothing to existence.
     */
-  def joinAnti(spark: SparkSession, sfDir: String): DataFrame = {
+  def joinAnti(spark: SparkSession, sfDir: String): DataFrame =
+    joinAntiSized(spark, sfDir, VendasMart.dimBytes(spark, sfDir, "orders"))
+
+  /** [[joinAnti]] with its build side sized as `buildBytes` (the spec
+    * suite forces each [[BuildSide]] rung through it).
+    */
+  private[graft] def joinAntiSized(spark: SparkSession, sfDir: String,
+      buildBytes: Long): DataFrame = {
     val o = Tables.orders(spark, sfDir)
-    val liKeys = VendasMart.dimLadderHint(spark, sfDir, "orders",
-      Tables.lineitem(spark, sfDir).select(col("l_orderkey")).distinct())
+    val liKeys = BuildSide.hint(spark,
+      Tables.lineitem(spark, sfDir).select(col("l_orderkey")).distinct(),
+      buildBytes)
     o.join(liKeys, o("o_orderkey") === liKeys("l_orderkey"), "left_anti")
       .select(col("o_orderkey"), col("o_orderstatus"), round(col("o_totalprice"), 4).as("total"))
   }
@@ -175,20 +180,26 @@ object Relational {
   /** Left join + null-fill, the F5 pattern (`s2g/vendas.py:114-120`):
     * orders with no items get 0 instead of NULL.
     */
-  def joinLeftFill(spark: SparkSession, sfDir: String): DataFrame = {
+  def joinLeftFill(spark: SparkSession, sfDir: String): DataFrame =
+    joinLeftFillSized(spark, sfDir, VendasMart.dimBytes(spark, sfDir, "orders"))
+
+  /** [[joinLeftFill]] with its build side sized as `buildBytes`. */
+  private[graft] def joinLeftFillSized(spark: SparkSession, sfDir: String,
+      buildBytes: Long): DataFrame = {
     val o = Tables.orders(spark, sfDir)
     // The aggregate emits at most one row per orderkey, so the build
-    // side is bounded by the counted orders ladder (r20, guide §3 —
-    // same rung logic as [[joinAnti]]): a broadcast/shuffled-hash
+    // side is sized by [[BuildSide]] on the orders bound (r20, guide
+    // §3 — same rule as [[joinAnti]]): a broadcast/shuffled-hash
     // right side deletes BOTH SMJ sorts (13.99 GB of the query's sf30
     // spill; the aggregate's own partial phase keeps its 4× map-side
     // reduction either way). LEFT-outer probe with BuildRight is the
     // hash-join shape Spark supports natively; null-fill semantics are
     // join-strategy-independent.
-    val agg = VendasMart.dimLadderHint(spark, sfDir, "orders",
+    val agg = BuildSide.hint(spark,
       Tables.lineitem(spark, sfDir)
         .groupBy("l_orderkey")
-        .agg(sum("l_extendedprice").as("items_total_raw"), count(lit(1)).as("n_raw")))
+        .agg(sum("l_extendedprice").as("items_total_raw"), count(lit(1)).as("n_raw")),
+      buildBytes)
     o.join(agg, o("o_orderkey") === agg("l_orderkey"), "left")
       .select(col("o_orderkey"),
         round(coalesce(col("items_total_raw"), lit(0.0)), 4).as("items_total"),

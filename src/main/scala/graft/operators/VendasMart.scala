@@ -22,9 +22,9 @@ import graft.Tables
   *     key (map-side combine), shuffled once on `user_id`; the explicit
   *     value list pins the output schema so no extra distinct-values job
   *     runs (Spark would otherwise launch one to discover pivot columns).
-  *   - All joins are declarative equi-joins: Catalyst/AQE picks
-  *     broadcast-hash for dimension sides under the threshold and
-  *     sort-merge beyond it; nothing is hand-scheduled.
+  *   - All joins are declarative equi-joins; the dims and the pivot
+  *     carry a [[BuildSide]] hint from their counted size, the fact
+  *     join is left to Catalyst/AQE.
   *   - Only referenced columns are selected, so the parquet scans read
   *     5/11, 3/6, 2/6 and 3/5 columns respectively (visible as ReadSchema
   *     in `.explain("formatted")`).
@@ -312,7 +312,7 @@ object VendasMart {
     finally out.close()
   }
 
-  /** Measured pivot-side join-strategy ladder (r12, closing the sf10
+  /** The pivot side of the mart's last join (r12, closing the sf10
     * spill diagnosis). The mart's one residual at-scale spill was the
     * SORT of the 60 M-row fact frame feeding a sort-merge join whose
     * OTHER side is the events pivot — 150 k rows / 12 MB shuffled at
@@ -320,96 +320,57 @@ object VendasMart {
     * attribution in SCALE.md). AQE cannot rescue this join by itself:
     * its runtime-size broadcast threshold applies only to plans whose
     * stats are marked runtime, and that flag does not survive
-    * propagation through the final pivot Aggregate sitting between
-    * the materialized shuffle stage and the join — measured A/B at
-    * 48 MB and 200 MB adaptive thresholds left the SMJ in place while
-    * the stage read 34.2 MB. So the library carries the decision where
-    * the knowledge lives, the same occupancy-ladder discipline as
-    * `Dedup.simHashBandBits`: the pivot frame is one fixed-width row
-    * per active user (~[[PivotRowBytes]]), so a one-scan
-    * `approx_count_distinct` over `events.user_id` (memoized per
-    * (session, corpus); charged to index_build by Bench's prewarm)
-    * bounds it exactly, and the mart broadcasts the pivot side iff
-    * that bound fits [[PivotBroadcastMaxBytes]]. Past the bound — a
-    * corpus with hundreds of millions of active users — the hint is
-    * withheld and the join degrades to the shuffled form by design,
-    * with the fact-side sort as the documented price.
+    * propagation through the final pivot Aggregate (measured A/B at
+    * 48 MB and 200 MB adaptive thresholds left the SMJ in place). The
+    * pivot frame is one fixed-width row per active user
+    * (~[[PivotRowBytes]]), so a one-scan `approx_count_distinct` over
+    * `events.user_id` bounds it, and [[BuildSide]] sizes the join.
     */
   val PivotRowBytes: Long = 64L
-  val PivotBroadcastMaxBytes: Long = 256L << 20
 
-  private val userEstCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  def pivotUserEstimate(spark: SparkSession, sfDir: String): Long = {
-    userEstCache.keySet.foreach { k =>
-      if (k._1.sparkContext.isStopped) userEstCache.remove(k)
-    }
-    userEstCache.getOrElseUpdate((spark, sfDir),
-      Tables.events(spark, sfDir)
-        .agg(approx_count_distinct("user_id")).head().getLong(0))
-  }
-
-  /** The dimension-side twin of the pivot ladder (r12, closing the
-    * sf30 frontier the pivot fix exposed). Catalyst's STATIC broadcast
-    * decision for part/customer runs on a pruned-size estimate
-    * (file bytes × pruned-column ratio) against the 10 MB default —
-    * which holds through sf10 but flips customer to a sort-merge join
-    * at sf30 (est ~14 MB), re-introducing the exact pathology the
-    * pivot ladder removed: a re-shuffle + sort of the WIDE fact frame
-    * against a dimension that measures a few hundred MB as a hash
-    * relation. The library again carries the decision where the
-    * knowledge lives: these dims are one fixed-width row per key
-    * ([[DimRowBytes]], calibrated against the measured sf10 broadcast
-    * — customer's BroadcastExchange dataSz 146.2 MB / 1.5 M rows
-    * ≈ 97 B/row), a memoized metadata-only count bounds the relation
-    * exactly, and the dim broadcasts iff the bound fits
-    * [[DimBroadcastMaxBytes]]. The budget is wider than the pivot's
-    * (512 MB vs 256 MB) because a plain dimension's bound is a COUNT,
-    * not an approx-distinct estimate — no sketch error margin to
-    * absorb.
-    *
-    * Past the broadcast budget the ladder does NOT fall straight to a
-    * sort-merge join: a dimension that outgrows per-executor broadcast
-    * but still hashes per PARTITION gets a `SHUFFLE_HASH` hint
-    * ([[DimShuffleHashMaxBytes]]). The asymmetry is the whole point —
-    * SMJ's cost at this shape is the SORT of the enormous fact frame
-    * (the sf10 spill diagnosis all over again), while shuffled-hash
-    * pays the same exchange but builds its hash on the dimension side
-    * only: at sf30, part is 6 M rows ≈ 576 MB — over broadcast, yet
-    * ~18 MB per shuffle partition as a build side, trivially
-    * memory-resident. The budget is per-PARTITION build feasibility
-    * (bytes / shuffle partitions ≲ execution-memory share, with AQE
-    * free to split further on a real cluster); only a dimension so
-    * large that even its partitioned hash build would thrash — i.e.
-    * genuinely fact-sized, where sort-spill robustness is the right
-    * tool — falls through to SMJ. At 100 TB: customer in the billions
-    * (hundreds of GB) → SMJ by design; customer in the tens of
-    * millions (a few GB) → SHJ; anything under half a GB → broadcast.
+  /** The mart dims are one fixed-width row per key, calibrated against
+    * the measured sf10 broadcast: customer's BroadcastExchange dataSz
+    * 146.2 MB / 1.5 M rows ≈ 97 B/row. Orders uses the same width as
+    * the bound of the orderkey-grouped build sides (see [[dimCount]]).
     */
   val DimRowBytes: Long = 96L
-  val DimBroadcastMaxBytes: Long = 512L << 20
-  val DimShuffleHashMaxBytes: Long = 8L << 30
 
-  private val dimCountCache =
+  /** Join-size statistics memoized per (session, corpus, stat) and
+    * charged to index_build by Bench's prewarm; entries of stopped
+    * sessions are swept on every read.
+    */
+  private val joinStats =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Long]
-  def dimCount(spark: SparkSession, sfDir: String, dim: String): Long = {
-    dimCountCache.keySet.foreach { k =>
-      if (k._1.sparkContext.isStopped) dimCountCache.remove(k)
+  private def joinStat(spark: SparkSession, sfDir: String, stat: String)(
+      compute: => Long): Long = {
+    joinStats.keySet.foreach { k =>
+      if (k._1.sparkContext.isStopped) joinStats.remove(k)
     }
-    dimCountCache.getOrElseUpdate((spark, sfDir, dim), dim match {
+    joinStats.getOrElseUpdate((spark, sfDir, stat), compute)
+  }
+
+  def pivotUserEstimate(spark: SparkSession, sfDir: String): Long =
+    joinStat(spark, sfDir, "users")(Tables.events(spark, sfDir)
+      .agg(approx_count_distinct("user_id")).head().getLong(0))
+
+  /** count() over parquet is a footer-statistics job: no data pages are
+    * read.
+    */
+  def dimCount(spark: SparkSession, sfDir: String, dim: String): Long =
+    joinStat(spark, sfDir, dim)(dim match {
       case "part"     => Tables.part(spark, sfDir).count()
       case "customer" => Tables.customer(spark, sfDir).count()
       // Not a dimension, but the same counted-bound role (r20): orders'
       // row count bounds the BUILD side of the orderkey-grouped joins
       // (q_join_left_fill's aggregate, q_join_anti's distinct keys —
-      // both emit at most one row per orderkey), so the SHJ-vs-SMJ
-      // rung of the ladder can be decided from a metadata-cheap count
-      // exactly like part/customer. count() over parquet is a
-      // footer-statistics job — no data pages are read.
+      // both emit at most one row per orderkey).
       case "orders"   => Tables.orders(spark, sfDir).count()
       case other => throw new IllegalArgumentException(s"unknown dim: $other")
     })
-  }
+
+  /** Counted build bytes of `dim`, the input of [[BuildSide.hint]]. */
+  def dimBytes(spark: SparkSession, sfDir: String, dim: String): Long =
+    dimCount(spark, sfDir, dim) * DimRowBytes
 
   /** Force-materialize the mart's join-strategy statistics (pivot user
     * estimate + dim counts) so Bench's prewarm charges them to
@@ -421,59 +382,15 @@ object VendasMart {
     dimCount(spark, sfDir, "customer")
   }
 
-  /** The counted dim ladder as a reusable building block (r18): any
-    * big-fact ⋈ dimension join in the registry walks broadcast →
-    * shuffled-hash → sort-merge on the counted bound, not Catalyst's
-    * static file-size estimate. Extracted from the mart when the
-    * q_join_inner SpillProfile walk attributed its entire 7.1 GB sf30
-    * spill to the SORT of the 180M-row fact side feeding a
-    * SortMergeJoin whose dim side was ~100 MB — the exact pathology
-    * the mart's ladder already removed; the A/B
-    * (`bench_sf30_joinInnerAB_{smj,shj}_r18.json`) measured the
-    * shuffled-hash form at 12.1 vs 14.6 s min with spill 7.1 GB → 0
-    * at identical shuffle volume. `spark.graft.mart.dimBroadcast`
-    * ("on"/"off"/"shj") pins a regime for A/Bs.
-    */
-  def dimLadderHint(spark: SparkSession, sfDir: String, dim: String,
-      df: DataFrame): DataFrame =
-    spark.conf.getOption("spark.graft.mart.dimBroadcast")
-      .getOrElse("auto") match {
-      case "on"  => broadcast(df)
-      case "off" => df
-      case "shj" => df.hint("SHUFFLE_HASH")
-      case _ =>
-        val bytes = dimCount(spark, sfDir, dim) * DimRowBytes
-        if (bytes <= DimBroadcastMaxBytes) broadcast(df)
-        else if (bytes <= DimShuffleHashMaxBytes) df.hint("SHUFFLE_HASH")
-        else df
-    }
-
   private def martFrom(spark: SparkSession, sfDir: String,
       li: DataFrame, ord: DataFrame): DataFrame = {
-    // Dim ladder (see [[DimRowBytes]]): "auto" walks broadcast →
-    // shuffled-hash → sort-merge on the counted bound; "on"/"off"/
-    // "shj" pin a regime for A/Bs.
-    def dimLadder(dim: String, df: DataFrame): DataFrame =
-      dimLadderHint(spark, sfDir, dim, df)
-    val prt = dimLadder("part", Tables.part(spark, sfDir)
-      .select("p_partkey", "p_type"))
-    val cst = dimLadder("customer", Tables.customer(spark, sfDir)
-      .select("c_custkey", "c_mktsegment", "c_nationkey"))
-    val evpRaw = eventsPivot(spark, sfDir)
-    // Session conf for the ladder, mirroring Spark's own tuning-conf
-    // idiom: "auto" (default) applies the measured user-count bound
-    // above; "on"/"off" pin the regime for controlled A/Bs (the r12
-    // sf10 regime legs) or for clusters whose memory envelope differs
-    // from the bound's assumptions.
-    val evp = spark.conf.getOption("spark.graft.mart.pivotBroadcast")
-      .getOrElse("auto") match {
-      case "on"  => broadcast(evpRaw)
-      case "off" => evpRaw
-      case _ =>
-        if (pivotUserEstimate(spark, sfDir) * PivotRowBytes <= PivotBroadcastMaxBytes)
-          broadcast(evpRaw)
-        else evpRaw
-    }
+    val prt = BuildSide.hint(spark, Tables.part(spark, sfDir)
+      .select("p_partkey", "p_type"), dimBytes(spark, sfDir, "part"))
+    val cst = BuildSide.hint(spark, Tables.customer(spark, sfDir)
+      .select("c_custkey", "c_mktsegment", "c_nationkey"),
+      dimBytes(spark, sfDir, "customer"))
+    val evp = BuildSide.hint(spark, eventsPivot(spark, sfDir),
+      pivotUserEstimate(spark, sfDir) * PivotRowBytes)
 
     li
       .join(ord, li("l_orderkey") === ord("o_orderkey"), "left")

@@ -1131,32 +1131,6 @@ class OperatorSpec extends SparkSpec {
     assert(res.size == 3)  // corpus rows never appear in the decision
   }
 
-  test("verify-build width: default at or below sf30 scale, counted past the 24MB/partition cliff") {
-    // The sf50 SHJ build failure (r16): a build partition past 32 MB
-    // requests one 64 MB hash-map page and dies under a fully-occupied
-    // protected storage region. The counted width must (a) leave every
-    // committed rung <= sf30 on the session default — 1.5 M docs at
-    // 480 B/doc is 29 needed partitions, under the 32 default — so the
-    // sf30 record stays byte-identical; (b) grow linearly past it
-    // (2.5 M docs at sf50 -> 48); (c) cap at 4096.
-    // The spec session runs 4 shuffle partitions, so the "stays at the
-    // harness default" branch is pinned arithmetically: 1.5 M docs
-    // need ceil(720e6 / 24 MiB) = 29 partitions, under the bench
-    // harness's 32 — and the max() keeps any session's own default as
-    // the floor (here: max(4, 29) = 29).
-    assert(Dedup.verifyBuildParts(spark, 1500000L) == 29)
-    assert(29 < 32) // the sf30 bench plan stays on the session default
-    assert(Dedup.verifyBuildParts(spark, 2500000L) == 48)
-    assert(Dedup.verifyBuildParts(spark, 100L) ==
-      spark.sessionState.conf.numShufflePartitions) // tiny corpus: default
-    assert(Dedup.verifyBuildParts(spark, 1000000000L) == 4096)
-    // A session default ABOVE the cap is itself the floor (the r16
-    // advice fix: the cap applies to the counted need only).
-    val big = spark.newSession()
-    big.conf.set("spark.sql.shuffle.partitions", "8192")
-    assert(Dedup.verifyBuildParts(big, 100L) == 8192)
-  }
-
   test("index residency priority: demote fewest-reads-first, larger-first among equals") {
     // The r17 lever's decision kernel: demoting frees `bytes` and
     // costs `reads × bytes` of disk re-reads per sweep, so cost per
