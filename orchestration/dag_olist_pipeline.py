@@ -50,11 +50,13 @@ with DAG(
             # since r18 (wins at every measured rung; the one-time
             # bucket+sort of the two order_id fact tables makes every
             # gold rebuild's fact join exchange-free,
-            # OlistVendas.bucketedSilver). Width here mirrors the code
-            # default (VendasMart.SilverBuckets = 32); set the
-            # `silver_buckets` Airflow Variable to widen, or 0 to fall
-            # back to the plain no-layout form.
-            "--bucketed-silver={{ var.value.get('silver_buckets', '32') }}",
+            # OlistVendas.bucketedSilver). Bare, the flag buckets at
+            # the Spark job's shuffle width (its cores unless
+            # spark.sql.shuffle.partitions is set); set the
+            # `silver_buckets` Airflow Variable to pin a width, or 0 to
+            # fall back to the plain no-layout form.
+            "{% set w = var.value.get('silver_buckets', '') %}"
+            "--bucketed-silver{{ '=' ~ w if w else '' }}",
             "{{ var.value.mysql_jdbc_url }}", "TB_VENDAS",
         ],
         conf=S3A_CONF,

@@ -113,7 +113,7 @@ object VendasMart {
     * catalog entry (see [[bucketedSilver]]). Default-database managed
     * tables live at `<warehouse.dir>/<name lowercase>`.
     */
-  private def clearStaleLocation(spark: SparkSession, table: String): Unit =
+  private[graft] def clearStaleLocation(spark: SparkSession, table: String): Unit =
     if (!spark.catalog.tableExists(table)) dropLocation(spark, table)
 
   /** Unconditionally delete a table's default warehouse location —
@@ -137,18 +137,24 @@ object VendasMart {
       ordTable: String = "graft_silver_orders_b"): DataFrame =
     martFrom(spark, sfDir, spark.table(liTable), spark.table(ordTable))
 
-  /** Default bucket count for [[ensureBucketedSilver]]. 32 matches the
-    * local harness's cores — a bucketed join runs one task per bucket,
-    * so fewer buckets than cores idles the difference in every
-    * downstream mart build (measured: 16 buckets on 32 cores gave the
-    * bucketed mart no wall-clock win at sf10 despite the elided
-    * exchange). A real deployment sizes it to executors × target file
-    * size, the same knob as any warehouse bucketing DDL.
+  /** Bucket count of a silver layout written through `spark`: the
+    * session's shuffle width, the width [[BuildSide]] sizes joins at. A
+    * bucketed join runs one task per bucket, so fewer buckets than the
+    * width idle the difference in every downstream mart build
+    * (measured at sf10: half as many buckets as cores gave the bucketed
+    * mart no wall-clock win despite the elided exchange), and more
+    * buckets than the width only add small files and task waves. A
+    * deployment sizes the layout by setting the shuffle width of the
+    * session that writes it.
     */
-  val SilverBuckets = 32
+  def silverBuckets(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
 
-  /** One-time per-(session, corpus) bucketed-silver build backing
-    * `q_vendas_mart_bucketed` — the [[graft.operators.Dedup]]
+  /** [[silverBuckets]] of the active session. */
+  def SilverBuckets: Int = silverBuckets(SparkSession.active)
+
+  /** One-time per-(session, corpus, width) bucketed-silver build
+    * backing `q_vendas_mart_bucketed` — the [[graft.operators.Dedup]]
     * index-memo contract applied to the layout: repeated invocations
     * return the same catalog table names without re-writing. Table
     * names carry a corpus tag so two scale dirs never collide in one
@@ -157,16 +163,27 @@ object VendasMart {
     * caches.
     */
   private val silverCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), (String, String)]
   /** Test hook: forget memoized layouts so a spec can exercise the
     * re-register / rebuild paths within one JVM.
     */
   private[graft] def resetSilverCache(): Unit = silverCache.clear()
-  def ensureBucketedSilver(spark: SparkSession, sfDir: String): (String, String) = {
+
+  /** The layout at the session's own width ([[silverBuckets]]). */
+  def ensureBucketedSilver(spark: SparkSession, sfDir: String): (String, String) =
+    ensureBucketedSilver(spark, sfDir, silverBuckets(spark))
+
+  def ensureBucketedSilver(spark: SparkSession, sfDir: String,
+      nBuckets: Int): (String, String) = {
     silverCache.keySet.foreach { k =>
       if (k._1.sparkContext.isStopped) silverCache.remove(k)
     }
-    silverCache.getOrElseUpdate((spark, sfDir), {
+    silverCache.getOrElseUpdate((spark, sfDir, nBuckets), {
+      // Table names are per corpus, not per width: a build at this
+      // width replaces the tables any other width's entry points at.
+      silverCache.keySet.foreach { k =>
+        if (k._1 == spark && k._2 == sfDir) silverCache.remove(k)
+      }
       val tag = sfDir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
       val li = s"graft_silver_lineitem_b_$tag"
       val ord = s"graft_silver_orders_b_$tag"
@@ -175,8 +192,8 @@ object VendasMart {
       val ordSrc = Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_custkey", "o_orderdate")
       val reused =
-        reRegisterSilver(spark, sfDir, li, "l_orderkey", liSrc.schema) &&
-        reRegisterSilver(spark, sfDir, ord, "o_orderkey", ordSrc.schema)
+        reRegisterSilver(spark, sfDir, li, "l_orderkey", liSrc.schema, nBuckets) &&
+        reRegisterSilver(spark, sfDir, ord, "o_orderkey", ordSrc.schema, nBuckets)
       if (!reused) {
         // The reuse attempt may have half-succeeded (lineitem
         // re-registered as an EXTERNAL table, orders refused — e.g. a
@@ -194,8 +211,8 @@ object VendasMart {
         // corpus regenerated between the build's read and a post-build
         // listing would stamp the NEW listing onto buckets built from
         // the OLD data — the exact staleness the stamp exists to catch.
-        val src = sourceStamp(spark, sfDir)
-        bucketedSilver(spark, sfDir, SilverBuckets, li, ord)
+        val src = sourceStamp(spark, sfDir, nBuckets)
+        bucketedSilver(spark, sfDir, nBuckets, li, ord)
         // Stamp only on a fresh build: re-stamping on the reuse path
         // would re-date a layout built from an OLDER corpus if the
         // source were regenerated mid-session.
@@ -226,14 +243,19 @@ object VendasMart {
     * source listing matches byte-for-byte — a regenerated corpus
     * under the same dir (the scale-ladder workflow: gen_scale.py
     * overwrites /tmp/graft_sfN) mismatches and triggers a rebuild,
-    * never a silent read of stale buckets.
+    * never a silent read of stale buckets. The stamp also records the
+    * bucket count, so a layout built at another width rebuilds; a
+    * table this session already knows is reused only at `nBuckets`.
     *
     * @return true iff the existing layout was re-registered.
     */
   private[graft] def reRegisterSilver(spark: SparkSession, sfDir: String,
       table: String, bucketCol: String,
-      schema: org.apache.spark.sql.types.StructType): Boolean = {
-    if (spark.catalog.tableExists(table)) return true
+      schema: org.apache.spark.sql.types.StructType, nBuckets: Int): Boolean = {
+    if (spark.catalog.tableExists(table))
+      return spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+        .bucketSpec.exists(_.numBuckets == nBuckets)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -251,24 +273,25 @@ object VendasMart {
     // second check catches a directory whose stamp survived but whose
     // bucket files were partially deleted — Spark would silently scan
     // whatever files remain and return fewer rows.
-    if (recorded != s"${sourceStamp(spark, sfDir)}\n${layoutLine(fs, path)}")
+    if (recorded != s"${sourceStamp(spark, sfDir, nBuckets)}\n${layoutLine(fs, path)}")
       return false
     spark.sql(
       s"""CREATE TABLE $table (${schema.toDDL}) USING PARQUET
          |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-         |INTO $SilverBuckets BUCKETS
+         |INTO $nBuckets BUCKETS
          |LOCATION '${path.toString}'""".stripMargin)
     true
   }
 
-  /** The source-corpus listing the stamp records: every regular file
-    * under the sf dir's lineitem/orders parquet, as (path, length,
-    * mtime) lines — the cheapest fingerprint that still catches a
-    * regenerated corpus (gen_scale.py rewrites both files).
+  /** The source-corpus listing the stamp records, after the layout's
+    * bucket count: every regular file under the sf dir's
+    * lineitem/orders parquet, as (path, length, mtime) lines — the
+    * cheapest fingerprint that still catches a regenerated corpus
+    * (gen_scale.py rewrites both files).
     */
-  private def sourceStamp(spark: SparkSession, sfDir: String): String = {
+  private def sourceStamp(spark: SparkSession, sfDir: String, nBuckets: Int): String = {
     val conf = spark.sparkContext.hadoopConfiguration
-    (s"buckets=$SilverBuckets" +:
+    (s"buckets=$nBuckets" +:
     Seq("lineitem.parquet", "orders.parquet").flatMap { name =>
       val p = new org.apache.hadoop.fs.Path(sfDir, name)
       val fs = p.getFileSystem(conf)
@@ -296,8 +319,9 @@ object VendasMart {
     s"layoutFiles=$n"
   }
 
-  private[graft] def stampSilver(spark: SparkSession, sfDir: String, table: String): Unit =
-    stampSilverWith(spark, table, sourceStamp(spark, sfDir))
+  private[graft] def stampSilver(spark: SparkSession, sfDir: String, table: String,
+      nBuckets: Int): Unit =
+    stampSilverWith(spark, table, sourceStamp(spark, sfDir, nBuckets))
 
   /** Stamp a freshly-built layout with a PRE-BUILD source fingerprint
     * (see [[ensureBucketedSilver]]) plus the layout's own file count.

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.VendasMart
+
 /** The reference's silver→gold "vendas" mart on the *actual Olist
   * schemas* (`scripts/silver_to_gold/ingestion_vendas_silver_to_gold.py`)
   * — the literal port, exercised end-to-end by OlistPipelineSpec over
@@ -67,19 +69,25 @@ object OlistVendas {
     martFrom(items, orders, products, customers, paymentsPivot)
   }
 
-  /** Opt-in bucketed silver layout for the pipeline's two `order_id`
-    * fact sides (RunPipeline `--bucketed-silver=N`): re-writes
+  /** Bucketed silver layout for the pipeline's two `order_id` fact
+    * sides (the `RunPipeline gold` default; `--bucketed-silver=N` sets
+    * the width, which otherwise is the session's shuffle width,
+    * [[graft.operators.VendasMart.silverBuckets]]): re-writes
     * order_items and orders bucketed+sorted on the join key, so every
     * downstream gold build sort-merge-joins bucket-to-bucket with no
     * exchange — the [[graft.operators.VendasMart.bucketedSilver]]
     * layout applied to the production entry point. The repartition
     * puts each bucket in one file (see the VendasMart scaladoc for the
-    * sort-elision contract). Returns the catalog table names.
+    * sort-elision contract), and a warehouse location a previous JVM
+    * left without a catalog entry is cleared first. Returns the
+    * catalog table names.
     */
   def bucketedSilver(spark: SparkSession, silverRoot: String,
       nBuckets: Int): (String, String) = {
     val itemsT = "olist_silver_items_b"
     val ordersT = "olist_silver_orders_b"
+    VendasMart.clearStaleLocation(spark, itemsT)
+    VendasMart.clearStaleLocation(spark, ordersT)
     silver(spark, silverRoot, OlistCatalog.orderItems)
       .select("order_id", "product_id", "price", "freight_value")
       .repartition(nBuckets, col("order_id"))

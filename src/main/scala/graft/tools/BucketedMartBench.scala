@@ -16,7 +16,6 @@ object BucketedMartBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nBuckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt
     val spark = graft.GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -25,6 +24,8 @@ object BucketedMartBench {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val nBuckets = sys.env.get("SPARK_GRAFT_BUCKETS").map(_.toInt)
+      .getOrElse(graft.operators.VendasMart.silverBuckets(spark))
     val metrics = new StageMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     def drain(): Unit =

@@ -34,6 +34,12 @@ object RunPipeline {
       // spark-submit provides spark.master; default for direct runs.
       .config("spark.master", sys.props.getOrElse("spark.master", "local[*]")))
       .getOrCreate()
+    // Shuffle width (and so the bucketed layout's width) = the cores
+    // the session runs on, not Spark's fixed 200, unless the user
+    // set it (--conf / -D / spark-defaults).
+    val width = org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS.key
+    if (!spark.sessionState.conf.contains(width))
+      spark.conf.set(width, spark.sparkContext.defaultParallelism.toLong)
     try body(spark) finally spark.stop()
   }
 
@@ -48,14 +54,16 @@ object RunPipeline {
       // flip; it wins at every measured rung since r11 — sf30: 100.8
       // vs 122.3 s — by making the fact join exchange-free, and the
       // one-time layout cost amortizes over every downstream gold
-      // rebuild). `--bucketed-silver=N` overrides the width;
-      // `--plain-silver` (or `--bucketed-silver=0`) keeps the plain
-      // no-layout form for no-warehouse targets or tiny corpora.
+      // rebuild). The width is the session's shuffle width, which
+      // `--bucketed-silver=N` overrides; `--plain-silver` (or
+      // `--bucketed-silver=0`) keeps the plain no-layout form for
+      // no-warehouse targets or tiny corpora.
       // Remaining positionals are the optional JDBC target.
       val (flags, rest) = rest0.partition(isLayoutFlag)
-      val buckets = bucketsOrExit(flags)
+      val layout = layoutOrExit(flags)
       if (rest.length != 0 && rest.length != 2) { usage(); sys.exit(2) }
       withSpark { s =>
+        val buckets = bucketsIn(s, layout)
         val jdbc = rest match {
           case url :: table :: Nil => Some(Sinks.JdbcTarget(url, table, "", ""))
           case _ => None
@@ -87,12 +95,13 @@ object RunPipeline {
       // `--plain-silver` keeps the no-layout form for A/B.
       val (flags, rest) = rest0.partition(isLayoutFlag)
       if (rest.nonEmpty) { usage(); sys.exit(2) }
-      val buckets = bucketsOrExit(flags)
+      val layout = layoutOrExit(flags)
       withSpark { s =>
+        val buckets = bucketsIn(s, layout)
         val tR0 = System.nanoTime()
         val mart = buckets match {
-          case Some(_) =>
-            val (li, ord) = operators.VendasMart.ensureBucketedSilver(s, sfDir)
+          case Some(n) =>
+            val (li, ord) = operators.VendasMart.ensureBucketedSilver(s, sfDir, n)
             operators.VendasMart.martBucketed(s, sfDir, li, ord)
           case None => operators.VendasMart.mart(s, sfDir)
         }
@@ -132,26 +141,38 @@ object RunPipeline {
   private[graft] def isLayoutFlag(arg: String): Boolean =
     arg.startsWith("--bucketed-silver") || arg == "--plain-silver"
 
-  /** Layout-flag resolution for `gold`/`mart`: bucketed silver at
-    * [[operators.VendasMart.SilverBuckets]] unless explicitly widened
-    * (`--bucketed-silver=N`) or disabled (`--plain-silver`, or
+  /** Layout-flag parsing for `gold`/`mart`, before any session
+    * starts: `None` keeps plain silver (`--plain-silver`, or
     * `--bucketed-silver=0` so orchestration templates can pass the
-    * flag unconditionally and toggle via a variable). Last flag wins;
-    * a width that is not an integer throws, naming the flag.
+    * flag unconditionally and toggle via a variable); `Some(Some(n))`
+    * buckets at width n (`--bucketed-silver=N`); `Some(None)`, the
+    * default and bare `--bucketed-silver`, buckets at the width
+    * [[bucketsIn]] reads from the session. Last flag wins; a width
+    * that is not an integer throws, naming the flag.
     */
-  private[graft] def bucketsOf(flags: List[String]): Option[Int] =
+  private[graft] def bucketsOf(flags: List[String]): Option[Option[Int]] =
     flags.lastOption match {
       case Some("--plain-silver") => None
       case Some(f) =>
-        val n = f.split("=", 2).lift(1).map { v =>
+        f.split("=", 2).lift(1).map { v =>
           v.toIntOption.getOrElse(throw new IllegalArgumentException(
             s"--bucketed-silver expects an integer width; got '$v'"))
-        }.getOrElse(operators.VendasMart.SilverBuckets)
-        if (n > 0) Some(n) else None
-      case None => Some(operators.VendasMart.SilverBuckets)
+        } match {
+          case Some(n) if n <= 0 => None
+          case width => Some(width)
+        }
+      case None => Some(None)
     }
 
-  private def bucketsOrExit(flags: List[String]): Option[Int] =
+  /** The bucket width a parsed layout flag asks of `spark`: the
+    * session's [[operators.VendasMart.silverBuckets]] unless the flag
+    * named one; `None` for plain silver.
+    */
+  private[graft] def bucketsIn(spark: SparkSession,
+      layout: Option[Option[Int]]): Option[Int] =
+    layout.map(_.getOrElse(operators.VendasMart.silverBuckets(spark)))
+
+  private def layoutOrExit(flags: List[String]): Option[Option[Int]] =
     try bucketsOf(flags)
     catch {
       case e: IllegalArgumentException =>
@@ -166,5 +187,6 @@ object RunPipeline {
         |       RunPipeline check <goldRoot> <jdbcUrl> <table>
         |       RunPipeline grain <sfDir>
         |       RunPipeline <bronzeRoot> <silverRoot> <goldRoot>
-        |(bucketed silver is the default for gold/mart; --plain-silver keeps the no-layout form)""".stripMargin)
+        |(bucketed silver at the session's shuffle width is the default for gold/mart;
+        | --plain-silver keeps the no-layout form)""".stripMargin)
 }

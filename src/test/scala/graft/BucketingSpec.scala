@@ -101,32 +101,112 @@ class BucketingSpec extends SparkSpec {
 
       // The fact-fact join (the one bucketing targets) must have no
       // exchange below it; the dimension joins above it are untouched.
-      val plan = bucketed.queryExecution.executedPlan
-      val factJoin = plan.collect {
-        case j if j.nodeName.contains("SortMergeJoin") &&
-          j.toString.contains("l_orderkey") && j.toString.contains("o_orderkey") => j
-      }.lastOption // deepest such node = the li⟕ord join itself
-      assert(factJoin.isDefined, s"no li-ord SMJ in:\n$plan")
-      val shuffles = factJoin.get.collect { case s: ShuffleExchangeExec => s }
-      assert(shuffles.isEmpty,
-        s"expected exchange-free bucketed fact join, got:\n${factJoin.get}")
+      val factJoin = exchangeFreeFactJoin(bucketed)
       // And SORT-free: bucketedSilver repartitions onto the bucket
       // column before the write, so each bucket is a single file and
       // Spark reuses the sortBy ordering instead of re-sorting under
       // the SMJ. (With multiple part-files per bucket this assertion
       // fails — the scan's output ordering is only trusted for
       // single-file buckets.)
-      val sorts = factJoin.get.collect {
+      val sorts = factJoin.collect {
         case s: org.apache.spark.sql.execution.SortExec => s
       }
       assert(sorts.isEmpty,
-        s"expected sort-free bucketed fact join (single file per bucket), got:\n${factJoin.get}")
+        s"expected sort-free bucketed fact join (single file per bucket), got:\n$factJoin")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.set(bcKey, savedBc)
       spark.conf.unset(ordKey)
       spark.sql("DROP TABLE IF EXISTS t_li_b")
       spark.sql("DROP TABLE IF EXISTS t_ord_b")
+    }
+  }
+
+  /** The mart's l_orderkey=o_orderkey sort-merge join (the deepest
+    * one), asserted to have no exchange below it.
+    */
+  private def exchangeFreeFactJoin(
+      mart: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+    val plan = mart.queryExecution.executedPlan
+    val factJoin = plan.collect {
+      case j if j.nodeName.contains("SortMergeJoin") &&
+        j.toString.contains("l_orderkey") && j.toString.contains("o_orderkey") => j
+    }.lastOption // deepest such node = the li⟕ord join itself
+    assert(factJoin.isDefined, s"no li-ord SMJ in:\n$plan")
+    val shuffles = factJoin.get.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.isEmpty,
+      s"expected exchange-free bucketed fact join, got:\n${factJoin.get}")
+    factJoin.get
+  }
+
+  /** Run `body` at shuffle width `n`, AQE off and broadcast disabled
+    * (so the fact join plans as the at-scale sort-merge join).
+    */
+  private def atWidth[T](n: Int)(body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    keys.zip(Seq(n.toString, "false", "-1")).foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  private def layoutOf(table: String): (Option[Int], String, Int) = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
+    val dir = new org.apache.hadoop.fs.Path(meta.location)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(dir).count { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
+    (meta.bucketSpec.map(_.numBuckets), meta.tableType.name, files)
+  }
+
+  test("silver layout takes the session's shuffle width: one file per bucket, exchange-free join") {
+    val sfDir = "/root/testdata/sf0.001"
+    atWidth(3) {
+      operators.VendasMart.resetSilverCache()
+      val (li, ord) = operators.VendasMart.ensureBucketedSilver(spark, sfDir)
+      for (t <- Seq(li, ord)) {
+        val (buckets, _, files) = layoutOf(t)
+        assert(buckets.contains(3), s"$t buckets: $buckets")
+        assert(files == 3, s"$t data files: $files")
+      }
+      val bucketed = operators.VendasMart.martBucketed(spark, sfDir, li, ord)
+      exchangeFreeFactJoin(bucketed)
+      assert(bucketed.collect().map(_.toSeq).toSet ==
+        operators.VendasMart.mart(spark, sfDir).collect().map(_.toSeq).toSet)
+    }
+  }
+
+  test("a layout stamped at another width rebuilds instead of re-registering") {
+    val sfDir = "/root/testdata/sf0.001"
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    operators.VendasMart.resetSilverCache()
+    val (li, ord) = atWidth(3)(operators.VendasMart.ensureBucketedSilver(spark, sfDir))
+    // A new JVM: the width-3 files and stamps stay on disk, the
+    // in-memory catalog forgets both tables.
+    for (t <- Seq(li, ord)) {
+      val dir = new org.apache.hadoop.fs.Path(wh, t.toLowerCase)
+      val aside = new org.apache.hadoop.fs.Path(wh, s"${t.toLowerCase}_aside")
+      assert(fs.rename(dir, aside))
+      spark.sql(s"DROP TABLE $t")
+      assert(fs.rename(aside, dir))
+      assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_src_stamp")))
+    }
+    operators.VendasMart.resetSilverCache()
+    atWidth(5) {
+      assert(operators.VendasMart.ensureBucketedSilver(spark, sfDir) == ((li, ord)))
+      // Re-registered would be an EXTERNAL table over the 3 old files.
+      for (t <- Seq(li, ord)) assert(layoutOf(t) == ((Some(5), "MANAGED", 5)), t)
+    }
+    // Same session, back to width 3: the catalog's width-5 tables are
+    // not reused under the wrong count either.
+    atWidth(3) {
+      operators.VendasMart.ensureBucketedSilver(spark, sfDir)
+      for (t <- Seq(li, ord)) assert(layoutOf(t) == ((Some(3), "MANAGED", 3)), t)
+      exchangeFreeFactJoin(operators.VendasMart.martBucketed(spark, sfDir, li, ord))
     }
   }
 
@@ -144,13 +224,14 @@ class BucketingSpec extends SparkSpec {
     val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
     val fs = wh.getFileSystem(conf)
     def loc(t: String) = new org.apache.hadoop.fs.Path(wh, t)
+    val n = operators.VendasMart.silverBuckets(spark)
     try {
       // Build + stamp under one name; clone the files under another.
-      liSrc.repartition(operators.VendasMart.SilverBuckets, col("l_orderkey"))
-        .write.bucketBy(operators.VendasMart.SilverBuckets, "l_orderkey")
+      liSrc.repartition(n, col("l_orderkey"))
+        .write.bucketBy(n, "l_orderkey")
         .sortBy("l_orderkey").mode("overwrite").format("parquet")
         .saveAsTable("t_reuse_src")
-      operators.VendasMart.stampSilver(spark, sfDir, "t_reuse_src")
+      operators.VendasMart.stampSilver(spark, sfDir, "t_reuse_src", n)
       org.apache.hadoop.fs.FileUtil.copy(fs, loc("t_reuse_src"),
         fs, loc("t_reuse_orphan"), false, conf)
       org.apache.hadoop.fs.FileUtil.copy(fs, loc("t_reuse_src"),
@@ -160,12 +241,12 @@ class BucketingSpec extends SparkSpec {
 
       // Matching stamp -> re-registered, same rows, bucket spec intact.
       assert(operators.VendasMart.reRegisterSilver(spark, sfDir,
-        "t_reuse_orphan", "l_orderkey", liSrc.schema))
+        "t_reuse_orphan", "l_orderkey", liSrc.schema, n))
       assert(spark.catalog.tableExists("t_reuse_orphan"))
       val meta = spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier("t_reuse_orphan"))
       assert(meta.bucketSpec.exists(b =>
-        b.numBuckets == operators.VendasMart.SilverBuckets &&
+        b.numBuckets == n &&
         b.bucketColumnNames == Seq("l_orderkey") &&
         b.sortColumnNames == Seq("l_orderkey")), s"bucket spec: ${meta.bucketSpec}")
       assert(spark.table("t_reuse_orphan").count() == liSrc.count())
@@ -175,7 +256,7 @@ class BucketingSpec extends SparkSpec {
       val out = fs.create(stale, true)
       try out.write("stale".getBytes("UTF-8")) finally out.close()
       assert(!operators.VendasMart.reRegisterSilver(spark, sfDir,
-        "t_reuse_stale", "l_orderkey", liSrc.schema))
+        "t_reuse_stale", "l_orderkey", liSrc.schema, n))
       assert(!spark.catalog.tableExists("t_reuse_stale"))
 
       // Partially-deleted layout (stamp intact, a bucket file gone) ->
@@ -187,7 +268,7 @@ class BucketingSpec extends SparkSpec {
       }.get
       fs.delete(victim, false)
       assert(!operators.VendasMart.reRegisterSilver(spark, sfDir,
-        "t_reuse_partial", "l_orderkey", liSrc.schema))
+        "t_reuse_partial", "l_orderkey", liSrc.schema, n))
       assert(!spark.catalog.tableExists("t_reuse_partial"))
     } finally {
       spark.sql("DROP TABLE IF EXISTS t_reuse_src")

@@ -20,11 +20,10 @@ class OlistPipelineSpec extends SparkSpec {
     Files.writeString(p, lines.mkString("\n"))
   }
 
-  test("full b2s + s2g pipeline produces the reference vendas mart") {
-    val bronze = tmpDir("bronze")
-    val silver = tmpDir("silver")
-    val gold = tmpDir("gold")
-
+  /** Bronze CSVs for all 8 Olist tables: 3 orders (one with no
+    * items), 3 items over 2 orders and 2 products, 3 payments.
+    */
+  private def writeBronze(bronze: String): Unit = {
     writeCsv(bronze, "olist/customers",
       "customer_id,customer_unique_id,customer_zip_code_prefix,customer_city,customer_state",
       "c1,u1,01310,sao paulo,SP",
@@ -62,6 +61,14 @@ class OlistPipelineSpec extends SparkSpec {
       "review_id,order_id,review_score,review_comment_title,review_comment_message," +
         "review_creation_date,review_answer_timestamp",
       "r1,o1,5,,otimo,2017-10-11 00:00:00,2017-10-12 03:43:48")
+  }
+
+  test("full b2s + s2g pipeline produces the reference vendas mart") {
+    val bronze = tmpDir("bronze")
+    val silver = tmpDir("silver")
+    val gold = tmpDir("gold")
+
+    writeBronze(bronze)
 
     IngestJob.runAll(spark, bronze, silver)
     OlistVendas.run(spark, silver, gold)
@@ -153,25 +160,53 @@ class OlistPipelineSpec extends SparkSpec {
     assert(mirrored == batch)
   }
 
+  test("bucketed gold re-runs over a warehouse location a previous JVM left behind") {
+    val bronze = tmpDir("obronze")
+    val silver = tmpDir("osilver")
+    val gold = tmpDir("ogold")
+    writeBronze(bronze)
+    IngestJob.runAll(spark, bronze, silver)
+    // A previous JVM's layout: files under the managed locations, no
+    // entry in this session's in-memory catalog.
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (t <- Seq("olist_silver_items_b", "olist_silver_orders_b")) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val out = fs.create(new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(wh, t), "part-00000-stale_00000.c000.snappy.parquet"), true)
+      try out.write("stale".getBytes("UTF-8")) finally out.close()
+      assert(!spark.catalog.tableExists(t))
+    }
+    OlistVendas.run(spark, silver, gold, buckets = Some(3))
+    assert(spark.read.parquet(s"$gold/olist/vendas").count() == 3)
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("olist_silver_items_b"))
+    assert(meta.bucketSpec.map(_.numBuckets).contains(3))
+  }
+
   test("pipeline CLI layout flags: bucketed silver is the default, plain the fallback") {
-    import graft.tools.RunPipeline.{bucketsOf, isLayoutFlag}
-    // r18 flip: no flag → bucketed at the code-default width (the
-    // measured at-scale winner at every rung since r11).
-    assert(bucketsOf(Nil).contains(graft.operators.VendasMart.SilverBuckets))
-    assert(bucketsOf(List("--bucketed-silver=128")).contains(128))
+    import graft.tools.RunPipeline.{bucketsIn, bucketsOf, isLayoutFlag}
+    // r18 flip: no flag → bucketed (the measured at-scale winner at
+    // every rung since r11), at a width the session resolves.
+    assert(bucketsOf(Nil) == Some(None))
+    assert(bucketsOf(List("--bucketed-silver=128")) == Some(Some(128)))
     // The no-layout fallback, both spellings (templates pass
     // --bucketed-silver=0 unconditionally and toggle via a variable).
     assert(bucketsOf(List("--plain-silver")).isEmpty)
     assert(bucketsOf(List("--bucketed-silver=0")).isEmpty)
     // Last flag wins, and bare --bucketed-silver keeps the default width.
-    assert(bucketsOf(List("--plain-silver", "--bucketed-silver"))
-      .contains(graft.operators.VendasMart.SilverBuckets))
+    assert(bucketsOf(List("--plain-silver", "--bucketed-silver")) == Some(None))
     // A width that is not an integer is rejected, naming the flag.
     for (bad <- Seq("--bucketed-silver=abc", "--bucketed-silver=")) {
       val e = intercept[IllegalArgumentException](bucketsOf(List(bad)))
       assert(e.getMessage.contains("--bucketed-silver"))
     }
     assert(isLayoutFlag("--plain-silver") && isLayoutFlag("--bucketed-silver=4"))
+    // The default width is the session's shuffle width, read only once
+    // the session exists; an explicit width and plain pass through.
+    assert(bucketsIn(spark, bucketsOf(Nil)).contains(spark.sessionState.conf.numShufflePartitions))
+    assert(bucketsIn(spark, bucketsOf(List("--bucketed-silver=7"))).contains(7))
+    assert(bucketsIn(spark, bucketsOf(List("--plain-silver"))).isEmpty)
     assert(!isLayoutFlag("jdbc:derby:whatever"))
   }
 }
