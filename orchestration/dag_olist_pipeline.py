@@ -51,10 +51,11 @@ with DAG(
             # bucket+sort of the two order_id fact tables makes every
             # gold rebuild's fact join exchange-free,
             # OlistVendas.bucketedSilver). Bare, the flag buckets at
-            # the Spark job's shuffle width (its cores unless
-            # spark.sql.shuffle.partitions is set); set the
-            # `silver_buckets` Airflow Variable to pin a width, or 0 to
-            # fall back to the plain no-layout form.
+            # the Spark job's spark.sql.shuffle.partitions (Spark's 200
+            # on a cluster unless the job's conf sets it; a local
+            # master's cores when unset); set the `silver_buckets`
+            # Airflow Variable to pin a width, or 0 to fall back to
+            # the plain no-layout form.
             "{% set w = var.value.get('silver_buckets', '') %}"
             "--bucketed-silver{{ '=' ~ w if w else '' }}",
             "{{ var.value.mysql_jdbc_url }}", "TB_VENDAS",

@@ -217,6 +217,18 @@ def main():
                            derby, "TB_VENDAS")
     assert stage_rows(check_b) == stage_rows(check), \
         f"bucketed gold leg changed the row count: {check_b} vs {check}"
+    # The DAG's default, a bare flag: the layout at the session's
+    # width (local[4]: 4 buckets), rebuilt in a fresh JVM over the
+    # warehouse the previous leg left behind.
+    gold_d = os.path.join(work, "gold_default")
+    gold_line = spark_submit(jar, "STAGE OK gold", "gold", silver, gold_d,
+                             "--bucketed-silver", derby, "TB_VENDAS")
+    assert " buckets=4 " in gold_line, \
+        f"bare --bucketed-silver did not bucket at the session's cores: {gold_line}"
+    check_d = spark_submit(jar, "STAGE OK check", "check", gold_d,
+                           derby, "TB_VENDAS")
+    assert stage_rows(check_d) == stage_rows(check), \
+        f"default-width gold leg changed the row count: {check_d} vs {check}"
 
     # Grain parity, both implementations of the reference's vendas
     # dataflow, one script — orchestration and registry can't drift:

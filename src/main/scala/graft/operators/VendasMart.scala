@@ -153,17 +153,18 @@ object VendasMart {
   /** [[silverBuckets]] of the active session. */
   def SilverBuckets: Int = silverBuckets(SparkSession.active)
 
-  /** One-time per-(session, corpus, width) bucketed-silver build
-    * backing `q_vendas_mart_bucketed` — the [[graft.operators.Dedup]]
+  /** One-time per-(session, corpus) bucketed-silver build backing
+    * `q_vendas_mart_bucketed` — the [[graft.operators.Dedup]]
     * index-memo contract applied to the layout: repeated invocations
     * return the same catalog table names without re-writing. Table
     * names carry a corpus tag so two scale dirs never collide in one
     * warehouse; a concurrent double-build is benign (`overwrite`,
-    * idempotent). Stopped-session keys are swept like the Dedup
-    * caches.
+    * idempotent). The value records the width the layout was built
+    * at, and an entry at another width is a miss. Stopped-session
+    * keys are swept like the Dedup caches.
     */
   private val silverCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), (String, String)]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Int, String, String)]
   /** Test hook: forget memoized layouts so a spec can exercise the
     * re-register / rebuild paths within one JVM.
     */
@@ -178,12 +179,9 @@ object VendasMart {
     silverCache.keySet.foreach { k =>
       if (k._1.sparkContext.isStopped) silverCache.remove(k)
     }
-    silverCache.getOrElseUpdate((spark, sfDir, nBuckets), {
-      // Table names are per corpus, not per width: a build at this
-      // width replaces the tables any other width's entry points at.
-      silverCache.keySet.foreach { k =>
-        if (k._1 == spark && k._2 == sfDir) silverCache.remove(k)
-      }
+    val key = (spark, sfDir)
+    if (silverCache.get(key).exists(_._1 != nBuckets)) silverCache.remove(key)
+    val (_, li, ord) = silverCache.getOrElseUpdate(key, {
       val tag = sfDir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
       val li = s"graft_silver_lineitem_b_$tag"
       val ord = s"graft_silver_orders_b_$tag"
@@ -219,8 +217,9 @@ object VendasMart {
         stampSilverWith(spark, li, src)
         stampSilverWith(spark, ord, src)
       }
-      (li, ord)
+      (nBuckets, li, ord)
     })
+    (li, ord)
   }
 
   /** Re-attach a bucketed-silver layout left by a PREVIOUS session.

@@ -71,8 +71,8 @@ object OlistVendas {
 
   /** Bucketed silver layout for the pipeline's two `order_id` fact
     * sides (the `RunPipeline gold` default; `--bucketed-silver=N` sets
-    * the width, which otherwise is the session's shuffle width,
-    * [[graft.operators.VendasMart.silverBuckets]]): re-writes
+    * the width, which otherwise `RunPipeline.bucketsIn` resolves from
+    * the session): re-writes
     * order_items and orders bucketed+sorted on the join key, so every
     * downstream gold build sort-merge-joins bucket-to-bucket with no
     * exchange — the [[graft.operators.VendasMart.bucketedSilver]]

@@ -34,12 +34,6 @@ object RunPipeline {
       // spark-submit provides spark.master; default for direct runs.
       .config("spark.master", sys.props.getOrElse("spark.master", "local[*]")))
       .getOrCreate()
-    // Shuffle width (and so the bucketed layout's width) = the cores
-    // the session runs on, not Spark's fixed 200, unless the user
-    // set it (--conf / -D / spark-defaults).
-    val width = org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS.key
-    if (!spark.sessionState.conf.contains(width))
-      spark.conf.set(width, spark.sparkContext.defaultParallelism.toLong)
     try body(spark) finally spark.stop()
   }
 
@@ -54,7 +48,7 @@ object RunPipeline {
       // flip; it wins at every measured rung since r11 — sf30: 100.8
       // vs 122.3 s — by making the fact join exchange-free, and the
       // one-time layout cost amortizes over every downstream gold
-      // rebuild). The width is the session's shuffle width, which
+      // rebuild). The width is bucketsIn's default, which
       // `--bucketed-silver=N` overrides; `--plain-silver` (or
       // `--bucketed-silver=0`) keeps the plain no-layout form for
       // no-warehouse targets or tiny corpora.
@@ -164,13 +158,25 @@ object RunPipeline {
       case None => Some(None)
     }
 
-  /** The bucket width a parsed layout flag asks of `spark`: the
-    * session's [[operators.VendasMart.silverBuckets]] unless the flag
-    * named one; `None` for plain silver.
+  /** The bucket width a parsed layout flag asks of `spark`, `None`
+    * for plain silver. Without a flag width it is the session's
+    * shuffle width ([[operators.VendasMart.silverBuckets]]) if the
+    * user set one. Unset on a `local[...]` master, it is the session's
+    * cores (`defaultParallelism`), not Spark's cluster-sized 200.
+    * Unset on a cluster master it stays the session's shuffle width:
+    * executors may still be registering at startup, so
+    * `defaultParallelism` does not yet give the cluster's width. Only
+    * the layout is sized here; every other shuffle keeps the
+    * session's width.
     */
   private[graft] def bucketsIn(spark: SparkSession,
-      layout: Option[Option[Int]]): Option[Int] =
-    layout.map(_.getOrElse(operators.VendasMart.silverBuckets(spark)))
+      layout: Option[Option[Int]]): Option[Int] = {
+    val userSet = spark.sessionState.conf.contains(
+      org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS.key)
+    layout.map(_.getOrElse(
+      if (!userSet && spark.sparkContext.isLocal) spark.sparkContext.defaultParallelism
+      else operators.VendasMart.silverBuckets(spark)))
+  }
 
   private def layoutOrExit(flags: List[String]): Option[Option[Int]] =
     try bucketsOf(flags)
@@ -187,6 +193,6 @@ object RunPipeline {
         |       RunPipeline check <goldRoot> <jdbcUrl> <table>
         |       RunPipeline grain <sfDir>
         |       RunPipeline <bronzeRoot> <silverRoot> <goldRoot>
-        |(bucketed silver at the session's shuffle width is the default for gold/mart;
-        | --plain-silver keeps the no-layout form)""".stripMargin)
+        |(bucketed silver is the default for gold/mart, at the session's shuffle width
+        | if set, else at a local session's cores; --plain-silver keeps the no-layout form)""".stripMargin)
 }

@@ -202,10 +202,19 @@ class OlistPipelineSpec extends SparkSpec {
       assert(e.getMessage.contains("--bucketed-silver"))
     }
     assert(isLayoutFlag("--plain-silver") && isLayoutFlag("--bucketed-silver=4"))
-    // The default width is the session's shuffle width, read only once
-    // the session exists; an explicit width and plain pass through.
-    assert(bucketsIn(spark, bucketsOf(Nil)).contains(spark.sessionState.conf.numShufflePartitions))
-    assert(bucketsIn(spark, bucketsOf(List("--bucketed-silver=7"))).contains(7))
+    // The default width is resolved once the session exists: the
+    // shuffle width the user set, else a local session's cores (never
+    // Spark's unset 200). An explicit width and plain pass through.
+    val widthKey = "spark.sql.shuffle.partitions"
+    val savedWidth = spark.conf.get(widthKey)
+    try {
+      spark.conf.set(widthKey, "7")
+      assert(bucketsIn(spark, bucketsOf(Nil)).contains(7))
+      spark.conf.unset(widthKey)
+      assert(spark.sessionState.conf.numShufflePartitions == 200)
+      assert(bucketsIn(spark, bucketsOf(Nil)).contains(spark.sparkContext.defaultParallelism))
+    } finally spark.conf.set(widthKey, savedWidth)
+    assert(bucketsIn(spark, bucketsOf(List("--bucketed-silver=9"))).contains(9))
     assert(bucketsIn(spark, bucketsOf(List("--plain-silver"))).isEmpty)
     assert(!isLayoutFlag("jdbc:derby:whatever"))
   }
