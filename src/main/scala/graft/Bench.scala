@@ -100,7 +100,7 @@ object Bench {
     // session actually runs — GraftSession owns the build-time
     // decision (r19; replaces the r18 sysprop note-key plumbing).
     val codecNote: String =
-      s""", "io_codec": "${jsonStr(spark.conf.get("spark.io.compression.codec"))}", "spill_compress": ${spark.conf.get("spark.shuffle.spill.compress")}, "shj_threshold": "${jsonStr(spark.conf.get("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"))}""""
+      s""", "io_codec": "${jsonStr(spark.conf.get("spark.io.compression.codec"))}", "spill_compress": ${spark.conf.get("spark.shuffle.spill.compress")}"""
     val metrics = new tools.StageMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     def drain(): Unit =

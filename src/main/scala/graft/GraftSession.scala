@@ -92,45 +92,6 @@ object GraftSession {
     */
   def DefaultSpillCompress = true
 
-  /** Graft-namespaced selector for AQE's sort-merge→shuffled-hash
-    * join conversion bound
-    * (`spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold`).
-    * Resolution: sysprop `spark.graft.aqe.shjThreshold` → env
-    * `SPARK_GRAFT_SHJ_THRESHOLD` → [[DefaultShjThreshold]].
-    *
-    * Mechanism (guide §3): the big gram-keyed joins (q_text_lm_score's
-    * bigram/unigram model joins, q_text_boilerplate's df join-back,
-    * q_corpus_contam's cross-split index join) sort-merge a huge
-    * exploded stream against an AGGREGATED side that is one row per
-    * key — the stream-side sort is pure overhead (11.8 / 8.1 / 3.4 GB
-    * of sort spill at sf30) exactly like the r18 join_inner case, but
-    * unlike the dim joins there is no metadata-cheap count to drive
-    * [[graft.operators.BuildSide]]. AQE's conversion
-    * decides from MEASURED per-partition build sizes after the
-    * exchange: every build partition must be ≤ this threshold
-    * (post-coalescing), so the rule self-disables where a build side
-    * is genuinely large or skewed and the sort's spill robustness is
-    * the right tool — the scale-adaptive form of the counted rule.
-    * Spark requires the threshold ≥ advisoryPartitionSizeInBytes
-    * (64 MB default) for the rule to fire at all; `0` disables.
-    * Default decided by the r20 sf30 full-sweep pair
-    * (`bench_sf30_edits_lz4_r20` vs `bench_sf30_shj_lz4_r20`).
-    */
-  val ShjThresholdKey = "spark.graft.aqe.shjThreshold"
-
-  /** See [[ShjThresholdKey]]; "64m" turns the conversion on at the
-    * minimum legal bound, "0" disables it (Spark's default).
-    */
-  def DefaultShjThreshold = "64m"
-
-  def sessionShjThreshold: String = {
-    val v = resolve(ShjThresholdKey, "SPARK_GRAFT_SHJ_THRESHOLD")
-      .getOrElse(DefaultShjThreshold)
-    require(v.matches("(?i)\\d+[kmg]?b?"),
-      s"$ShjThresholdKey must be a byte size like 0, 64m or 128m; got '$v'")
-    v
-  }
-
   private def resolve(sysprop: String, env: String): Option[String] =
     sys.props.get(sysprop).orElse(sys.env.get(env)).map(_.trim)
       .filter(_.nonEmpty)
@@ -199,11 +160,6 @@ object GraftSession {
       // re-sorts every bucket on every mart build, forfeiting half the
       // layout's win. Harmless for non-bucketed reads.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // AQE SMJ→SHJ conversion bound (see ShjThresholdKey scaladoc):
-      // runtime-measured, per-partition-gated join selection for the
-      // aggregated-build-side joins no counted bound can reach.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sessionShjThreshold)
       // The AQE broadcast threshold stays at Spark's default. A raised
       // 48 MB bound shipped briefly to fix the sf10 mart pivot spill,
       // but the mart now pins its pivot and dimension joins with
@@ -221,6 +177,14 @@ object GraftSession {
       // changed). Lesson recorded in SCALE.md: a measured
       // broadcast is safe against OOM but not automatically faster —
       // raise the bound only per-plan, with hints, from an A/B.
+      // AQE's sort-merge → shuffled-hash conversion
+      // (maxShuffledHashJoinLocalMapThreshold) stays at Spark's
+      // default, off, for the same reason: it compares SERIALIZED
+      // shuffle bytes with a bound that cannot fire below the 64 MB
+      // advisory partition size, so it can never honour BuildSide's
+      // 24 MiB of in-memory hash build. A converted join dies with
+      // "Can't acquire … build hash relation" at 512 MiB of execution
+      // memory where the sort-merge join finishes (LowMemorySpec).
 
   /** Idempotent guard for sessions built OUTSIDE the library's entry
     * points (the driver smoke-checks `SparkEntry.entry` with its own

@@ -272,27 +272,18 @@ object Analytics {
       .agg(
         count(lit(1)).as("n_rows"),
         percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000)).as("approx_median"))
-    // Distinct-branch shape (r20 A/B knob; guide §2.3/§5). "map"
-    // (Spark's default plan): partial HashAggregate on (flag,
-    // orderkey) BEFORE the exchange — on this key the map-side
-    // reduction is only 1.77× (180 M → 101.7 M rows at sf30) and the
-    // per-task hash over ~7 M input rows overflows into sort-fallback,
-    // 18 GB of spill for the bytes it saves. "shuffle": repartition by
-    // the grouping key FIRST, so the (now partition-local) partial +
-    // final aggregates see ~|distinct|/parts groups each — a hash that
-    // fits, no sort fallback — at the cost of exchanging raw (flag,
-    // orderkey) pairs. The exchange is AQE-coalescible (no pinned
-    // partition count). Default decided by the sf30 pair in
-    // OPTIMIZATION_r20.md.
-    val distinctIn = li.select(col("l_returnflag"), col("l_orderkey"))
-    val distinctPairs = spark.conf.getOption("spark.graft.approx.distinctShape")
-      .getOrElse("shuffle") match {
-      case "map" => distinctIn.distinct()
-      case "shuffle" =>
-        distinctIn.repartition(col("l_returnflag"), col("l_orderkey")).distinct()
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.approx.distinctShape must be map or shuffle; got '$other'")
-    }
+    // Distinct-branch shape: repartition by the grouping key FIRST, so
+    // the (now partition-local) partial + final aggregates see
+    // ~|distinct|/parts groups each, at the cost of exchanging raw
+    // (flag, orderkey) pairs; the exchange is AQE-coalescible (no
+    // pinned partition count). Spark's default plan, a partial
+    // HashAggregate BEFORE the exchange, reduces only 1.77× on this
+    // key (180 M → 101.7 M rows at sf30) and its per-task hash
+    // overflows into sort fallback. That map-side shape was faster in
+    // 3 of 10 alternating sf1 pairs with both shapes spilling
+    // (bench_sf1_approxAB.json, OPTIMIZATION_r20.md §q_approx_stats).
+    val distinctPairs = li.select(col("l_returnflag"), col("l_orderkey"))
+      .repartition(col("l_returnflag"), col("l_orderkey")).distinct()
     val orders = distinctPairs
       .groupBy("l_returnflag")
       .agg(

@@ -965,7 +965,8 @@ object Dedup {
     // tightest bound positional information admits — equality-edge
     // and gap-pair behavior stay pinned in OperatorSpec) prunes only
     // 3.4% more candidates than the per-row test (6.653 M vs 6.890 M
-    // at sf10, JaccardProfile r16): false candidates here
+    // at sf10, SCALE.md "The PPJoin+ lever, evaluated and closed
+    // (r16)"): false candidates here
     // overwhelmingly share exactly ONE prefix gram (A = 1), where the
     // accumulated and per-row bounds coincide, and deeper suffix
     // filtering degenerates because within a df tier the (df, g60)

@@ -13,12 +13,12 @@ class BucketingSpec extends SparkSpec {
 
   import spark.implicits._
 
+  private val aqeKey = "spark.sql.adaptive.enabled"
+
   test("join of co-bucketed tables plans without a shuffle exchange") {
     // Plain (non-adaptive) physical plan so the join subtree is
     // directly inspectable; AQE would only ever remove exchanges here.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try bucketedJoinBody()
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    withConfs(aqeKey -> "false")(bucketedJoinBody())
   }
 
   private def bucketedJoinBody(): Unit = {
@@ -75,51 +75,52 @@ class BucketingSpec extends SparkSpec {
     // mart from them, and assert the l_orderkey=o_orderkey join subtree
     // contains no exchange. Broadcast is disabled so the join plans the
     // way it does past the thresholds at scale (SMJ) — AQE off for a
-    // directly inspectable plan; both restored after.
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    // directly inspectable plan; all three restored after.
     val ordKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val savedBc = spark.conf.get(bcKey)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(bcKey, "-1")
+    val savedAqe = spark.conf.get(aqeKey)
     // Ordering propagation from bucketed scans is opt-in since Spark
     // 3.0 (SPARK-28113): without it the planner re-sorts each bucket
     // locally even though bucketedSilver writes one sorted file per
     // bucket. The elision needs BOTH this flag and the single-file
-    // layout (the repartition in bucketedSilver).
-    spark.conf.set(ordKey, "true")
-    try {
-      val sfDir = "/root/testdata/sf0.001"
-      operators.VendasMart.bucketedSilver(spark, sfDir, 4,
-        "t_li_b", "t_ord_b")
-      val bucketed = operators.VendasMart.martBucketed(spark, sfDir,
-        "t_li_b", "t_ord_b")
+    // layout (the repartition in bucketedSilver). GraftSession.configure
+    // sets it on every session, the shared one included.
+    withConfs(aqeKey -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        ordKey -> "true") {
+      try {
+        val sfDir = "/root/testdata/sf0.001"
+        operators.VendasMart.bucketedSilver(spark, sfDir, 4,
+          "t_li_b", "t_ord_b")
+        val bucketed = operators.VendasMart.martBucketed(spark, sfDir,
+          "t_li_b", "t_ord_b")
 
-      // Correctness first: identical rows to the plain mart.
-      val plain = operators.VendasMart.mart(spark, sfDir)
-      assert(bucketed.collect().map(_.toSeq).toSet ==
-        plain.collect().map(_.toSeq).toSet)
+        // Correctness first: identical rows to the plain mart.
+        val plain = operators.VendasMart.mart(spark, sfDir)
+        assert(bucketed.collect().map(_.toSeq).toSet ==
+          plain.collect().map(_.toSeq).toSet)
 
-      // The fact-fact join (the one bucketing targets) must have no
-      // exchange below it; the dimension joins above it are untouched.
-      val factJoin = exchangeFreeFactJoin(bucketed)
-      // And SORT-free: bucketedSilver repartitions onto the bucket
-      // column before the write, so each bucket is a single file and
-      // Spark reuses the sortBy ordering instead of re-sorting under
-      // the SMJ. (With multiple part-files per bucket this assertion
-      // fails — the scan's output ordering is only trusted for
-      // single-file buckets.)
-      val sorts = factJoin.collect {
-        case s: org.apache.spark.sql.execution.SortExec => s
+        // The fact-fact join (the one bucketing targets) must have no
+        // exchange below it; the dimension joins above it are untouched.
+        val factJoin = exchangeFreeFactJoin(bucketed)
+        // And SORT-free: bucketedSilver repartitions onto the bucket
+        // column before the write, so each bucket is a single file and
+        // Spark reuses the sortBy ordering instead of re-sorting under
+        // the SMJ. (With multiple part-files per bucket this assertion
+        // fails — the scan's output ordering is only trusted for
+        // single-file buckets.)
+        val sorts = factJoin.collect {
+          case s: org.apache.spark.sql.execution.SortExec => s
+        }
+        assert(sorts.isEmpty,
+          s"expected sort-free bucketed fact join (single file per bucket), got:\n$factJoin")
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS t_li_b")
+        spark.sql("DROP TABLE IF EXISTS t_ord_b")
       }
-      assert(sorts.isEmpty,
-        s"expected sort-free bucketed fact join (single file per bucket), got:\n$factJoin")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set(bcKey, savedBc)
-      spark.conf.unset(ordKey)
-      spark.sql("DROP TABLE IF EXISTS t_li_b")
-      spark.sql("DROP TABLE IF EXISTS t_ord_b")
     }
+    // The session confs every later spec plans with are back,
+    // GraftSession.configure's ordering flag included.
+    assert(spark.conf.get(ordKey) == "true")
+    assert(spark.conf.get(aqeKey) == savedAqe)
   }
 
   /** The mart's l_orderkey=o_orderkey sort-merge join (the deepest
@@ -142,13 +143,9 @@ class BucketingSpec extends SparkSpec {
   /** Run `body` at shuffle width `n`, AQE off and broadcast disabled
     * (so the fact join plans as the at-scale sort-merge join).
     */
-  private def atWidth[T](n: Int)(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    keys.zip(Seq(n.toString, "false", "-1")).foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
+  private def atWidth[T](n: Int)(body: => T): T =
+    withConfs("spark.sql.shuffle.partitions" -> n.toString, aqeKey -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   private def layoutOf(table: String): (Option[Int], String, Int) = {
     val meta = spark.sessionState.catalog.getTableMetadata(

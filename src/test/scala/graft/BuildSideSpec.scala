@@ -56,16 +56,15 @@ class BuildSideSpec extends SparkSpec {
     assert(partitions(big, 100L) == 8192)
   }
 
-  /** A 32-partition session with both broadcast thresholds off and
-    * AQE's shuffled-hash conversion off, so only the rule's hint picks
-    * the join.
+  /** A 32-partition session with both broadcast thresholds off, so
+    * only the rule's hint picks the join (AQE's shuffled-hash
+    * conversion stays off, as on every session).
     */
   private lazy val wide: SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "32")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
     s
   }
 
@@ -97,6 +96,27 @@ class BuildSideSpec extends SparkSpec {
         // After the action: the final adaptive plan ran the forced rung.
         assert(joinNodes(planOf(df)) == Set(join), s"$name: " + planOf(df).take(1200))
       }
+    }
+  }
+
+  test("past broadcast, an aggregated build side sort-merges: AQE converts no join") {
+    // The shape of the gram-keyed joins (q_text_lm_score,
+    // q_text_boilerplate, q_corpus_contam): a stream joined by key to
+    // its own one-row-per-key aggregate. Each post-shuffle partition
+    // is far under 64 MB here, so a session that let AQE convert
+    // sort-merge joins to shuffled-hash would convert this one.
+    import org.apache.spark.sql.functions._
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      val probe = spark.range(0, 40000).select((col("id") % 10000).as("k"), col("id").as("v"))
+      val perKey = probe.groupBy("k").agg(count(lit(1)).as("n"))
+      val df = probe.join(perKey, "k").agg(count(lit(1)), sum(col("n")))
+      val Array(r) = df.collect()
+      assert((r.getLong(0), r.getLong(1)) == (40000L, 160000L))
+      // After the action: the final adaptive plan.
+      val plan = planOf(df)
+      assert(plan.contains("== Final Plan =="), plan.take(1200))
+      assert(joinNodes(plan) == Set("SortMergeJoin"), plan.take(2400))
     }
   }
 }

@@ -1234,23 +1234,6 @@ class OperatorSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](GraftSession.sessionSpillCompress)
       assert(e.getMessage.contains(GraftSession.SpillCompressKey))
     }
-    // r20: the AQE SMJ→SHJ conversion bound rides the same selector
-    // pattern (runtime-settable, but owned here so every entry point
-    // and leg resolves it identically and _meta can stamp it).
-    assert(live.conf.get(
-      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") ==
-      GraftSession.DefaultShjThreshold)
-    assert(GraftSession.sessionShjThreshold == GraftSession.DefaultShjThreshold)
-    withProp(GraftSession.ShjThresholdKey, "128m") {
-      assert(GraftSession.sessionShjThreshold == "128m")
-    }
-    withProp(GraftSession.ShjThresholdKey, "0") {
-      assert(GraftSession.sessionShjThreshold == "0")
-    }
-    withProp(GraftSession.ShjThresholdKey, "wide") {
-      val e = intercept[IllegalArgumentException](GraftSession.sessionShjThreshold)
-      assert(e.getMessage.contains(GraftSession.ShjThresholdKey))
-    }
   }
 
   // --- windowRank: TopK-aggregate form vs the declared window form ---

@@ -27,6 +27,20 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
 
+  /** Runs `body` with `confs` set on the shared session, then restores
+    * each key's previous value (unsetting a key that had none), so a
+    * case cannot leak a conf into the specs that run after it.
+    */
+  def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Fresh per-suite scratch dir under target/. */
   def tmpDir(name: String): String = {
     val p = java.nio.file.Files.createTempDirectory(

@@ -2,7 +2,7 @@
 # Dev-only bench-leg launcher: one graft.Bench sweep over <sfDir> that
 # writes its per-query record to <side.json>.
 #   Usage: tools/leg.sh <side.json> <sfDir> [ENV=VALUE ...]
-#   e.g.   tools/leg.sh bench_sf30_shj_lz4_r20.json /tmp/graft_sf30 \
+#   e.g.   tools/leg.sh bench_sf30_buildside.json /tmp/graft_sf30 \
 #            SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ATTEMPTS=1 SPARK_DRIVER_MEM=8g
 # A relative <side.json> resolves under the repo root. Each ENV=VALUE is
 # exported before launch (SPARK_GRAFT_CONF, SPARK_GRAFT_BENCH_ONLY,
