@@ -85,43 +85,44 @@ class BucketingSpec extends SparkSpec {
     // layout (the repartition in bucketedSilver). GraftSession.configure
     // sets it on every session, the shared one included.
     withConfs(aqeKey -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        ordKey -> "true") {
-      try {
-        val sfDir = "/root/testdata/sf0.001"
-        operators.VendasMart.bucketedSilver(spark, sfDir, 4,
-          "t_li_b", "t_ord_b")
-        val bucketed = operators.VendasMart.martBucketed(spark, sfDir,
-          "t_li_b", "t_ord_b")
-
-        // Correctness first: identical rows to the plain mart.
-        val plain = operators.VendasMart.mart(spark, sfDir)
-        assert(bucketed.collect().map(_.toSeq).toSet ==
-          plain.collect().map(_.toSeq).toSet)
-
-        // The fact-fact join (the one bucketing targets) must have no
-        // exchange below it; the dimension joins above it are untouched.
-        val factJoin = exchangeFreeFactJoin(bucketed)
-        // And SORT-free: bucketedSilver repartitions onto the bucket
-        // column before the write, so each bucket is a single file and
-        // Spark reuses the sortBy ordering instead of re-sorting under
-        // the SMJ. (With multiple part-files per bucket this assertion
-        // fails — the scan's output ordering is only trusted for
-        // single-file buckets.)
-        val sorts = factJoin.collect {
-          case s: org.apache.spark.sql.execution.SortExec => s
-        }
-        assert(sorts.isEmpty,
-          s"expected sort-free bucketed fact join (single file per bucket), got:\n$factJoin")
-      } finally {
-        spark.sql("DROP TABLE IF EXISTS t_li_b")
-        spark.sql("DROP TABLE IF EXISTS t_ord_b")
-      }
-    }
+      ordKey -> "true")(bucketedMartBody())
     // The session confs every later spec plans with are back,
     // GraftSession.configure's ordering flag included.
     assert(spark.conf.get(ordKey) == "true")
     assert(spark.conf.get(aqeKey) == savedAqe)
   }
+
+  private def bucketedMartBody(): Unit =
+    try {
+      val sfDir = "/root/testdata/sf0.001"
+      operators.VendasMart.bucketedSilver(spark, sfDir, 4,
+        "t_li_b", "t_ord_b")
+      val bucketed = operators.VendasMart.martBucketed(spark, sfDir,
+        "t_li_b", "t_ord_b")
+
+      // Correctness first: identical rows to the plain mart.
+      val plain = operators.VendasMart.mart(spark, sfDir)
+      assert(bucketed.collect().map(_.toSeq).toSet ==
+        plain.collect().map(_.toSeq).toSet)
+
+      // The fact-fact join (the one bucketing targets) must have no
+      // exchange below it; the dimension joins above it are untouched.
+      val factJoin = exchangeFreeFactJoin(bucketed)
+      // And SORT-free: bucketedSilver repartitions onto the bucket
+      // column before the write, so each bucket is a single file and
+      // Spark reuses the sortBy ordering instead of re-sorting under
+      // the SMJ. (With multiple part-files per bucket this assertion
+      // fails — the scan's output ordering is only trusted for
+      // single-file buckets.)
+      val sorts = factJoin.collect {
+        case s: org.apache.spark.sql.execution.SortExec => s
+      }
+      assert(sorts.isEmpty,
+        s"expected sort-free bucketed fact join (single file per bucket), got:\n$factJoin")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS t_li_b")
+      spark.sql("DROP TABLE IF EXISTS t_ord_b")
+    }
 
   /** The mart's l_orderkey=o_orderkey sort-merge join (the deepest
     * one), asserted to have no exchange below it.

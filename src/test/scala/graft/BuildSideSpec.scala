@@ -108,7 +108,7 @@ class BuildSideSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      val probe = spark.range(0, 40000).select((col("id") % 10000).as("k"), col("id").as("v"))
+      val probe = spark.range(0, 40000).select((col("id") % 10000).as("k"))
       val perKey = probe.groupBy("k").agg(count(lit(1)).as("n"))
       val df = probe.join(perKey, "k").agg(count(lit(1)), sum(col("n")))
       val Array(r) = df.collect()

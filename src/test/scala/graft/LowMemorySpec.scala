@@ -11,10 +11,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Memory-cliff failures reproduced at test scale: each case runs in a
-  * child JVM whose Spark memory manager sees 512 MiB, the size at which
-  * a per-partition hash build that fits a 32-core sf30 host's heap
-  * stops fitting a 2-core one. The shared test session has gigabytes
-  * and would never show the failure.
+  * child JVM whose Spark memory manager sees 512 MiB at `local[2]`, so
+  * a per-task memory cliff that sf30 reaches on a large host shows on
+  * test data. The shared test session has gigabytes and never shows it.
   */
 class LowMemorySpec extends AnyFunSuite {
 
@@ -65,7 +64,6 @@ object LowMemoryJoin {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     try {
