@@ -8,11 +8,10 @@ object Bench {
     // Full per-query record (timings + shuffle/spill) goes to a SIDE
     // FILE: the driver's stdout tail window has truncated the head of
     // the inline per-query map two rounds running. Stdout keeps only
-    // the compact summary lines. The side file is ALSO written under a
-    // round-stamped name (bench_queries_r<N>.json) so per-query
-    // shuffle/spill history stays diffable across rounds without git
-    // archaeology. The round is DERIVED FROM REPO STATE, never from
-    // an env var someone must remember (r16: the r15 driver bench ran
+    // the compact summary lines. The side file is written once, and
+    // its _meta.round records the round. The round is DERIVED FROM
+    // REPO STATE, never from an env var someone must remember
+    // (r16: the r15 driver bench ran
     // with a stale SPARK_GRAFT_ROUND=14 and mislabeled the round's
     // canonical record): it is max(BENCH_r<N>.json, CORRECTNESS_r<N>
     // .json in cwd) + 1 — the driver writes both only AFTER this run,
@@ -513,13 +512,6 @@ object Bench {
       ",\n", "\n}\n")
     val sideBytes = side.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     java.nio.file.Files.write(java.nio.file.Paths.get(sidePath), sideBytes)
-    // Skip re-stamping a side path that already carries the round tag
-    // (an explicitly round-named probe file would otherwise double up
-    // as *_r10_r10.json).
-    if (roundTag != "unknown" && !sidePath.endsWith(s"_r$roundTag.json")) {
-      val stamped = sidePath.replaceAll("\\.json$", "") + s"_r$roundTag.json"
-      java.nio.file.Files.write(java.nio.file.Paths.get(stamped), sideBytes)
-    }
     // Compact stdout record, totals first; per-query MINs inline as
     // before (rounded to 3 decimals) so the record is self-contained
     // when the side file isn't collected.

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** One-time session-setup home for the SQL confs every graft entry
@@ -142,6 +143,20 @@ object GraftSession {
       }
     }
 
+  /** Spark prepends this list to `spark.plugins`, so a user's own
+    * plugins are kept alongside the library's.
+    */
+  private val DefaultPluginsKey = "spark.plugins.defaultList"
+
+  /** The `spark.plugins.defaultList` a session is built with: whatever
+    * `new SparkConf()` already sees there (spark-defaults.conf,
+    * `--conf`), plus [[plans.CaseMappingInit]].
+    */
+  private def sessionPlugins: String =
+    (new SparkConf().getOption(DefaultPluginsKey).toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty) :+
+      classOf[plans.CaseMappingInit].getName).distinct.mkString(",")
+
   /** Apply the graft session confs at build time. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
@@ -153,6 +168,8 @@ object GraftSession {
       // the effective values from the live conf.
       .config("spark.io.compression.codec", sessionCodec)
       .config("spark.shuffle.spill.compress", sessionSpillCompress.toString)
+      // Case-mapping table built off the task path (CaseMappingInit).
+      .config(DefaultPluginsKey, sessionPlugins)
       // Propagate the per-bucket sort order of the bucketed-silver
       // tables (VendasMart.bucketedSilver writes one sorted file per
       // bucket) into join planning — SPARK-28113 made the propagation

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -101,9 +102,7 @@ class BucketingSpec extends SparkSpec {
         "t_li_b", "t_ord_b")
 
       // Correctness first: identical rows to the plain mart.
-      val plain = operators.VendasMart.mart(spark, sfDir)
-      assert(bucketed.collect().map(_.toSeq).toSet ==
-        plain.collect().map(_.toSeq).toSet)
+      assertSameRows(bucketed, operators.VendasMart.mart(spark, sfDir))
 
       // The fact-fact join (the one bucketing targets) must have no
       // exchange below it; the dimension joins above it are untouched.
@@ -124,11 +123,26 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS t_ord_b")
     }
 
+  /** A frame's rows as a multiset: each row with its count. */
+  private def rowBag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.groupMapReduce(_.toSeq)(_ => 1)(_ + _)
+
+  private def assertSameBags(got: Map[Seq[Any], Int], want: Map[Seq[Any], Int]): Unit = {
+    val diff = (got.keySet ++ want.keySet).toSeq
+      .filter(r => got.get(r) != want.get(r))
+    assert(diff.isEmpty, s"${diff.size} rows differ in count (got vs want), e.g.:\n" +
+      diff.take(5).map(r => s"$r: ${got.getOrElse(r, 0)} vs ${want.getOrElse(r, 0)}").mkString("\n"))
+  }
+
+  /** Same rows with the same multiplicities: a duplicated or lost row fails. */
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit =
+    assertSameBags(rowBag(got), rowBag(want))
+
   /** The mart's l_orderkey=o_orderkey sort-merge join (the deepest
     * one), asserted to have no exchange below it.
     */
   private def exchangeFreeFactJoin(
-      mart: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+      mart: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
     val plan = mart.queryExecution.executedPlan
     val factJoin = plan.collect {
       case j if j.nodeName.contains("SortMergeJoin") &&
@@ -172,9 +186,25 @@ class BucketingSpec extends SparkSpec {
       }
       val bucketed = operators.VendasMart.martBucketed(spark, sfDir, li, ord)
       exchangeFreeFactJoin(bucketed)
-      assert(bucketed.collect().map(_.toSeq).toSet ==
-        operators.VendasMart.mart(spark, sfDir).collect().map(_.toSeq).toSet)
+      assertSameRows(bucketed, operators.VendasMart.mart(spark, sfDir))
     }
+  }
+
+  test("the bucket-to-bucket mart returns the oracle-checked mart's rows, duplicates included") {
+    // At sf0.01 the orders side fits the broadcast threshold, so the
+    // oracle's q_vendas_mart_bucketed joins without reading the buckets
+    // as buckets. Here broadcast is off and the fact join sort-merges
+    // bucket to bucket; the reference is VendasMart.mart planned at the
+    // session's own thresholds, the plan the oracle checks as vendas_mart.
+    val sfDir = "/root/testdata/sf0.01"
+    val oracleChecked = rowBag(operators.VendasMart.mart(spark, sfDir))
+    val bucketToBucket = atWidth(operators.VendasMart.silverBuckets(spark)) {
+      val (li, ord) = operators.VendasMart.ensureBucketedSilver(spark, sfDir)
+      val m = operators.VendasMart.martBucketed(spark, sfDir, li, ord)
+      exchangeFreeFactJoin(m)
+      rowBag(m)
+    }
+    assertSameBags(bucketToBucket, oracleChecked)
   }
 
   test("a layout stamped at another width rebuilds instead of re-registering") {

@@ -1,11 +1,5 @@
 package graft
 
-import java.lang.management.ManagementFactory
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.TimeUnit
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,31 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LowMemorySpec extends AnyFunSuite {
 
-  /** Runs `main` of `mainClass` in a child JVM with this JVM's class
-    * path and add-opens; returns the exit code and the output.
-    */
-  private def fork(mainClass: String, args: String*): (Int, String) = {
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val addOpens = jvmArgs.zipWithIndex.flatMap {
-      case (a, i) if a == "--add-opens" && i + 1 < jvmArgs.size => Seq(a, jvmArgs(i + 1))
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-      case _ => Nil
-    }
-    val java = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val cmd = Seq(java, "-Xmx1g", "-XX:-UsePerfData") ++ addOpens ++
-      Seq("-cp", sys.props("java.class.path"), mainClass) ++ args
-    val out = Files.createTempFile(Paths.get("target").toAbsolutePath, "lowmem", ".log")
-    val proc = new ProcessBuilder(cmd.asJava)
-      .redirectErrorStream(true).redirectOutput(out.toFile).start()
-    if (!proc.waitFor(10, TimeUnit.MINUTES)) proc.destroyForcibly().waitFor()
-    val log = Files.readString(out)
-    Files.delete(out)
-    (proc.exitValue(), log)
-  }
-
   test("at 512 MiB, 1 M aggregated keys join 4 M probe rows without a hash-build failure") {
     val n = 1000000L
-    val (code, log) = fork(LowMemoryJoin.getClass.getName.stripSuffix("$"), n.toString)
+    val (code, log) = ForkedJvm.run(ForkedJvm.mainOf(LowMemoryJoin), n.toString)
     val tail = log.linesIterator.toSeq.takeRight(40).mkString("\n")
     assert(code == 0, s"child JVM exited $code:\n$tail")
     assert(log.linesIterator.contains(s"rows=${4 * n} pad_chars=${4 * n * 64}"), tail)
