@@ -20,11 +20,12 @@ class CaseMappingInitSpec extends AnyFunSuite {
     val (code, log) = ForkedJvm.run(ForkedJvm.mainOf(CaseMappingChild))
     val tail = log.linesIterator.toSeq.takeRight(40).mkString("\n")
     assert(code == 0, s"child JVM exited $code:\n$tail")
-    val lines = log.linesIterator.toSet
-    assert(lines.contains("case_mapping_loaded=true"), tail)
-    assert(lines.contains("plugins=DefaultsTestPlugin,UserTestPlugin"), tail)
+    def printed(key: String): Option[String] =
+      log.linesIterator.collectFirst { case l if l.startsWith(s"$key=") => l.stripPrefix(s"$key=") }
+    assert(printed("case_mapping_loaded").contains("true"), tail)
+    assert(printed("plugins").contains("DefaultsTestPlugin,UserTestPlugin"), tail)
     val n = CaseMappingChild.Samples.size
-    assert(lines.contains(s"matches_icu=$n/$n"), tail)
+    assert(printed("matches_icu").contains(s"$n/$n"), tail)
   }
 
   test("a missing or failing case-mapping class is swallowed and does not fail executor start") {
