@@ -4,10 +4,11 @@ which ran eager pandas inside PythonOperators with /tmp handoffs.
 
 Here Airflow only LAUNCHES Spark (BASELINE.json "spark_approach"):
 one SparkSubmitOperator per pipeline stage, each invoking
-`graft.tools.RunPipeline <stage>` — per-table scheduling is
-unnecessary because the eight ingest jobs are independent Spark jobs
-inside one application, parallelized by the scheduler rather than by
-Airflow. The same three stages run scheduler-less in CI via
+`graft.tools.RunPipeline <stage>`. The ingest stage runs the eight
+bronze→silver jobs one after another inside one application
+(`IngestJob.runAll`); each is a parallel Spark job over all of its
+table's files, so per-table Airflow tasks would add JVM start-ups, not
+parallelism. The same three stages run scheduler-less in CI via
 `orchestration/run_dag_ci.py` (plain spark-submit subprocesses against
 a fixture bronze layer + embedded Derby as the TB_VENDAS mirror).
 
@@ -46,16 +47,20 @@ with DAG(
         java_class="graft.tools.RunPipeline",
         application_args=[
             "gold", "s3a://silver", "s3a://gold",
-            # Bucketed silver re-layout — the DEFAULT at-scale path
-            # since r18 (wins at every measured rung; the one-time
-            # bucket+sort of the two order_id fact tables makes every
-            # gold rebuild's fact join exchange-free,
-            # OlistVendas.bucketedSilver). Bare, the flag buckets at
-            # the Spark job's spark.sql.shuffle.partitions (Spark's 200
-            # on a cluster unless the job's conf sets it; a local
-            # master's cores when unset); set the `silver_buckets`
-            # Airflow Variable to pin a width, or 0 to fall back to
-            # the plain no-layout form.
+            # Bucketed silver — the DEFAULT at-scale path since r18
+            # (wins at every measured rung: the fact join is
+            # exchange-free). The ingest task writes orders and
+            # order_items bucketed+sorted on order_id and stamps them
+            # (IngestJob.load); this task re-registers them from the
+            # stamp and reads them in place, so no gold run re-writes
+            # either fact table. Bare, the flag asks for the width the
+            # ingest wrote at: the job's spark.sql.shuffle.partitions
+            # (Spark's 200 on a cluster unless the job's conf sets it;
+            # a local master's cores when unset). Set the
+            # `silver_buckets` Airflow Variable to pin a width (a width
+            # the ingest did not write is re-laid-out into the
+            # warehouse on every run, OlistVendas.bucketedSilver), or 0
+            # to fall back to the plain no-layout form.
             "{% set w = var.value.get('silver_buckets', '') %}"
             "--bucketed-silver{{ '=' ~ w if w else '' }}",
             "{{ var.value.mysql_jdbc_url }}", "TB_VENDAS",

@@ -204,31 +204,36 @@ def main():
                  "--plain-silver", derby, "TB_VENDAS")
     check = spark_submit(jar, "STAGE OK check", "check", gold, derby, "TB_VENDAS")
 
-    # The bucketed-silver leg (the DEFAULT path; width pinned to 4 for
-    # the 3-row CI corpus via the same override the DAG's
-    # `silver_buckets` variable uses): same gold stage through the same
-    # entry point, fact sides re-laid-out bucketed+sorted on order_id
-    # first. The mirror row count must agree with the plain leg — the
-    # layout is a physical re-organization, never a semantic change.
-    gold_b = os.path.join(work, "gold_bucketed")
-    spark_submit(jar, "STAGE OK gold", "gold", silver, gold_b,
-                 "--bucketed-silver=4", derby, "TB_VENDAS")
-    check_b = spark_submit(jar, "STAGE OK check", "check", gold_b,
-                           derby, "TB_VENDAS")
-    assert stage_rows(check_b) == stage_rows(check), \
-        f"bucketed gold leg changed the row count: {check_b} vs {check}"
-    # The DAG's default, a bare flag: the layout at the session's
-    # width (local[4]: 4 buckets), rebuilt in a fresh JVM over the
-    # warehouse the previous leg left behind.
-    gold_d = os.path.join(work, "gold_default")
-    gold_line = spark_submit(jar, "STAGE OK gold", "gold", silver, gold_d,
-                             "--bucketed-silver", derby, "TB_VENDAS")
+    # The bucketed-silver legs. The ingest wrote orders and
+    # order_items bucketed on order_id at its session's width (local[4]:
+    # 4 buckets) and stamped them; each leg below is a fresh JVM whose
+    # catalog has never seen them. The mirror row count must agree with
+    # the plain leg — the layout is a physical re-organization, never a
+    # semantic change.
+    def bucketed_leg(name, flag, layout):
+        gold_x = os.path.join(work, name)
+        gold_line = spark_submit(jar, "STAGE OK gold", "gold", silver, gold_x,
+                                 flag, derby, "TB_VENDAS")
+        assert f" layout={layout} " in gold_line, \
+            f"{flag} leg expected layout={layout}: {gold_line}"
+        check_x = spark_submit(jar, "STAGE OK check", "check", gold_x,
+                               derby, "TB_VENDAS")
+        assert stage_rows(check_x) == stage_rows(check), \
+            f"{flag} gold leg changed the row count: {check_x} vs {check}"
+        return gold_line
+
+    # Width pinned to the ingest's, through the same override the DAG's
+    # `silver_buckets` variable uses: gold re-registers the ingest's
+    # layout from its stamp and re-writes neither fact table.
+    bucketed_leg("gold_bucketed", "--bucketed-silver=4", "silver")
+    # The DAG's default, a bare flag: the same width rule as the
+    # ingest, so the same reuse.
+    gold_line = bucketed_leg("gold_default", "--bucketed-silver", "silver")
     assert " buckets=4 " in gold_line, \
         f"bare --bucketed-silver did not bucket at the session's cores: {gold_line}"
-    check_d = spark_submit(jar, "STAGE OK check", "check", gold_d,
-                           derby, "TB_VENDAS")
-    assert stage_rows(check_d) == stage_rows(check), \
-        f"default-width gold leg changed the row count: {check_d} vs {check}"
+    # A width the ingest did not write: the re-layout into the
+    # warehouse, over whatever an earlier run left there.
+    bucketed_leg("gold_relayout", "--bucketed-silver=3", "rebuilt")
 
     # Grain parity, both implementations of the reference's vendas
     # dataflow, one script — orchestration and registry can't drift:

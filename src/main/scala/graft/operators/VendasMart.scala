@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.PersistedLayout
 
 /** Flagship denormalized sales mart — the reference's silver→gold
   * "vendas" job re-expressed Spark-first over the harness star schema.
@@ -83,20 +84,15 @@ object VendasMart {
     *
     * Bucket metadata lives in the session catalog (`saveAsTable` —
     * path-only parquet has nowhere to record it), so the tables land
-    * in the warehouse under the given names.
+    * in the warehouse under the given names; a location a previous JVM
+    * left there without a catalog entry is cleared first
+    * ([[PersistedLayout.clearStaleLocation]]).
     */
   def bucketedSilver(spark: SparkSession, sfDir: String, nBuckets: Int,
       liTable: String = "graft_silver_lineitem_b",
       ordTable: String = "graft_silver_orders_b"): Unit = {
-    // `mode("overwrite")` only overwrites a table the CATALOG knows.
-    // With the default in-memory catalog, a warehouse directory left
-    // by a previous JVM (killed run, fresh session over the same repo)
-    // is stale data with no catalog entry, and saveAsTable fails with
-    // LOCATION_ALREADY_EXISTS instead of overwriting. Clear such
-    // orphaned locations first; a table the catalog DOES know follows
-    // the normal overwrite path untouched.
-    clearStaleLocation(spark, liTable)
-    clearStaleLocation(spark, ordTable)
+    PersistedLayout.clearStaleLocation(spark, liTable)
+    PersistedLayout.clearStaleLocation(spark, ordTable)
     Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount")
       .repartition(nBuckets, col("l_orderkey"))
@@ -109,25 +105,6 @@ object VendasMart {
       .mode("overwrite").format("parquet").saveAsTable(ordTable)
   }
 
-  /** Delete a managed-table location that exists on disk but has no
-    * catalog entry (see [[bucketedSilver]]). Default-database managed
-    * tables live at `<warehouse.dir>/<name lowercase>`.
-    */
-  private[graft] def clearStaleLocation(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table)) dropLocation(spark, table)
-
-  /** Unconditionally delete a table's default warehouse location —
-    * the rebuild-path companion to a `DROP TABLE IF EXISTS` (dropping
-    * an EXTERNAL table leaves its files; the subsequent managed CTAS
-    * into the non-empty location would throw).
-    */
-  private def dropLocation(spark: SparkSession, table: String): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-  }
-
   /** The mart over a bucketed silver layout (see [[bucketedSilver]]):
     * identical dataflow, fact sides read from the bucketed catalog
     * tables so the l_orderkey=o_orderkey SMJ plans exchange-free.
@@ -137,18 +114,30 @@ object VendasMart {
       ordTable: String = "graft_silver_orders_b"): DataFrame =
     martFrom(spark, sfDir, spark.table(liTable), spark.table(ordTable))
 
-  /** Bucket count of a silver layout written through `spark`: the
-    * session's shuffle width, the width [[BuildSide]] sizes joins at. A
-    * bucketed join runs one task per bucket, so fewer buckets than the
-    * width idle the difference in every downstream mart build
-    * (measured at sf10: half as many buckets as cores gave the bucketed
-    * mart no wall-clock win despite the elided exchange), and more
-    * buckets than the width only add small files and task waves. A
-    * deployment sizes the layout by setting the shuffle width of the
-    * session that writes it.
+  /** Bucket count of a silver layout written through `spark`: the one
+    * width rule the ingest's keyed silver tables, `RunPipeline gold`
+    * and `mart`, and this registry's layout all follow, so that a layout
+    * one JVM writes is the width the next JVM asks for.
+    *   - The shuffle width the user set: the width [[BuildSide]] sizes
+    *     joins at. A bucketed join runs one task per bucket, so fewer
+    *     buckets than the width idle the difference in every downstream
+    *     mart build (measured at sf10: half as many buckets as cores
+    *     gave the bucketed mart no wall-clock win despite the elided
+    *     exchange), and more buckets than the width only add small
+    *     files and task waves.
+    *   - Unset on a `local[...]` master, the session's cores
+    *     (`defaultParallelism`), not Spark's cluster-sized 200.
+    *   - Unset on a cluster master, the session's shuffle width:
+    *     executors may still be registering at startup, so
+    *     `defaultParallelism` does not yet give the cluster's width.
+    * A deployment sizes the layout by setting the shuffle width of the
+    * sessions that write and read it.
     */
   def silverBuckets(spark: SparkSession): Int =
-    spark.sessionState.conf.numShufflePartitions
+    if (!spark.sessionState.conf.contains(
+        org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS.key) &&
+      spark.sparkContext.isLocal) spark.sparkContext.defaultParallelism
+    else spark.sessionState.conf.numShufflePartitions
 
   /** [[silverBuckets]] of the active session. */
   def SilverBuckets: Int = silverBuckets(SparkSession.active)
@@ -189,9 +178,15 @@ object VendasMart {
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount")
       val ordSrc = Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_custkey", "o_orderdate")
-      val reused =
-        reRegisterSilver(spark, sfDir, li, "l_orderkey", liSrc.schema, nBuckets) &&
-        reRegisterSilver(spark, sfDir, ord, "o_orderkey", ordSrc.schema, nBuckets)
+      // Fingerprint the source corpus BEFORE a build reads it: a
+      // corpus regenerated between the build's read and a post-build
+      // listing would stamp the NEW listing onto buckets built from
+      // the OLD data — the exact staleness the stamp exists to catch.
+      val src = sourceStamp(spark, sfDir, nBuckets)
+      def reuse(table: String, key: String, schema: org.apache.spark.sql.types.StructType) =
+        PersistedLayout.reRegister(spark, table, PersistedLayout.warehousePath(spark, table),
+          key, schema, nBuckets, src)
+      val reused = reuse(li, "l_orderkey", liSrc.schema) && reuse(ord, "o_orderkey", ordSrc.schema)
       if (!reused) {
         // The reuse attempt may have half-succeeded (lineitem
         // re-registered as an EXTERNAL table, orders refused — e.g. a
@@ -203,137 +198,34 @@ object VendasMart {
         // deletes BOTH warehouse locations unconditionally.
         Seq(li, ord).foreach { t =>
           spark.sql(s"DROP TABLE IF EXISTS $t")
-          dropLocation(spark, t)
+          PersistedLayout.dropLocation(spark, t)
         }
-        // Fingerprint the source corpus BEFORE the build reads it: a
-        // corpus regenerated between the build's read and a post-build
-        // listing would stamp the NEW listing onto buckets built from
-        // the OLD data — the exact staleness the stamp exists to catch.
-        val src = sourceStamp(spark, sfDir, nBuckets)
         bucketedSilver(spark, sfDir, nBuckets, li, ord)
         // Stamp only on a fresh build: re-stamping on the reuse path
         // would re-date a layout built from an OLDER corpus if the
         // source were regenerated mid-session.
-        stampSilverWith(spark, li, src)
-        stampSilverWith(spark, ord, src)
+        Seq(li, ord).foreach(t =>
+          PersistedLayout.stamp(spark, PersistedLayout.warehousePath(spark, t), src))
       }
       (nBuckets, li, ord)
     })
     (li, ord)
   }
 
-  /** Re-attach a bucketed-silver layout left by a PREVIOUS session.
-    *
-    * The layout lives in the warehouse directory, but the bucket/sort
-    * metadata lives in the session catalog — and the default catalog
-    * is in-memory, so a new JVM sees the files with no table entry and
-    * [[bucketedSilver]] would delete and rebuild them (75 s of every
-    * sf10 bench leg's index_build for a layout that production
-    * amortizes exactly once). Spark's own answer to "files already
-    * bucketed, catalog empty" is external-table DDL: `CREATE TABLE …
-    * USING PARQUET CLUSTERED BY … SORTED BY … INTO n BUCKETS
-    * LOCATION path` re-registers the existing bucket files (bucket
-    * ids are carried in the writer's file names) without touching a
-    * byte.
-    *
-    * Staleness guard: a `_graft_src_stamp` file written next to the
-    * bucket files records the SOURCE corpus's (path, length, mtime)
-    * listing at build time. Reuse happens only when the current
-    * source listing matches byte-for-byte — a regenerated corpus
-    * under the same dir (the scale-ladder workflow: gen_scale.py
-    * overwrites /tmp/graft_sfN) mismatches and triggers a rebuild,
-    * never a silent read of stale buckets. The stamp also records the
-    * bucket count, so a layout built at another width rebuilds; a
-    * table this session already knows is reused only at `nBuckets`.
-    *
-    * @return true iff the existing layout was re-registered.
+  /** The corpus fingerprint a registry layout's stamp records (see
+    * [[PersistedLayout]]): the bucket count, then every data file under
+    * the sf dir's lineitem/orders parquet as (path, length, mtime)
+    * lines, so a corpus regenerated under the same dir (the
+    * scale-ladder workflow: gen_scale.py overwrites /tmp/graft_sfN) or
+    * a layout built at another width rebuilds instead of re-registering.
+    * Without the re-register, every new JVM would rebuild the layout
+    * (75 s of every sf10 bench leg's index_build for a layout that
+    * production builds once).
     */
-  private[graft] def reRegisterSilver(spark: SparkSession, sfDir: String,
-      table: String, bucketCol: String,
-      schema: org.apache.spark.sql.types.StructType, nBuckets: Int): Boolean = {
-    if (spark.catalog.tableExists(table))
-      return spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-        .bucketSpec.exists(_.numBuckets == nBuckets)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp = new org.apache.hadoop.fs.Path(path, "_graft_src_stamp")
-    if (!fs.exists(path) || !fs.exists(stamp)) return false
-    val recorded =
-      try {
-        val in = fs.open(stamp)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      } catch { case _: Throwable => return false }
-    // The stamp records BOTH sides of the contract: the source corpus
-    // it was built from AND the layout's own bucket-file count. The
-    // second check catches a directory whose stamp survived but whose
-    // bucket files were partially deleted — Spark would silently scan
-    // whatever files remain and return fewer rows.
-    if (recorded != s"${sourceStamp(spark, sfDir, nBuckets)}\n${layoutLine(fs, path)}")
-      return false
-    spark.sql(
-      s"""CREATE TABLE $table (${schema.toDDL}) USING PARQUET
-         |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-         |INTO $nBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-    true
-  }
-
-  /** The source-corpus listing the stamp records, after the layout's
-    * bucket count: every regular file under the sf dir's
-    * lineitem/orders parquet, as (path, length, mtime) lines — the
-    * cheapest fingerprint that still catches a regenerated corpus
-    * (gen_scale.py rewrites both files).
-    */
-  private def sourceStamp(spark: SparkSession, sfDir: String, nBuckets: Int): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    (s"buckets=$nBuckets" +:
-    Seq("lineitem.parquet", "orders.parquet").flatMap { name =>
-      val p = new org.apache.hadoop.fs.Path(sfDir, name)
-      val fs = p.getFileSystem(conf)
-      def files(s: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(files)
-        else Seq(s)
-      if (fs.exists(p)) files(fs.getFileStatus(p))
-        .sortBy(_.getPath.toString)
-        .map(s => s"${s.getPath} ${s.getLen} ${s.getModificationTime}")
-      else Nil
-    }).mkString("\n")
-  }
-
-  /** The layout's own fingerprint line: count of data files directly
-    * under the table directory (bucket part-files; `_`/`.`-prefixed
-    * metadata excluded). Recorded at stamp time and re-checked at
-    * re-register so a partially-deleted layout never silently reuses.
-    */
-  private def layoutLine(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): String = {
-    val n = fs.listStatus(path).count { s =>
-      val name = s.getPath.getName
-      s.isFile && !name.startsWith("_") && !name.startsWith(".")
-    }
-    s"layoutFiles=$n"
-  }
-
-  private[graft] def stampSilver(spark: SparkSession, sfDir: String, table: String,
-      nBuckets: Int): Unit =
-    stampSilverWith(spark, table, sourceStamp(spark, sfDir, nBuckets))
-
-  /** Stamp a freshly-built layout with a PRE-BUILD source fingerprint
-    * (see [[ensureBucketedSilver]]) plus the layout's own file count.
-    */
-  private[graft] def stampSilverWith(spark: SparkSession, table: String, src: String): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_graft_src_stamp"), true)
-    try out.write(s"$src\n${layoutLine(fs, path)}"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[graft] def sourceStamp(spark: SparkSession, sfDir: String, nBuckets: Int): String =
+    (s"buckets=$nBuckets" +: Seq("lineitem.parquet", "orders.parquet").flatMap(name =>
+      PersistedLayout.listing(spark, new org.apache.hadoop.fs.Path(sfDir, name))))
+      .mkString("\n")
 
   /** The pivot side of the mart's last join (r12, closing the sf10
     * spill diagnosis). The mart's one residual at-scale spill was the

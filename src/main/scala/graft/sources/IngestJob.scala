@@ -6,9 +6,11 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StringType, StructType}
+
+import graft.operators.VendasMart
 
 /** One parameterized bronze→silver ingest job — the Spark-first
   * re-expression of the reference's eight near-identical DAG scripts
@@ -33,8 +35,9 @@ import org.apache.spark.sql.types.TimestampType
   *     reference, `…orders…py:66-81`; see SURVEY.md §1 quirk) is made
   *     effective here: `tsCols` are cast to TimestampType in silver.
   *   - S5+S6 parquet-to-bucket (`…customer…py:71-78`) become a direct
-  *     `write.parquet` to the silver root (s3a:// URI at scale —
-  *     same code path).
+  *     Parquet write to the silver root (s3a:// URI at scale — same
+  *     code path); the two `order_id`-keyed fact tables are written
+  *     bucketed on it (see [[load]]).
   *   - S8 cleanup is unnecessary (no staging files).
   */
 final class IngestJob(spec: TableSpec) {
@@ -94,15 +97,63 @@ final class IngestJob(spec: TableSpec) {
   def transform(df: DataFrame): DataFrame =
     spec.tsCols.foldLeft(df)((d, c) => d.withColumn(c, try_to_timestamp(col(c))))
 
-  /** Silver sink. `singleObject = true` mirrors the reference's
+  /** Silver sink at `<silverRoot>/<prefix>`.
+    *
+    * A spec with a `bucketKey` is written in the layout the gold mart's
+    * fact join reads: repartitioned on the key to
+    * [[VendasMart.silverBuckets]] partitions, then `bucketBy`/`sortBy`
+    * the key through `saveAsTable` with the silver prefix as its path.
+    * That is an external table with one file per bucket, and the same
+    * Parquet at the same path, so plain readers (the checks,
+    * `--plain-silver` gold, the incremental mart) are unaffected. The
+    * ingest pays the key's shuffle once; every gold run then joins
+    * bucket to bucket without re-writing either fact table. After the
+    * files, a [[PersistedLayout]] stamp records the key, the width and
+    * the table's own file listing, so that gold in another JVM can
+    * re-register the files, and a rewritten or partly deleted
+    * directory never matches.
+    *
+    * `singleObject = true` mirrors the reference's
     * one-parquet-object-per-table layout (`…customer…py:71-78`) for
-    * small tables; leave it false at scale so every executor writes its
-    * partition.
+    * small tables and writes plain Parquet; leave it false at scale so
+    * every executor writes its partition.
     */
   def load(df: DataFrame, silverRoot: String, singleObject: Boolean = false): Unit = {
-    val out = if (singleObject) df.coalesce(1) else df
-    out.write.mode("overwrite").parquet(s"$silverRoot/${spec.prefix}")
+    val spark = df.sparkSession
+    val dir = IngestJob.silverDir(spark, silverRoot, spec)
+    (if (singleObject) None else spec.bucketKey) match {
+      case Some(key) =>
+        val n = VendasMart.silverBuckets(spark)
+        df.repartition(n, col(key))
+          .write.bucketBy(n, key).sortBy(key)
+          .option("path", dir.toString).mode("overwrite").format("parquet")
+          .saveAsTable(IngestJob.silverTable(spec))
+        PersistedLayout.stamp(spark, dir, IngestJob.fingerprint(spark, dir, key, n))
+      case None =>
+        val out = if (singleObject) df.coalesce(1) else df
+        out.write.mode("overwrite").parquet(dir.toString)
+    }
   }
+
+  /** The session's table name for this spec's ingest-written layout at
+    * `silverRoot`, if the files there are that layout at width `n`
+    * (their stamp matches); re-registered from the stamp when the
+    * catalog does not hold it there, as in a new JVM.
+    */
+  private[graft] def bucketedTable(spark: SparkSession, silverRoot: String,
+      n: Int): Option[String] = {
+    val dir = IngestJob.silverDir(spark, silverRoot, spec)
+    val table = IngestJob.silverTable(spec)
+    spec.bucketKey.filter(key => PersistedLayout.reRegister(spark, table, dir, key,
+      silverSchema(spark), n, IngestJob.fingerprint(spark, dir, key, n))).map(_ => table)
+  }
+
+  /** The schema [[run]] writes, from analysing the pipeline over an
+    * empty all-string frame: no file is read.
+    */
+  private def silverSchema(spark: SparkSession): StructType =
+    transform(align(spark.createDataFrame(java.util.List.of[Row](),
+      StructType(spec.schema.map(_.copy(dataType = StringType)))))).schema
 
   /** extract → transform → load, one Spark job (the reference's four
     * Airflow tasks with their process boundaries and /tmp IR removed).
@@ -114,6 +165,26 @@ final class IngestJob(spec: TableSpec) {
 
 object IngestJob {
   def apply(spec: TableSpec): IngestJob = new IngestJob(spec)
+
+  /** Catalog name of a keyed spec's silver table. One name per spec:
+    * an ingest into another silver root re-points it there.
+    */
+  private[graft] def silverTable(spec: TableSpec): String = s"olist_silver_${spec.name}"
+
+  /** A spec's silver directory, qualified: a relative `path` given to
+    * `saveAsTable` would resolve under the warehouse, not where plain
+    * Parquet readers look.
+    */
+  private def silverDir(spark: SparkSession, silverRoot: String, spec: TableSpec): Path = {
+    val dir = new Path(s"$silverRoot/${spec.prefix}")
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
+  }
+
+  /** What a keyed silver table's stamp records: its bucket key and
+    * width, then its own data-file listing.
+    */
+  private def fingerprint(spark: SparkSession, dir: Path, key: String, n: Int): String =
+    (s"bucketBy=$key buckets=$n" +: PersistedLayout.listing(spark, dir)).mkString("\n")
 
   /** A file's first line (its CSV header), read through Hadoop's
     * FileSystem and the codec its extension names, as Spark reads it;
@@ -130,7 +201,9 @@ object IngestJob {
     finally reader.close()
   }
 
-  /** Run all eight bronze→silver jobs (the whole reference b2s layer). */
+  /** Run all eight bronze→silver jobs (the whole reference b2s layer),
+    * one after another in this application.
+    */
   def runAll(spark: SparkSession, bronzeRoot: String, silverRoot: String): Unit =
     OlistCatalog.all.foreach(IngestJob(_).run(spark, bronzeRoot, silverRoot))
 }

@@ -16,12 +16,18 @@ import org.apache.spark.sql.types._
   * parses with `pd.to_datetime` — a dead no-op there (the result is
   * discarded, `…orders…py:66-81`); here the cast is effective, which is
   * the evident intent.
+  *
+  * `bucketKey` names the join key the silver table is written bucketed
+  * and sorted on (see [[IngestJob.load]]): `order_id` for the two fact
+  * tables the gold mart joins on it (`s2g/vendas.py:107-111`), none
+  * elsewhere.
   */
 final case class TableSpec(
     name: String,
     prefix: String,
     schema: StructType,
-    tsCols: Seq[String] = Nil)
+    tsCols: Seq[String] = Nil,
+    bucketKey: Option[String] = None)
 
 object OlistCatalog {
 
@@ -45,14 +51,16 @@ object OlistCatalog {
     tsCols = Seq(
       "order_purchase_timestamp", "order_approved_at",
       "order_delivered_carrier_date", "order_delivered_customer_date",
-      "order_estimated_delivery_date"))
+      "order_estimated_delivery_date"),
+    bucketKey = Some("order_id"))
 
   val orderItems: TableSpec = TableSpec(
     "order_items", "olist/order_items",
     StructType(Seq(
       s("order_id"), i("order_item_id"), s("product_id"), s("seller_id"),
       s("shipping_limit_date"), d("price"), d("freight_value"))),
-    tsCols = Seq("shipping_limit_date"))
+    tsCols = Seq("shipping_limit_date"),
+    bucketKey = Some("order_id"))
 
   val orderPayments: TableSpec = TableSpec(
     "order_payments", "olist/order_payments",

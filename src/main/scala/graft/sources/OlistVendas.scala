@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.VendasMart
-
 /** The reference's silver→gold "vendas" mart on the *actual Olist
   * schemas* (`scripts/silver_to_gold/ingestion_vendas_silver_to_gold.py`)
   * — the literal port, exercised end-to-end by OlistPipelineSpec over
@@ -37,15 +35,17 @@ object OlistVendas {
   val MoneyCols: Seq[String] =
     Seq("price", "freight_value") ++ PaymentTypes
 
+  /** The columns the mart reads from its two fact sides. */
+  private val ItemCols = Seq("order_id", "product_id", "price", "freight_value").map(col) // :77
+  private val OrderCols = Seq("order_id", "customer_id", "order_purchase_timestamp").map(col) // :65
+
   def silver(spark: SparkSession, silverRoot: String, spec: TableSpec): DataFrame =
     spark.read.parquet(s"$silverRoot/${spec.prefix}")
 
   def mart(spark: SparkSession, silverRoot: String): DataFrame =
     martOver(spark, silverRoot,
-      silver(spark, silverRoot, OlistCatalog.orderItems)
-        .select("order_id", "product_id", "price", "freight_value"),   // :77
-      silver(spark, silverRoot, OlistCatalog.orders)
-        .select("order_id", "customer_id", "order_purchase_timestamp")) // :65
+      silver(spark, silverRoot, OlistCatalog.orderItems).select(ItemCols: _*),
+      silver(spark, silverRoot, OlistCatalog.orders).select(OrderCols: _*))
 
   /** The mart with explicit fact sides — shared by the plain path and
     * the bucketed-silver path so the dataflow cannot drift between
@@ -69,36 +69,50 @@ object OlistVendas {
     martFrom(items, orders, products, customers, paymentsPivot)
   }
 
-  /** Bucketed silver layout for the pipeline's two `order_id` fact
-    * sides (the `RunPipeline gold` default; `--bucketed-silver=N` sets
-    * the width, which otherwise `RunPipeline.bucketsIn` resolves from
-    * the session): re-writes
-    * order_items and orders bucketed+sorted on the join key, so every
-    * downstream gold build sort-merge-joins bucket-to-bucket with no
-    * exchange — the [[graft.operators.VendasMart.bucketedSilver]]
-    * layout applied to the production entry point. The repartition
-    * puts each bucket in one file (see the VendasMart scaladoc for the
-    * sort-elision contract), and a warehouse location a previous JVM
-    * left without a catalog entry is cleared first. Returns the
-    * catalog table names.
+  /** The re-layout: the cache-miss path of [[bucketedMart]], for
+    * silver the ingest did not write bucketed at `nBuckets` (written
+    * with `singleObject`, by older code, at another width, or changed
+    * since its stamp). Re-writes the mart's columns of order_items and
+    * orders into the warehouse, bucketed+sorted on `order_id` — the
+    * [[graft.operators.VendasMart.bucketedSilver]] layout applied to
+    * the production entry point. The repartition puts each bucket in
+    * one file (see the VendasMart scaladoc for the sort-elision
+    * contract), and a warehouse location a previous JVM left without a
+    * catalog entry is cleared first. Returns the catalog table names.
     */
   def bucketedSilver(spark: SparkSession, silverRoot: String,
       nBuckets: Int): (String, String) = {
     val itemsT = "olist_silver_items_b"
     val ordersT = "olist_silver_orders_b"
-    VendasMart.clearStaleLocation(spark, itemsT)
-    VendasMart.clearStaleLocation(spark, ordersT)
-    silver(spark, silverRoot, OlistCatalog.orderItems)
-      .select("order_id", "product_id", "price", "freight_value")
-      .repartition(nBuckets, col("order_id"))
-      .write.bucketBy(nBuckets, "order_id").sortBy("order_id")
-      .mode("overwrite").format("parquet").saveAsTable(itemsT)
-    silver(spark, silverRoot, OlistCatalog.orders)
-      .select("order_id", "customer_id", "order_purchase_timestamp")
-      .repartition(nBuckets, col("order_id"))
-      .write.bucketBy(nBuckets, "order_id").sortBy("order_id")
-      .mode("overwrite").format("parquet").saveAsTable(ordersT)
+    Seq(OlistCatalog.orderItems -> (itemsT, ItemCols), OlistCatalog.orders -> (ordersT, OrderCols))
+      .foreach { case (spec, (table, cols)) =>
+        PersistedLayout.clearStaleLocation(spark, table)
+        silver(spark, silverRoot, spec).select(cols: _*)
+          .repartition(nBuckets, col("order_id"))
+          .write.bucketBy(nBuckets, "order_id").sortBy("order_id")
+          .mode("overwrite").format("parquet").saveAsTable(table)
+      }
     (itemsT, ordersT)
+  }
+
+  /** The mart over the `order_id`-bucketed fact sides at width
+    * `nBuckets`, so its fact join sort-merges bucket to bucket with no
+    * exchange, and where those sides came from: `silver` when the
+    * ingest wrote both silver tables in that layout
+    * ([[IngestJob.load]]; held by this session's catalog, or
+    * re-registered from their stamps as a new JVM must), else
+    * `rebuilt` through [[bucketedSilver]].
+    */
+  private[graft] def bucketedMart(spark: SparkSession, silverRoot: String,
+      nBuckets: Int): (DataFrame, String) = {
+    val inPlace = for {
+      items <- IngestJob(OlistCatalog.orderItems).bucketedTable(spark, silverRoot, nBuckets)
+      orders <- IngestJob(OlistCatalog.orders).bucketedTable(spark, silverRoot, nBuckets)
+    } yield (items, orders)
+    val ((itemsT, ordersT), layout) =
+      inPlace.map(_ -> "silver").getOrElse(bucketedSilver(spark, silverRoot, nBuckets) -> "rebuilt")
+    (martOver(spark, silverRoot, spark.table(itemsT).select(ItemCols: _*),
+      spark.table(ordersT).select(OrderCols: _*)), layout)
   }
 
   /** The mart projection shared by the batch and streaming variants:
@@ -144,9 +158,8 @@ object OlistVendas {
     val items = spark.readStream
       .schema(itemsSchema)
       .parquet(s"$silverRoot/${OlistCatalog.orderItems.prefix}")
-      .select("order_id", "product_id", "price", "freight_value")
-    val orders = silver(spark, silverRoot, OlistCatalog.orders)
-      .select("order_id", "customer_id", "order_purchase_timestamp")
+      .select(ItemCols: _*)
+    val orders = silver(spark, silverRoot, OlistCatalog.orders).select(OrderCols: _*)
     val products = silver(spark, silverRoot, OlistCatalog.products)
       .select("product_category_name", "product_id")
     val customers = silver(spark, silverRoot, OlistCatalog.customers)
@@ -176,20 +189,21 @@ object OlistVendas {
 
   /** Gold parquet sink + optional JDBC mirror — the reference's
     * `to_parquet`+upload (`:152-162`) and `to_sql(if_exists='replace')`
-    * (`:173-180`). With `buckets` set, the fact sides are first
-    * re-laid-out through [[bucketedSilver]] (the one-time cost a real
-    * ingest pays) and the mart reads the bucketed tables.
+    * (`:173-180`). With `buckets` set, the mart reads the fact sides
+    * bucketed at that width ([[bucketedMart]]): in place when the
+    * ingest wrote them so, the DAG's case and the default, else through
+    * the [[bucketedSilver]] re-layout. Returns where the fact sides
+    * came from: `silver`, `rebuilt`, or `plain` without `buckets`.
     */
   def run(spark: SparkSession, silverRoot: String, goldRoot: String,
       jdbc: Option[Sinks.JdbcTarget] = None,
-      buckets: Option[Int] = None): Unit = {
-    val m = buckets match {
-      case Some(n) =>
-        val (itemsT, ordersT) = bucketedSilver(spark, silverRoot, n)
-        martOver(spark, silverRoot, spark.table(itemsT), spark.table(ordersT))
-      case None => mart(spark, silverRoot)
+      buckets: Option[Int] = None): String = {
+    val (m, layout) = buckets match {
+      case Some(n) => bucketedMart(spark, silverRoot, n)
+      case None => (mart(spark, silverRoot), "plain")
     }
     m.write.mode("overwrite").parquet(s"$goldRoot/olist/vendas")
     jdbc.foreach(t => Sinks.jdbcReplace(m, t))
+    layout
   }
 }

@@ -12,8 +12,9 @@ import graft.sources.{IngestJob, OlistVendas, Sinks}
   * `orchestration/run_dag_ci.py` drives as plain subprocesses in CI.
   *
   *   RunPipeline ingest <bronzeRoot> <silverRoot>
-  *     all eight bronze→silver ingest jobs (the reference's per-table
-  *     extract/transform/load DAG chains).
+  *     all eight bronze→silver ingest jobs, one after another (the
+  *     reference's per-table extract/transform/load DAG chains);
+  *     orders and order_items land bucketed on order_id.
   *   RunPipeline gold <silverRoot> <goldRoot> [jdbcUrl table]
   *     silver→gold vendas mart parquet, plus the full-replace JDBC
   *     mirror when a target is given (the reference's MySQL
@@ -44,12 +45,15 @@ object RunPipeline {
         println(s"STAGE OK ingest bronze=$bronze silver=$silver")
       }
     case "gold" :: silver :: gold :: rest0 =>
-      // Bucketed silver re-layout is the DEFAULT at-scale path (r18
-      // flip; it wins at every measured rung since r11 — sf30: 100.8
-      // vs 122.3 s — by making the fact join exchange-free, and the
-      // one-time layout cost amortizes over every downstream gold
-      // rebuild). The width is bucketsIn's default, which
-      // `--bucketed-silver=N` overrides; `--plain-silver` (or
+      // Bucketed silver is the DEFAULT at-scale path (r18 flip; it
+      // wins at every measured rung since r11 — sf30: 100.8 vs 122.3 s
+      // — by making the fact join exchange-free). The ingest writes
+      // the two order_id fact tables in that layout at
+      // VendasMart.silverBuckets, so at the default width gold reads
+      // them in place (layout=silver) and no gold run re-writes them;
+      // a width the ingest did not write (`--bucketed-silver=N`), or
+      // silver without a matching stamp, is re-laid-out into the
+      // warehouse first (layout=rebuilt). `--plain-silver` (or
       // `--bucketed-silver=0`) keeps the plain no-layout form for
       // no-warehouse targets or tiny corpora.
       // Remaining positionals are the optional JDBC target.
@@ -63,10 +67,10 @@ object RunPipeline {
           case _ => None
         }
         val t0 = System.nanoTime()
-        OlistVendas.run(s, silver, gold, jdbc, buckets)
+        val from = OlistVendas.run(s, silver, gold, jdbc, buckets)
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"STAGE OK gold silver=$silver gold=$gold " +
-          f"jdbc=${jdbc.map(_.table)} buckets=${buckets.getOrElse(0)} secs=$secs%.2f")
+          f"jdbc=${jdbc.map(_.table)} buckets=${buckets.getOrElse(0)} layout=$from secs=$secs%.2f")
       }
     case "check" :: gold :: url :: table :: Nil =>
       withSpark { s =>
@@ -83,10 +87,11 @@ object RunPipeline {
       // Registry-side (harness star schema) gold build through the
       // production entry point, for end-to-end layout A/Bs at real
       // scale. Bucketed silver is the default (r18 flip, same
-      // rationale as `gold`): the fact sides are re-laid-out first
-      // (timed separately — that cost amortizes over every downstream
-      // build) and the mart reads the bucketed catalog tables.
-      // `--plain-silver` keeps the no-layout form for A/B.
+      // rationale as `gold`): the fact sides are laid out first, or
+      // re-registered from a previous JVM's stamped layout (timed
+      // separately as relayout_s), and the mart reads the bucketed
+      // catalog tables. `--plain-silver` keeps the no-layout form for
+      // A/B.
       val (flags, rest) = rest0.partition(isLayoutFlag)
       if (rest.nonEmpty) { usage(); sys.exit(2) }
       val layout = layoutOrExit(flags)
@@ -159,24 +164,14 @@ object RunPipeline {
     }
 
   /** The bucket width a parsed layout flag asks of `spark`, `None`
-    * for plain silver. Without a flag width it is the session's
-    * shuffle width ([[operators.VendasMart.silverBuckets]]) if the
-    * user set one. Unset on a `local[...]` master, it is the session's
-    * cores (`defaultParallelism`), not Spark's cluster-sized 200.
-    * Unset on a cluster master it stays the session's shuffle width:
-    * executors may still be registering at startup, so
-    * `defaultParallelism` does not yet give the cluster's width. Only
-    * the layout is sized here; every other shuffle keeps the
-    * session's width.
+    * for plain silver. Without a flag width it is
+    * [[operators.VendasMart.silverBuckets]], the width the ingest
+    * writes its keyed silver tables at. Only the layout is sized here;
+    * every other shuffle keeps the session's width.
     */
   private[graft] def bucketsIn(spark: SparkSession,
-      layout: Option[Option[Int]]): Option[Int] = {
-    val userSet = spark.sessionState.conf.contains(
-      org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS.key)
-    layout.map(_.getOrElse(
-      if (!userSet && spark.sparkContext.isLocal) spark.sparkContext.defaultParallelism
-      else operators.VendasMart.silverBuckets(spark)))
-  }
+      layout: Option[Option[Int]]): Option[Int] =
+    layout.map(_.getOrElse(operators.VendasMart.silverBuckets(spark)))
 
   private def layoutOrExit(flags: List[String]): Option[Option[Int]] =
     try bucketsOf(flags)

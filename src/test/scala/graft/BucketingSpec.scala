@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -106,7 +105,7 @@ class BucketingSpec extends SparkSpec {
 
       // The fact-fact join (the one bucketing targets) must have no
       // exchange below it; the dimension joins above it are untouched.
-      val factJoin = exchangeFreeFactJoin(bucketed)
+      val factJoin = exchangeFreeFactJoin(bucketed, "l_orderkey", "o_orderkey")
       // And SORT-free: bucketedSilver repartitions onto the bucket
       // column before the write, so each bucket is a single file and
       // Spark reuses the sortBy ordering instead of re-sorting under
@@ -122,38 +121,6 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS t_li_b")
       spark.sql("DROP TABLE IF EXISTS t_ord_b")
     }
-
-  /** A frame's rows as a multiset: each row with its count. */
-  private def rowBag(df: DataFrame): Map[Seq[Any], Int] =
-    df.collect().toSeq.groupMapReduce(_.toSeq)(_ => 1)(_ + _)
-
-  private def assertSameBags(got: Map[Seq[Any], Int], want: Map[Seq[Any], Int]): Unit = {
-    val diff = (got.keySet ++ want.keySet).toSeq
-      .filter(r => got.get(r) != want.get(r))
-    assert(diff.isEmpty, s"${diff.size} rows differ in count (got vs want), e.g.:\n" +
-      diff.take(5).map(r => s"$r: ${got.getOrElse(r, 0)} vs ${want.getOrElse(r, 0)}").mkString("\n"))
-  }
-
-  /** Same rows with the same multiplicities: a duplicated or lost row fails. */
-  private def assertSameRows(got: DataFrame, want: DataFrame): Unit =
-    assertSameBags(rowBag(got), rowBag(want))
-
-  /** The mart's l_orderkey=o_orderkey sort-merge join (the deepest
-    * one), asserted to have no exchange below it.
-    */
-  private def exchangeFreeFactJoin(
-      mart: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
-    val plan = mart.queryExecution.executedPlan
-    val factJoin = plan.collect {
-      case j if j.nodeName.contains("SortMergeJoin") &&
-        j.toString.contains("l_orderkey") && j.toString.contains("o_orderkey") => j
-    }.lastOption // deepest such node = the li⟕ord join itself
-    assert(factJoin.isDefined, s"no li-ord SMJ in:\n$plan")
-    val shuffles = factJoin.get.collect { case s: ShuffleExchangeExec => s }
-    assert(shuffles.isEmpty,
-      s"expected exchange-free bucketed fact join, got:\n${factJoin.get}")
-    factJoin.get
-  }
 
   /** Run `body` at shuffle width `n`, AQE off and broadcast disabled
     * (so the fact join plans as the at-scale sort-merge join).
@@ -185,7 +152,7 @@ class BucketingSpec extends SparkSpec {
         assert(files == 3, s"$t data files: $files")
       }
       val bucketed = operators.VendasMart.martBucketed(spark, sfDir, li, ord)
-      exchangeFreeFactJoin(bucketed)
+      exchangeFreeFactJoin(bucketed, "l_orderkey", "o_orderkey")
       assertSameRows(bucketed, operators.VendasMart.mart(spark, sfDir))
     }
   }
@@ -201,7 +168,7 @@ class BucketingSpec extends SparkSpec {
     val bucketToBucket = atWidth(operators.VendasMart.silverBuckets(spark)) {
       val (li, ord) = operators.VendasMart.ensureBucketedSilver(spark, sfDir)
       val m = operators.VendasMart.martBucketed(spark, sfDir, li, ord)
-      exchangeFreeFactJoin(m)
+      exchangeFreeFactJoin(m, "l_orderkey", "o_orderkey")
       rowBag(m)
     }
     assertSameBags(bucketToBucket, oracleChecked)
@@ -234,17 +201,18 @@ class BucketingSpec extends SparkSpec {
     atWidth(3) {
       operators.VendasMart.ensureBucketedSilver(spark, sfDir)
       for (t <- Seq(li, ord)) assert(layoutOf(t) == ((Some(3), "MANAGED", 3)), t)
-      exchangeFreeFactJoin(operators.VendasMart.martBucketed(spark, sfDir, li, ord))
+      exchangeFreeFactJoin(operators.VendasMart.martBucketed(spark, sfDir, li, ord),
+        "l_orderkey", "o_orderkey")
     }
   }
 
   test("a stamped silver layout from a previous session re-registers instead of rebuilding") {
     // The in-memory catalog forgets the bucketed-silver tables at JVM
-    // exit while their files survive in the warehouse; reRegisterSilver
-    // re-attaches them via external-table DDL iff the _graft_src_stamp
-    // still matches the source corpus. Simulate "previous session" by
-    // copying a freshly-built managed table's directory to a name the
-    // catalog has never seen.
+    // exit while their files survive in the warehouse;
+    // PersistedLayout.reRegister re-attaches them via external-table
+    // DDL iff the _graft_src_stamp still matches the source corpus.
+    // Simulate "previous session" by copying a freshly-built managed
+    // table's directory to a name the catalog has never seen.
     val sfDir = "/root/testdata/sf0.001"
     val liSrc = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount")
@@ -253,13 +221,16 @@ class BucketingSpec extends SparkSpec {
     val fs = wh.getFileSystem(conf)
     def loc(t: String) = new org.apache.hadoop.fs.Path(wh, t)
     val n = operators.VendasMart.silverBuckets(spark)
+    val src = operators.VendasMart.sourceStamp(spark, sfDir, n)
+    def reRegister(t: String) = sources.PersistedLayout.reRegister(spark, t, loc(t),
+      "l_orderkey", liSrc.schema, n, src)
     try {
       // Build + stamp under one name; clone the files under another.
       liSrc.repartition(n, col("l_orderkey"))
         .write.bucketBy(n, "l_orderkey")
         .sortBy("l_orderkey").mode("overwrite").format("parquet")
         .saveAsTable("t_reuse_src")
-      operators.VendasMart.stampSilver(spark, sfDir, "t_reuse_src", n)
+      sources.PersistedLayout.stamp(spark, loc("t_reuse_src"), src)
       org.apache.hadoop.fs.FileUtil.copy(fs, loc("t_reuse_src"),
         fs, loc("t_reuse_orphan"), false, conf)
       org.apache.hadoop.fs.FileUtil.copy(fs, loc("t_reuse_src"),
@@ -268,8 +239,7 @@ class BucketingSpec extends SparkSpec {
         fs, loc("t_reuse_partial"), false, conf)
 
       // Matching stamp -> re-registered, same rows, bucket spec intact.
-      assert(operators.VendasMart.reRegisterSilver(spark, sfDir,
-        "t_reuse_orphan", "l_orderkey", liSrc.schema, n))
+      assert(reRegister("t_reuse_orphan"))
       assert(spark.catalog.tableExists("t_reuse_orphan"))
       val meta = spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier("t_reuse_orphan"))
@@ -283,8 +253,7 @@ class BucketingSpec extends SparkSpec {
       val stale = new org.apache.hadoop.fs.Path(loc("t_reuse_stale"), "_graft_src_stamp")
       val out = fs.create(stale, true)
       try out.write("stale".getBytes("UTF-8")) finally out.close()
-      assert(!operators.VendasMart.reRegisterSilver(spark, sfDir,
-        "t_reuse_stale", "l_orderkey", liSrc.schema, n))
+      assert(!reRegister("t_reuse_stale"))
       assert(!spark.catalog.tableExists("t_reuse_stale"))
 
       // Partially-deleted layout (stamp intact, a bucket file gone) ->
@@ -295,8 +264,7 @@ class BucketingSpec extends SparkSpec {
           !s.getPath.getName.startsWith(".") => s.getPath
       }.get
       fs.delete(victim, false)
-      assert(!operators.VendasMart.reRegisterSilver(spark, sfDir,
-        "t_reuse_partial", "l_orderkey", liSrc.schema, n))
+      assert(!reRegister("t_reuse_partial"))
       assert(!spark.catalog.tableExists("t_reuse_partial"))
     } finally {
       spark.sql("DROP TABLE IF EXISTS t_reuse_src")

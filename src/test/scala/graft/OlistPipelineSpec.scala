@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.DateType
 
-import graft.sources.{IngestJob, OlistVendas}
+import graft.operators.VendasMart
+import graft.sources.{IngestJob, OlistCatalog, OlistVendas, PersistedLayout, TableSpec}
 
 /** End-to-end golden pipeline test (SURVEY.md §5.3): bronze CSVs for
   * all 8 Olist tables → IngestJob.runAll → OlistVendas silver→gold →
@@ -160,28 +162,193 @@ class OlistPipelineSpec extends SparkSpec {
     assert(mirrored == batch)
   }
 
+  private val relayoutTables = Seq("olist_silver_items_b", "olist_silver_orders_b")
+  private val factSpecs = Seq(OlistCatalog.orderItems, OlistCatalog.orders)
+  private def fs = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def factDir(silver: String, spec: TableSpec) =
+    new Path(s"$silver/${spec.prefix}")
+
+  /** Data files (name -> mtime) of a silver table directory. */
+  private def dataFiles(dir: Path): Map[String, Long] =
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(s => s.getPath.getName -> s.getModificationTime).toMap
+
+  private def tableMeta(t: String) = spark.sessionState.catalog.getTableMetadata(
+    org.apache.spark.sql.catalyst.TableIdentifier(t))
+
+  /** How a new JVM sees the ingest's layout: files on disk, no catalog entry. */
+  private def forgetSilverTables(): Unit =
+    factSpecs.foreach(spec => spark.sql(s"DROP TABLE IF EXISTS ${IngestJob.silverTable(spec)}"))
+
+  private def goldRows(gold: String) = rowBag(spark.read.parquet(s"$gold/olist/vendas"))
+
   test("bucketed gold re-runs over a warehouse location a previous JVM left behind") {
     val bronze = tmpDir("obronze")
     val silver = tmpDir("osilver")
     val gold = tmpDir("ogold")
     writeBronze(bronze)
     IngestJob.runAll(spark, bronze, silver)
-    // A previous JVM's layout: files under the managed locations, no
+    // A previous JVM's re-layout: files under the managed locations, no
     // entry in this session's in-memory catalog.
-    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (t <- Seq("olist_silver_items_b", "olist_silver_orders_b")) {
+    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    for (t <- relayoutTables) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val out = fs.create(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(wh, t), "part-00000-stale_00000.c000.snappy.parquet"), true)
+      val out = fs.create(new Path(new Path(wh, t), "part-00000-stale_00000.c000.snappy.parquet"), true)
       try out.write("stale".getBytes("UTF-8")) finally out.close()
       assert(!spark.catalog.tableExists(t))
     }
-    OlistVendas.run(spark, silver, gold, buckets = Some(3))
+    // Only a width the ingest did not write reaches the re-layout and
+    // its stale-location clearing.
+    val w = VendasMart.silverBuckets(spark) + 1
+    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "rebuilt")
     assert(spark.read.parquet(s"$gold/olist/vendas").count() == 3)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier("olist_silver_items_b"))
-    assert(meta.bucketSpec.map(_.numBuckets).contains(3))
+    assert(tableMeta("olist_silver_items_b").bucketSpec.map(_.numBuckets).contains(w))
+  }
+
+  test("the ingest writes orders and order_items bucketed; gold reads them in place") {
+    val bronze = tmpDir("lbronze")
+    val silver = tmpDir("lsilver")
+    val gold = tmpDir("lgold")
+    writeBronze(bronze)
+    for (t <- relayoutTables) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      PersistedLayout.dropLocation(spark, t)
+    }
+    IngestJob.runAll(spark, bronze, silver)
+    val w = VendasMart.silverBuckets(spark)
+    for (spec <- factSpecs) {
+      val meta = tableMeta(IngestJob.silverTable(spec))
+      assert(meta.bucketSpec.map(b => (b.numBuckets, b.bucketColumnNames, b.sortColumnNames))
+        .contains((w, Seq("order_id"), Seq("order_id"))), spec.name)
+      assert(meta.tableType.name == "EXTERNAL")
+      assert(meta.location == fs.makeQualified(factDir(silver, spec)).toUri)
+      val files = dataFiles(factDir(silver, spec))
+      assert(files.nonEmpty && files.size <= w, s"${spec.name}: ${files.keys}")
+    }
+    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "silver")
+    for (t <- relayoutTables)
+      assert(!fs.exists(PersistedLayout.warehousePath(spark, t)), s"$t re-laid-out")
+    assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
+    // Past the broadcast threshold the fact join sort-merges over the
+    // silver buckets themselves, with no exchange.
+    withConfs("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (m, layout) = OlistVendas.bucketedMart(spark, silver, w)
+      assert(layout == "silver")
+      exchangeFreeFactJoin(m, "order_id")
+      assertSameRows(m, OlistVendas.mart(spark, silver))
+    }
+  }
+
+  test("a new JVM's gold re-registers the ingest's layout from its stamp, files untouched") {
+    val bronze = tmpDir("rbronze")
+    val silver = tmpDir("rsilver")
+    val gold = tmpDir("rgold")
+    writeBronze(bronze)
+    IngestJob.runAll(spark, bronze, silver)
+    val before = factSpecs.map(spec => dataFiles(factDir(silver, spec)))
+    forgetSilverTables()
+    val w = VendasMart.silverBuckets(spark)
+    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "silver")
+    assert(factSpecs.map(spec => dataFiles(factDir(silver, spec))) == before)
+    for (spec <- factSpecs) {
+      val meta = tableMeta(IngestJob.silverTable(spec))
+      assert(meta.bucketSpec.map(_.numBuckets).contains(w))
+      assert(meta.location == fs.makeQualified(factDir(silver, spec)).toUri)
+    }
+    assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
+    assert(goldRows(gold).values.sum == 3)
+  }
+
+  test("gold reads its own silver root, not the one the catalog's tables last pointed at") {
+    val bronze = tmpDir("mbronze")
+    val other = tmpDir("mbronze_other")
+    writeBronze(bronze)
+    writeBronze(other)
+    writeCsv(other, "olist/order_items",
+      "order_id,order_item_id,product_id,seller_id,shipping_limit_date,price,freight_value",
+      "o1,1,p1,s1,2017-10-06 11:07:15,58.90,13.29")
+    val silver = tmpDir("msilver")
+    val gold = tmpDir("mgold")
+    IngestJob.runAll(spark, bronze, silver)
+    IngestJob.runAll(spark, other, tmpDir("msilver_other"))
+    assert(OlistVendas.run(spark, silver, gold,
+      buckets = Some(VendasMart.silverBuckets(spark))) == "silver")
+    assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
+    assert(goldRows(gold).values.sum == 3)
+  }
+
+  test("gold re-lays out silver whose files, stamp or width do not match") {
+    val bronze = tmpDir("fbronze")
+    writeBronze(bronze)
+    val w = VendasMart.silverBuckets(spark)
+    val items = OlistCatalog.orderItems
+    val cases: Seq[(String, String => Int)] = Seq(
+      "a deleted bucket file" -> { silver =>
+        fs.delete(new Path(factDir(silver, items), dataFiles(factDir(silver, items)).keys.min), false)
+        w
+      },
+      "a hand-edited stamp" -> { silver =>
+        val stamp = new Path(factDir(silver, items), PersistedLayout.StampFile)
+        val in = fs.open(stamp)
+        val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        val out = fs.create(stamp, true)
+        try out.write(text.replaceFirst(" (\\d+) ", " 1$1 ").getBytes("UTF-8")) finally out.close()
+        w
+      },
+      "a width mismatch" -> (_ => w + 2))
+    for ((what, spoil) <- cases) {
+      val silver = tmpDir("fsilver")
+      val gold = tmpDir("fgold")
+      IngestJob.runAll(spark, bronze, silver)
+      val asked = spoil(silver)
+      assert(OlistVendas.run(spark, silver, gold, buckets = Some(asked)) == "rebuilt", what)
+      assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
+    }
+  }
+
+  test("singleObject silver stays one plain file per table, and gold re-lays it out") {
+    val bronze = tmpDir("sobronze")
+    val silver = tmpDir("sosilver")
+    val gold = tmpDir("sogold")
+    writeBronze(bronze)
+    OlistCatalog.all.foreach(IngestJob(_).run(spark, bronze, silver, singleObject = true))
+    for (spec <- factSpecs) {
+      assert(dataFiles(factDir(silver, spec)).size == 1, spec.name)
+      assert(!fs.exists(new Path(factDir(silver, spec), PersistedLayout.StampFile)))
+    }
+    val w = VendasMart.silverBuckets(spark)
+    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "rebuilt")
+    assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
+  }
+
+  test("a re-ingest over silver a previous JVM left, with no catalog entry, overwrites cleanly") {
+    val bronze = tmpDir("ibronze")
+    val silver = tmpDir("isilver")
+    val gold = tmpDir("igold")
+    writeBronze(bronze)
+    // Older code's plain silver, then this ingest's layout, each left
+    // by a JVM whose catalog is gone.
+    OlistCatalog.all.foreach(IngestJob(_).run(spark, bronze, silver, singleObject = true))
+    forgetSilverTables()
+    IngestJob.runAll(spark, bronze, silver)
+    forgetSilverTables()
+    // The next delivery adds an item to o2.
+    writeCsv(bronze, "olist/order_items",
+      "order_id,order_item_id,product_id,seller_id,shipping_limit_date,price,freight_value",
+      "o1,1,p1,s1,2017-10-06 11:07:15,58.90,13.29",
+      "o1,2,p2,s1,2017-10-06 11:07:15,239.90,19.93",
+      "o2,1,p1,s1,2018-01-18 14:48:30,199.00,17.87",
+      "o2,2,p2,s1,2018-01-18 14:48:30,10.00,1.00")
+    IngestJob.runAll(spark, bronze, silver)
+    assert(spark.read.parquet(factDir(silver, OlistCatalog.orderItems).toString).count() == 4)
+    assert(OlistVendas.run(spark, silver, gold,
+      buckets = Some(VendasMart.silverBuckets(spark))) == "silver")
+    assert(goldRows(gold).values.sum == 4)
+    assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
   }
 
   test("pipeline CLI layout flags: bucketed silver is the default, plain the fallback") {
@@ -213,6 +380,8 @@ class OlistPipelineSpec extends SparkSpec {
       spark.conf.unset(widthKey)
       assert(spark.sessionState.conf.numShufflePartitions == 200)
       assert(bucketsIn(spark, bucketsOf(Nil)).contains(spark.sparkContext.defaultParallelism))
+      // The ingest's keyed silver tables follow the same rule.
+      assert(VendasMart.silverBuckets(spark) == spark.sparkContext.defaultParallelism)
     } finally spark.conf.set(widthKey, savedWidth)
     assert(bucketsIn(spark, bucketsOf(List("--bucketed-silver=9"))).contains(9))
     assert(bucketsIn(spark, bucketsOf(List("--plain-silver"))).isEmpty)

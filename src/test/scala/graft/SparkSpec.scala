@@ -41,6 +41,43 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** A frame's rows as a multiset: each row with its count. */
+  def rowBag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.groupMapReduce(_.toSeq)(_ => 1)(_ + _)
+
+  def assertSameBags(got: Map[Seq[Any], Int], want: Map[Seq[Any], Int]): Unit = {
+    val diff = (got.keySet ++ want.keySet).toSeq
+      .filter(r => got.get(r) != want.get(r))
+    assert(diff.isEmpty, s"${diff.size} rows differ in count (got vs want), e.g.:\n" +
+      diff.take(5).map(r => s"$r: ${got.getOrElse(r, 0)} vs ${want.getOrElse(r, 0)}").mkString("\n"))
+  }
+
+  /** Same rows with the same multiplicities: a duplicated or lost row fails. */
+  def assertSameRows(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit =
+    assertSameBags(rowBag(got), rowBag(want))
+
+  /** The deepest sort-merge join whose node names every key in `keys`
+    * (the fact join of a mart: the joins stacked above it carry its
+    * keys in their output, not in their conditions), asserted to have
+    * no exchange below it.
+    */
+  def exchangeFreeFactJoin(mart: org.apache.spark.sql.DataFrame,
+      keys: String*): org.apache.spark.sql.execution.SparkPlan = {
+    val plan = mart.queryExecution.executedPlan
+    val factJoin = plan.collect {
+      case j if j.nodeName.contains("SortMergeJoin") &&
+        keys.forall(j.toString.contains) => j
+    }.lastOption
+    assert(factJoin.isDefined, s"no ${keys.mkString("/")} SMJ in:\n$plan")
+    val shuffles = factJoin.get.collect {
+      case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
+    }
+    assert(shuffles.isEmpty,
+      s"expected exchange-free bucketed fact join, got:\n${factJoin.get}")
+    factJoin.get
+  }
+
   /** Fresh per-suite scratch dir under target/. */
   def tmpDir(name: String): String = {
     val p = java.nio.file.Files.createTempDirectory(
