@@ -57,10 +57,9 @@ with DAG(
             # ingest wrote at: the job's spark.sql.shuffle.partitions
             # (Spark's 200 on a cluster unless the job's conf sets it;
             # a local master's cores when unset). Set the
-            # `silver_buckets` Airflow Variable to pin a width (a width
-            # the ingest did not write is re-laid-out into the
-            # warehouse on every run, OlistVendas.bucketedSilver), or 0
-            # to fall back to the plain no-layout form.
+            # `silver_buckets` Airflow Variable to pin a width (gold
+            # reads silver plain at a width the ingest did not write),
+            # or 0 to fall back to the plain no-layout form.
             "{% set w = var.value.get('silver_buckets', '') %}"
             "--bucketed-silver{{ '=' ~ w if w else '' }}",
             "{{ var.value.mysql_jdbc_url }}", "TB_VENDAS",

@@ -231,9 +231,8 @@ def main():
     gold_line = bucketed_leg("gold_default", "--bucketed-silver", "silver")
     assert " buckets=4 " in gold_line, \
         f"bare --bucketed-silver did not bucket at the session's cores: {gold_line}"
-    # A width the ingest did not write: the re-layout into the
-    # warehouse, over whatever an earlier run left there.
-    bucketed_leg("gold_relayout", "--bucketed-silver=3", "rebuilt")
+    # A width the ingest did not write: gold reads silver plain.
+    bucketed_leg("gold_miss", "--bucketed-silver=3", "plain")
 
     # Grain parity, both implementations of the reference's vendas
     # dataflow, one script — orchestration and registry can't drift:

@@ -2,6 +2,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+  /** The session's IO codec and spill compression, as `_meta` stamps
+    * them. Spark's own confs reach the session from `--conf`, `-D`
+    * and spark-defaults.conf; unset, they read Spark's defaults here,
+    * where `spark.conf.get` would throw SQL_CONF_NOT_FOUND.
+    */
+  private[graft] def ioConf(spark: SparkSession): (String, Boolean) = {
+    val conf = spark.sparkContext.getConf
+    (conf.get("spark.io.compression.codec", "lz4"),
+      conf.getBoolean("spark.shuffle.spill.compress", true))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -94,12 +105,12 @@ object Bench {
     // r18 retake runs bigger — the stamp is what makes that visible).
     val heapNote: String =
       f""", "heap_gb": ${Runtime.getRuntime.maxMemory / (1L << 30)}"""
-    // Effective IO codec + spill compression, read back from the LIVE
-    // conf (not the graft selector) so the stamp records what the
-    // session actually runs — GraftSession owns the build-time
-    // decision (r19; replaces the r18 sysprop note-key plumbing).
-    val codecNote: String =
-      s""", "io_codec": "${jsonStr(spark.conf.get("spark.io.compression.codec"))}", "spill_compress": ${spark.conf.get("spark.shuffle.spill.compress")}"""
+    // Effective IO codec + spill compression (ioConf), so two legs
+    // that ran different codecs are not compared as like for like.
+    val codecNote: String = {
+      val (codec, spillCompress) = ioConf(spark)
+      s""", "io_codec": "${jsonStr(codec)}", "spill_compress": $spillCompress"""
+    }
     val metrics = new tools.StageMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     def drain(): Unit =

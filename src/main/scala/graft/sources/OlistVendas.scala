@@ -69,39 +69,15 @@ object OlistVendas {
     martFrom(items, orders, products, customers, paymentsPivot)
   }
 
-  /** The re-layout: the cache-miss path of [[bucketedMart]], for
-    * silver the ingest did not write bucketed at `nBuckets` (written
-    * with `singleObject`, by older code, at another width, or changed
-    * since its stamp). Re-writes the mart's columns of order_items and
-    * orders into the warehouse, bucketed+sorted on `order_id` — the
-    * [[graft.operators.VendasMart.bucketedSilver]] layout applied to
-    * the production entry point. The repartition puts each bucket in
-    * one file (see the VendasMart scaladoc for the sort-elision
-    * contract), and a warehouse location a previous JVM left without a
-    * catalog entry is cleared first. Returns the catalog table names.
-    */
-  def bucketedSilver(spark: SparkSession, silverRoot: String,
-      nBuckets: Int): (String, String) = {
-    val itemsT = "olist_silver_items_b"
-    val ordersT = "olist_silver_orders_b"
-    Seq(OlistCatalog.orderItems -> (itemsT, ItemCols), OlistCatalog.orders -> (ordersT, OrderCols))
-      .foreach { case (spec, (table, cols)) =>
-        PersistedLayout.clearStaleLocation(spark, table)
-        silver(spark, silverRoot, spec).select(cols: _*)
-          .repartition(nBuckets, col("order_id"))
-          .write.bucketBy(nBuckets, "order_id").sortBy("order_id")
-          .mode("overwrite").format("parquet").saveAsTable(table)
-      }
-    (itemsT, ordersT)
-  }
-
-  /** The mart over the `order_id`-bucketed fact sides at width
-    * `nBuckets`, so its fact join sort-merges bucket to bucket with no
-    * exchange, and where those sides came from: `silver` when the
-    * ingest wrote both silver tables in that layout
-    * ([[IngestJob.load]]; held by this session's catalog, or
-    * re-registered from their stamps as a new JVM must), else
-    * `rebuilt` through [[bucketedSilver]].
+  /** The mart at bucket width `nBuckets`, and which layout it read:
+    * `silver` when the ingest wrote both fact tables bucketed at that
+    * width ([[IngestJob.load]]; held by this session's catalog, or
+    * re-registered from their stamps as a new JVM must), so the fact
+    * join sort-merges bucket to bucket with no exchange. On any miss
+    * (another width, `singleObject` silver, a changed stamp, a deleted
+    * bucket file) it is the plain [[mart]], `plain`: re-writing the
+    * fact sides bucketed here would cost the shuffle the plain join
+    * does at most, plus a write and a re-read, in every run.
     */
   private[graft] def bucketedMart(spark: SparkSession, silverRoot: String,
       nBuckets: Int): (DataFrame, String) = {
@@ -109,10 +85,12 @@ object OlistVendas {
       items <- IngestJob(OlistCatalog.orderItems).bucketedTable(spark, silverRoot, nBuckets)
       orders <- IngestJob(OlistCatalog.orders).bucketedTable(spark, silverRoot, nBuckets)
     } yield (items, orders)
-    val ((itemsT, ordersT), layout) =
-      inPlace.map(_ -> "silver").getOrElse(bucketedSilver(spark, silverRoot, nBuckets) -> "rebuilt")
-    (martOver(spark, silverRoot, spark.table(itemsT).select(ItemCols: _*),
-      spark.table(ordersT).select(OrderCols: _*)), layout)
+    inPlace match {
+      case Some((itemsT, ordersT)) =>
+        (martOver(spark, silverRoot, spark.table(itemsT).select(ItemCols: _*),
+          spark.table(ordersT).select(OrderCols: _*)), "silver")
+      case None => (mart(spark, silverRoot), "plain")
+    }
   }
 
   /** The mart projection shared by the batch and streaming variants:
@@ -190,10 +168,11 @@ object OlistVendas {
   /** Gold parquet sink + optional JDBC mirror — the reference's
     * `to_parquet`+upload (`:152-162`) and `to_sql(if_exists='replace')`
     * (`:173-180`). With `buckets` set, the mart reads the fact sides
-    * bucketed at that width ([[bucketedMart]]): in place when the
-    * ingest wrote them so, the DAG's case and the default, else through
-    * the [[bucketedSilver]] re-layout. Returns where the fact sides
-    * came from: `silver`, `rebuilt`, or `plain` without `buckets`.
+    * bucketed at that width where the ingest wrote them so, the DAG's
+    * case and the default, and plain silver otherwise
+    * ([[bucketedMart]]). The mirror copies the gold parquet just
+    * written rather than computing the mart a second time. Returns
+    * the layout the fact sides were read in: `silver` or `plain`.
     */
   def run(spark: SparkSession, silverRoot: String, goldRoot: String,
       jdbc: Option[Sinks.JdbcTarget] = None,
@@ -202,8 +181,9 @@ object OlistVendas {
       case Some(n) => bucketedMart(spark, silverRoot, n)
       case None => (mart(spark, silverRoot), "plain")
     }
-    m.write.mode("overwrite").parquet(s"$goldRoot/olist/vendas")
-    jdbc.foreach(t => Sinks.jdbcReplace(m, t))
+    val out = s"$goldRoot/olist/vendas"
+    m.write.mode("overwrite").parquet(out)
+    jdbc.foreach(t => Sinks.jdbcReplace(spark.read.parquet(out), t))
     layout
   }
 }

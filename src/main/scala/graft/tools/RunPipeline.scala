@@ -52,10 +52,9 @@ object RunPipeline {
       // VendasMart.silverBuckets, so at the default width gold reads
       // them in place (layout=silver) and no gold run re-writes them;
       // a width the ingest did not write (`--bucketed-silver=N`), or
-      // silver without a matching stamp, is re-laid-out into the
-      // warehouse first (layout=rebuilt). `--plain-silver` (or
-      // `--bucketed-silver=0`) keeps the plain no-layout form for
-      // no-warehouse targets or tiny corpora.
+      // silver without a matching stamp, reads plain silver
+      // (layout=plain), as `--plain-silver` (or `--bucketed-silver=0`)
+      // always does.
       // Remaining positionals are the optional JDBC target.
       val (flags, rest) = rest0.partition(isLayoutFlag)
       val layout = layoutOrExit(flags)
@@ -189,5 +188,6 @@ object RunPipeline {
         |       RunPipeline grain <sfDir>
         |       RunPipeline <bronzeRoot> <silverRoot> <goldRoot>
         |(bucketed silver is the default for gold/mart, at the session's shuffle width
-        | if set, else at a local session's cores; --plain-silver keeps the no-layout form)""".stripMargin)
+        | if set, else at a local session's cores; --plain-silver keeps the no-layout form.
+        | gold reads silver plain at a width the ingest did not write)""".stripMargin)
 }

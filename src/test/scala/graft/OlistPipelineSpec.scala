@@ -3,10 +3,15 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.ListenerShim
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.DateType
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.VendasMart
-import graft.sources.{IngestJob, OlistCatalog, OlistVendas, PersistedLayout, TableSpec}
+import graft.sources.{IngestJob, OlistCatalog, OlistVendas, PersistedLayout, Sinks, TableSpec}
 
 /** End-to-end golden pipeline test (SURVEY.md §5.3): bronze CSVs for
   * all 8 Olist tables → IngestJob.runAll → OlistVendas silver→gold →
@@ -162,6 +167,9 @@ class OlistPipelineSpec extends SparkSpec {
     assert(mirrored == batch)
   }
 
+  /** The warehouse names an older gold re-laid its fact sides out
+    * under. Gold no longer writes there; a miss reads silver plain.
+    */
   private val relayoutTables = Seq("olist_silver_items_b", "olist_silver_orders_b")
   private val factSpecs = Seq(OlistCatalog.orderItems, OlistCatalog.orders)
   private def fs = new Path(spark.conf.get("spark.sql.warehouse.dir"))
@@ -185,6 +193,14 @@ class OlistPipelineSpec extends SparkSpec {
 
   private def goldRows(gold: String) = rowBag(spark.read.parquet(s"$gold/olist/vendas"))
 
+  /** Deletes what an older JVM left at the [[relayoutTables]] locations. */
+  private def clearRelayoutLocations(): Unit =
+    relayoutTables.foreach(PersistedLayout.dropLocation(spark, _))
+
+  private def assertNoRelayout(what: String): Unit =
+    for (t <- relayoutTables)
+      assert(!fs.exists(PersistedLayout.warehousePath(spark, t)), s"$what: $t re-laid-out")
+
   test("bucketed gold re-runs over a warehouse location a previous JVM left behind") {
     val bronze = tmpDir("obronze")
     val silver = tmpDir("osilver")
@@ -193,19 +209,24 @@ class OlistPipelineSpec extends SparkSpec {
     IngestJob.runAll(spark, bronze, silver)
     // A previous JVM's re-layout: files under the managed locations, no
     // entry in this session's in-memory catalog.
+    clearRelayoutLocations()
     val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
-    for (t <- relayoutTables) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val out = fs.create(new Path(new Path(wh, t), "part-00000-stale_00000.c000.snappy.parquet"), true)
+    val stale = for (t <- relayoutTables) yield {
+      val f = new Path(new Path(wh, t), "part-00000-stale_00000.c000.snappy.parquet")
+      val out = fs.create(f, true)
       try out.write("stale".getBytes("UTF-8")) finally out.close()
-      assert(!spark.catalog.tableExists(t))
+      f
     }
-    // Only a width the ingest did not write reaches the re-layout and
-    // its stale-location clearing.
+    // A width the ingest did not write reads silver plain, and leaves
+    // those locations as it found them.
     val w = VendasMart.silverBuckets(spark) + 1
-    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "rebuilt")
+    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "plain")
     assert(spark.read.parquet(s"$gold/olist/vendas").count() == 3)
-    assert(tableMeta("olist_silver_items_b").bucketSpec.map(_.numBuckets).contains(w))
+    for (f <- stale) {
+      assert(fs.getFileStatus(f).getLen == "stale".length, f)
+      assert(fs.listStatus(f.getParent).length == 1, f.getParent)
+    }
+    relayoutTables.foreach(t => assert(!spark.catalog.tableExists(t), t))
   }
 
   test("the ingest writes orders and order_items bucketed; gold reads them in place") {
@@ -213,10 +234,7 @@ class OlistPipelineSpec extends SparkSpec {
     val silver = tmpDir("lsilver")
     val gold = tmpDir("lgold")
     writeBronze(bronze)
-    for (t <- relayoutTables) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      PersistedLayout.dropLocation(spark, t)
-    }
+    clearRelayoutLocations()
     IngestJob.runAll(spark, bronze, silver)
     val w = VendasMart.silverBuckets(spark)
     for (spec <- factSpecs) {
@@ -229,8 +247,7 @@ class OlistPipelineSpec extends SparkSpec {
       assert(files.nonEmpty && files.size <= w, s"${spec.name}: ${files.keys}")
     }
     assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "silver")
-    for (t <- relayoutTables)
-      assert(!fs.exists(PersistedLayout.warehousePath(spark, t)), s"$t re-laid-out")
+    assertNoRelayout("in place")
     assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
     // Past the broadcast threshold the fact join sort-merges over the
     // silver buckets themselves, with no exchange.
@@ -281,9 +298,10 @@ class OlistPipelineSpec extends SparkSpec {
     assert(goldRows(gold).values.sum == 3)
   }
 
-  test("gold re-lays out silver whose files, stamp or width do not match") {
+  test("gold reads silver plain when its files, stamp or width do not match") {
     val bronze = tmpDir("fbronze")
     writeBronze(bronze)
+    clearRelayoutLocations()
     val w = VendasMart.silverBuckets(spark)
     val items = OlistCatalog.orderItems
     val cases: Seq[(String, String => Int)] = Seq(
@@ -305,24 +323,67 @@ class OlistPipelineSpec extends SparkSpec {
       val gold = tmpDir("fgold")
       IngestJob.runAll(spark, bronze, silver)
       val asked = spoil(silver)
-      assert(OlistVendas.run(spark, silver, gold, buckets = Some(asked)) == "rebuilt", what)
+      assert(OlistVendas.run(spark, silver, gold, buckets = Some(asked)) == "plain", what)
       assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
+      assertNoRelayout(what)
     }
   }
 
-  test("singleObject silver stays one plain file per table, and gold re-lays it out") {
+  test("singleObject silver stays one plain file per table, and gold reads it plain") {
     val bronze = tmpDir("sobronze")
     val silver = tmpDir("sosilver")
     val gold = tmpDir("sogold")
     writeBronze(bronze)
+    clearRelayoutLocations()
     OlistCatalog.all.foreach(IngestJob(_).run(spark, bronze, silver, singleObject = true))
     for (spec <- factSpecs) {
       assert(dataFiles(factDir(silver, spec)).size == 1, spec.name)
       assert(!fs.exists(new Path(factDir(silver, spec), PersistedLayout.StampFile)))
     }
     val w = VendasMart.silverBuckets(spark)
-    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "rebuilt")
+    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "plain")
     assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
+    assertNoRelayout("singleObject")
+  }
+
+  /** Whether `plan` reads a file-based relation under `root`. A
+    * command's query can sit in its inner children (the JDBC writer's
+    * SaveIntoDataSourceCommand), so those are walked too.
+    */
+  private def scansUnder(plan: LogicalPlan, root: String): Boolean = (plan match {
+    case r: LogicalRelation => r.relation match {
+      case h: HadoopFsRelation => h.location.rootPaths.exists(_.toUri.getPath.startsWith(root))
+      case _ => false
+    }
+    case _ => false
+  }) || (plan.children ++ plan.innerChildren.collect { case p: LogicalPlan => p })
+    .exists(scansUnder(_, root))
+
+  test("gold with a JDBC target computes the mart once and mirrors the written parquet") {
+    val bronze = tmpDir("jbronze")
+    val silver = tmpDir("jsilver")
+    val gold = tmpDir("jgold")
+    writeBronze(bronze)
+    IngestJob.runAll(spark, bronze, silver)
+    val t = Sinks.JdbcTarget(s"jdbc:derby:${tmpDir("jdb")}/mirror;create=true", "TB_VENDAS", "", "")
+    val silverScans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (scansUnder(qe.analyzed, silver)) silverScans.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerShim.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      assert(OlistVendas.run(spark, silver, gold, Some(t),
+        Some(VendasMart.silverBuckets(spark))) == "silver")
+      ListenerShim.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(silverScans.get == 1, "executions that scanned silver")
+    val mirrored = spark.read.format("jdbc")
+      .option("url", t.url).option("dbtable", t.table).load()
+    assertSameBags(rowBag(mirrored), goldRows(gold))
+    assert(goldRows(gold).values.sum == 3)
   }
 
   test("a re-ingest over silver a previous JVM left, with no catalog entry, overwrites cleanly") {

@@ -1194,48 +1194,6 @@ class OperatorSpec extends SparkSpec {
     }
   }
 
-  test("session-build IO codec is owned by GraftSession and validated") {
-    // r19: spark.io.compression.codec / spark.shuffle.spill.compress
-    // are CORE confs Spark 4 refuses at runtime (CANNOT_MODIFY_CONFIG)
-    // — the r18 sf100 legs had to ride a raw JVM sysprop through
-    // chain scripts. The shipped mechanism resolves them at session
-    // BUILD time from graft-namespaced selectors.
-    val live = spark // force the shared session to exist before any sysprop play
-    // The suite's session was built through GraftSession.configure
-    // with no selector set → the shipped defaults are live.
-    assert(live.conf.get("spark.io.compression.codec") == GraftSession.DefaultCodec)
-    assert(live.conf.get("spark.shuffle.spill.compress") ==
-      GraftSession.DefaultSpillCompress.toString)
-    def withProp[A](k: String, v: String)(f: => A): A = {
-      val old = sys.props.get(k)
-      sys.props(k) = v
-      try f finally old match {
-        case Some(o) => sys.props(k) = o
-        case None => sys.props -= k
-      }
-    }
-    // Defaults with no selector set.
-    assert(GraftSession.sessionCodec == GraftSession.DefaultCodec)
-    assert(GraftSession.sessionSpillCompress == GraftSession.DefaultSpillCompress)
-    // Sysprop selector wins; case-normalized.
-    withProp(GraftSession.CodecKey, "ZSTD") {
-      assert(GraftSession.sessionCodec == "zstd")
-    }
-    withProp(GraftSession.SpillCompressKey, "false") {
-      assert(!GraftSession.sessionSpillCompress)
-    }
-    // Bad values: error names the conf key (ladder-knob pattern).
-    withProp(GraftSession.CodecKey, "gzip") {
-      val e = intercept[IllegalArgumentException](GraftSession.sessionCodec)
-      assert(e.getMessage.contains(GraftSession.CodecKey))
-      assert(e.getMessage.contains("zstd")) // allowed list is in the message
-    }
-    withProp(GraftSession.SpillCompressKey, "maybe") {
-      val e = intercept[IllegalArgumentException](GraftSession.sessionSpillCompress)
-      assert(e.getMessage.contains(GraftSession.SpillCompressKey))
-    }
-  }
-
   // --- windowRank: TopK-aggregate form vs the declared window form ---
 
   test("windowRank: TopK aggregate form is row-identical to the row_number window form") {

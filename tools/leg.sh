@@ -6,7 +6,9 @@
 #            SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ATTEMPTS=1 SPARK_DRIVER_MEM=8g
 # A relative <side.json> resolves under the repo root. Each ENV=VALUE is
 # exported before launch (SPARK_GRAFT_CONF, SPARK_GRAFT_BENCH_ONLY,
-# SPARK_GRAFT_CODEC, LEG_MIN_FREE_GB, QUIET_* ...). The leg runs against
+# LEG_MIN_FREE_GB, QUIET_* ...); Spark's own confs ride on
+# SPARK_GRAFT_JAVA_OPTS, e.g. a zstd leg passes
+# SPARK_GRAFT_JAVA_OPTS=-Dspark.io.compression.codec=zstd. The leg runs against
 # a frozen copy of target/scala-2.13/classes (unless SPARK_GRAFT_CLASSES
 # names one), so a recompile cannot swap classes under a running JVM.
 # Everything below, and the bench itself, logs to /tmp/leg_<side>.log.
