@@ -22,13 +22,12 @@ object Bench {
     // the compact summary lines. The side file is written once, and
     // its _meta.round records the round. The round is DERIVED FROM
     // REPO STATE, never from an env var someone must remember
-    // (r16: the r15 driver bench ran
-    // with a stale SPARK_GRAFT_ROUND=14 and mislabeled the round's
-    // canonical record): it is max(BENCH_r<N>.json, CORRECTNESS_r<N>
-    // .json in cwd) + 1 — the driver writes both only AFTER this run,
-    // so the inference names the round in progress. SPARK_GRAFT_ROUND
-    // is retained purely as a cross-check: a set-but-disagreeing value
-    // is recorded in _meta.round_env and overridden.
+    // (r16: the r15 driver bench ran with a stale round env var and
+    // mislabeled the round's canonical record): it is
+    // max(BENCH_r<N>.json, CORRECTNESS_r<N>.json in cwd) + 1 — the
+    // driver writes both only AFTER this run, so the inference names
+    // the round in progress; with neither file present it is
+    // `unknown`.
     // A subset run (SPARK_GRAFT_BENCH_ONLY below) must never clobber
     // the repo's full-sweep record under the default side-file name.
     val sidePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDE",
@@ -38,14 +37,7 @@ object Bench {
       val re = "(?:BENCH|CORRECTNESS)_r(\\d+)\\.json".r
       val prev = Option(new java.io.File(".").listFiles()).toSeq.flatten
         .flatMap(f => re.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      if (prev.isEmpty) sys.env.getOrElse("SPARK_GRAFT_ROUND", "unknown")
-      else f"${prev.max + 1}%02d"
-    }
-    val roundEnvNote: String = sys.env.get("SPARK_GRAFT_ROUND") match {
-      case Some(e) if e != roundTag =>
-        System.err.println(s"[bench] SPARK_GRAFT_ROUND=$e disagrees with repo-derived round $roundTag; using $roundTag")
-        s""", "round_env": "$e""""
-      case _ => ""
+      if (prev.isEmpty) "unknown" else f"${prev.max + 1}%02d"
     }
     // AQE initial shuffle fan-out = cores (Spark's own default). An
     // input-sized fan-out was A/B'd on identical data and rejected:
@@ -82,23 +74,7 @@ object Bench {
       }
     val confNote: String = sys.env.get("SPARK_GRAFT_CONF")
       .map(v => s""", "conf": "${jsonStr(v)}"""").getOrElse("")
-    // Effective index-ladder policy, stamped EVEN when defaulted (r18
-    // advice fix): the r17 tier A/B sidecars recorded only the knob
-    // string, so replaying their conf on a HEAD whose DEFAULTS moved
-    // (headroom 0 → 0.35) would not reproduce the leg. A leg is
-    // self-describing only if the policy it actually ran under is in
-    // the file, not inferable from the commit date.
-    def ladderNote: String = {
-      val cacheLevel = spark.conf.getOption("spark.graft.index.cacheLevel")
-        .getOrElse("auto")
-      val priority = spark.conf.getOption("spark.graft.index.residencyPriority")
-        .forall(_ != "off")
-      val headroom = operators.Dedup.IndexHolder.confHeadroom(spark)
-      val healMax = operators.Dedup.IndexHolder.confLong(spark,
-        "spark.graft.index.healTierMaxMB", 64L, min = 0L)
-      s""", "ladder": {"cacheLevel": "${jsonStr(cacheLevel)}", "residencyPriority": $priority, "headroomFraction": $headroom, "healTierMaxMB": $healMax}"""
-    }
-    // JVM heap, stamped for the same reason as the ladder: the index
+    // JVM heap, stamped so a leg is self-describing: the index
     // budget and spill onset both scale with it, so two legs at
     // different -Xmx are not comparable absolutes (the r17 sf100
     // retake OOMed at 8g during the bucketed-silver sort-write; the
@@ -519,7 +495,7 @@ object Bench {
       val pr = q.probesMs.map(r3).mkString("[", ",", "]")
       s"""  "${q.name}": {"min_s": ${r3(q.min)}, "median_s": ${r3(q.median)}, "runs": ${q.runs}, "shuffle_write_mb": ${r3(q.shuffleWriteMb)}, "shuffle_read_mb": ${r3(q.shuffleReadMb)}, "spill_mb": ${r3(q.spillMb)}, "probe_ms": $pr}"""
     }.mkString(
-      s"""{\n  "_meta": {"round": "$roundTag"$roundEnvNote$confNote$ladderNote$heapNote$codecNote, "sf": "$sfDir", "cpus": $cpus, "init_partitions": $cpus, "action": "noop-write", "attempt_order": "round-robin", "index_build_s": ${r3(indexBuild)}, "prewarm_ok": $prewarmOk, "prewarm_phases_s": $prewarmPhasesJson, "cache_probe": $cacheProbeJson, "total_median_s": ${r3(totalMedian)}, "total_min_s": ${r3(totalMin)}, "n_queries": ${results.size}, "probe_floor_ms": ${r3(probeFloor)}, "probe_median_ms": ${r3(probeMedian)}, "probe_max_ms": ${r3(probeMax)}, "steal_probes": $stealProbes, "n_probes": ${allProbes.size}, "par_probe_ms": $parProbesJson, "mem_probe_ms": $memProbesJson, "mem_probe_spread": ${r3(memSpread)}, "bandwidth_class": "$bandwidthClass", "mem_probe_mb_per_thread": 48, "par_probe_threads": ${Runtime.getRuntime.availableProcessors()}, "attempts": $nAttempts, "errors": $errors, "reduced_sample": $reduced},\n""",
+      s"""{\n  "_meta": {"round": "$roundTag"$confNote$heapNote$codecNote, "sf": "$sfDir", "cpus": $cpus, "init_partitions": $cpus, "action": "noop-write", "attempt_order": "round-robin", "index_build_s": ${r3(indexBuild)}, "prewarm_ok": $prewarmOk, "prewarm_phases_s": $prewarmPhasesJson, "cache_probe": $cacheProbeJson, "total_median_s": ${r3(totalMedian)}, "total_min_s": ${r3(totalMin)}, "n_queries": ${results.size}, "probe_floor_ms": ${r3(probeFloor)}, "probe_median_ms": ${r3(probeMedian)}, "probe_max_ms": ${r3(probeMax)}, "steal_probes": $stealProbes, "n_probes": ${allProbes.size}, "par_probe_ms": $parProbesJson, "mem_probe_ms": $memProbesJson, "mem_probe_spread": ${r3(memSpread)}, "bandwidth_class": "$bandwidthClass", "mem_probe_mb_per_thread": 48, "par_probe_threads": ${Runtime.getRuntime.availableProcessors()}, "attempts": $nAttempts, "errors": $errors, "reduced_sample": $reduced},\n""",
       ",\n", "\n}\n")
     val sideBytes = side.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     java.nio.file.Files.write(java.nio.file.Paths.get(sidePath), sideBytes)

@@ -263,19 +263,17 @@ object Dedup {
     * from disk but pays an eviction-time WRITE of every displaced
     * byte — measured at sf30 as a 34–44% tax on the spill-heavy
     * queries whose memory claw does the displacing (tier A/B legs:
-    * jaccard 27.1 vs 36.4 s, simhash 57.3 vs 82.3 s). So `auto`
-    * (default) tiers by declared read count and measured size:
-    * frames read ≥2× per sweep heal (a drop there recomputes the
-    * lineage MID-QUERY — the verify reads docsets twice inside the
-    * very plan whose memory claw displaces it; measured 46.0 vs
-    * 23.0 s on the sf30 jaccard subset); once-read frames ≤
-    * `spark.graft.index.healTierMaxMB` (64) upgrade to the heal tier
+    * jaccard 27.1 vs 36.4 s, simhash 57.3 vs 82.3 s). So the ladder
+    * tiers by declared read count and measured size: frames read ≥2×
+    * per sweep heal (a drop there recomputes the lineage MID-QUERY —
+    * the verify reads docsets twice inside the very plan whose memory
+    * claw displaces it; measured 46.0 vs 23.0 s on the sf30 jaccard
+    * subset); once-read frames ≤ 64 MiB upgrade to the heal tier
     * after measuring (eviction writes are noise at that size, the
     * recompute is the cost); big once-read frames stay MEMORY_ONLY —
     * dropped free under pressure, and past the headroom knee they
-    * are DISK_ONLY anyway. `spark.graft.index.cacheLevel=
-    * memory_only|memory_and_disk` forces one tier for A/B
-    * reproduction.
+    * are DISK_ONLY anyway. Forcing either tier for every frame lost
+    * to this policy on the sf30 tier A/B (`bench_sf30_tierAB_*`).
     *
     * WHICH frame demotes is a priority decision, not build order
     * (r17). Past the knee, the r16 ladder demoted whatever happened
@@ -309,13 +307,12 @@ object Dedup {
     * to ~0 are skipped outright (a demotion is guaranteed to free
     * budget).
     *
-    * The fit target is `budget × (1 − headroomFraction)` (knob
-    * `spark.graft.index.headroomFraction`, default 0.35): an index
-    * set filling the protected region exactly leaves zero slack, so
-    * every heavy query's memory claw displaces index blocks and
-    * every broadcast insertion LRU-churns the set. The default is
-    * MEASURED, not assumed — the sf30 tier A/B's headroom side beat
-    * both zero-headroom sides on the spill-heavy ladder readers
+    * The fit target is `budget × (1 − 0.35)`: an index set filling
+    * the protected region exactly leaves zero slack, so every heavy
+    * query's memory claw displaces index blocks and every broadcast
+    * insertion LRU-churns the set. The 0.35 is MEASURED, not
+    * assumed — the sf30 tier A/B's headroom side beat both
+    * zero-headroom sides on the spill-heavy ladder readers
     * (jaccard 23.0 s vs 27.1 memory_only / 36.4 memory_and_disk)
     * because preemptively demoting the once-read frames freed
     * execution memory worth more than their residency; the sf50
@@ -323,8 +320,6 @@ object Dedup {
     * resident bytes and wall. Demotion only fires when the set
     * actually crosses the shrunk target, so small corpora (sf ≤ 10
     * here) never demote regardless.
-    * `spark.graft.index.residencyPriority=off` restores build-order
-    * demotion for A/B reproduction.
     */
   private final class IndexHolder(build: () => DataFrame, persistFrame: Boolean,
       label: String, readsPerSweep: Double) {
@@ -339,9 +334,7 @@ object Dedup {
       if (persistFrame) IndexHolder.demoteLock.synchronized {
         val spark = d.sparkSession
         val sc = spark.sparkContext
-        val mode = spark.conf.getOption("spark.graft.index.cacheLevel")
-          .map(_.toLowerCase).getOrElse("auto")
-        // auto: a frame read MORE than once per sweep goes straight
+        // A frame read MORE than once per sweep goes straight
         // to the heal tier — its displacement risk is intra-query
         // (the jaccard verify reads docsets twice inside one plan
         // whose own memory claw does the displacing), and a dropped
@@ -349,27 +342,21 @@ object Dedup {
         // cascade measured at 46.0 vs 23.0 s on the sf30 jaccard
         // subset (MEMORY_ONLY vs healed two-read frames, identical
         // resident sets). Read count is declared, so no double-build.
-        val firstLevel = mode match {
-          case "memory_and_disk" =>
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-          case "auto" if readsPerSweep >= 2.0 =>
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-          case "auto" | "memory_only" =>
-            org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.index.cacheLevel must be auto, memory_only or memory_and_disk; got '$other'")
-        }
+        val onceRead = readsPerSweep < 2.0
+        val firstLevel =
+          if (onceRead) org.apache.spark.storage.StorageLevel.MEMORY_ONLY
+          else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val before = sc.getRDDStorageInfo.map(_.id).toSet
         d.persist(firstLevel)
         d.count()
         var own = sc.getRDDStorageInfo.filterNot(i => before.contains(i.id))
         val ownBytes = own.map(i => i.memSize + i.diskSize).sum
-        // Partial residency (MEMORY_ONLY tiers): blocks that did not
+        // Partial residency (MEMORY_ONLY tier): blocks that did not
         // fit were silently dropped — the frame cannot fit even
         // alone, so it goes straight to DISK_ONLY (r16 rule). Under
         // MEMORY_AND_DISK the overflow sits disk-backed instead and
         // is only logged.
-        val partial = firstLevel.useMemory && !firstLevel.useDisk &&
+        val partial = onceRead &&
           own.exists(i => i.numCachedPartitions < i.numPartitions)
         if (partial) {
           System.err.println(
@@ -381,7 +368,7 @@ object Dedup {
           val ownDisk = own.map(_.diskSize).sum
           if (ownDisk > 0) System.err.println(
             f"[graft-index] build overflow to disk: frame=$label mem=${own.map(_.memSize).sum / 1e6}%.1f MB disk=${ownDisk / 1e6}%.1f MB")
-          // auto tier, once-read frames: small ones upgrade to the
+          // Once-read frames: small ones upgrade to the
           // heal path after measuring (their eviction writes are
           // negligible and their per-displacement recompute is the
           // real cost — the exact_fp signature); big once-read frames
@@ -391,11 +378,9 @@ object Dedup {
           // 57.3 vs 82.3 s, memory_only vs memory_and_disk
           // everywhere) — and past the headroom knee they demote to
           // DISK_ONLY anyway. The upgrade recompute is charged once
-          // to index_build and is by construction a ≤healTierMaxMB
-          // frame's build.
-          val healMax = IndexHolder.confLong(spark,
-            "spark.graft.index.healTierMaxMB", 64L, min = 0L) << 20
-          if (mode == "auto" && readsPerSweep < 2.0 && ownBytes <= healMax) {
+          // to index_build and is by construction a ≤64 MiB frame's
+          // build.
+          if (onceRead && ownBytes <= IndexHolder.HealTierMaxBytes) {
             d.unpersist(blocking = true)
             val before2 = sc.getRDDStorageInfo.map(_.id).toSet
             d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -439,6 +424,11 @@ object Dedup {
   private[graft] object IndexHolder {
     val demoteLock = new Object
 
+    /** Largest once-read frame that upgrades to the heal tier. */
+    private val HealTierMaxBytes = 64L << 20
+
+    /** Share of [[indexStorageBudget]] the resident set leaves free. */
+    private val HeadroomFraction = 0.35
 
     /** A memory-tier-resident index frame: the RDD ids its cached
       * blocks live under and its build-time measured bytes (full
@@ -452,37 +442,6 @@ object Dedup {
       */
     final case class Resident(label: String, readsPerSweep: Double,
         df: DataFrame, rddIds: Set[Int], bytes: Long, memBytes: Long)
-
-    /** Validated long knob: names the conf key on a malformed or
-      * out-of-range value instead of surfacing a bare
-      * NumberFormatException.
-      */
-    def confLong(spark: SparkSession, key: String, default: Long,
-        min: Long): Long =
-      spark.conf.getOption(key).map { v =>
-        val n = try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be an integer; got '$v'")
-        }
-        if (n < min) throw new IllegalArgumentException(
-          s"$key must be >= $min; got '$v'")
-        n
-      }.getOrElse(default)
-
-    /** Validated headroom knob: must parse as a double in [0, 1) —
-      * a fraction >= 1 makes the fit target <= 0 and would demote the
-      * ENTIRE resident set, multi-read verify frames included.
-      */
-    def confHeadroom(spark: SparkSession): Double =
-      spark.conf.getOption("spark.graft.index.headroomFraction").map { v =>
-        val h = try v.toDouble catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.index.headroomFraction must be a number in [0, 1); got '$v'")
-        }
-        if (h < 0.0 || h >= 1.0 || h.isNaN) throw new IllegalArgumentException(
-          s"spark.graft.index.headroomFraction must be in [0, 1); got '$v'")
-        h
-      }.getOrElse(0.35)
 
     /** All MEMORY_ONLY frames, every session. Guarded by
       * [[demoteLock]]; stopped-session entries are swept on rebalance.
@@ -502,10 +461,7 @@ object Dedup {
     def rebalance(spark: SparkSession, trigger: String): Unit = {
       val sc = spark.sparkContext
       residents.filterInPlace(r => !r.df.sparkSession.sparkContext.isStopped)
-      val priorityOn = spark.conf.getOption("spark.graft.index.residencyPriority")
-        .forall(_ != "off")
-      val headroom = confHeadroom(spark)
-      val target = (indexStorageBudget(spark) * (1.0 - headroom)).toLong
+      val target = (indexStorageBudget(spark) * (1.0 - HeadroomFraction)).toLong
       var guard = residents.size + 1
       while (guard > 0) {
         guard -= 1
@@ -524,15 +480,10 @@ object Dedup {
           (r.df.sparkSession.sparkContext eq sc) &&
             r.rddIds.iterator.map(liveMem.getOrElse(_, 0L)).sum > (1L << 20))
         if (mine.isEmpty) return
-        // Build-order mode (A side): the newest frame — the one whose
-        // arrival tripped the budget — demotes, exactly the r16 rule.
-        val victim =
-          if (priorityOn)
-            mine(demotionVictim(
-              mine.map(r => (r.label, r.memBytes, r.readsPerSweep)).toSeq))
-          else mine.last
+        val victim = mine(demotionVictim(
+          mine.map(r => (r.label, r.memBytes, r.readsPerSweep)).toSeq))
         System.err.println(
-          f"[graft-index] DISK_ONLY demotion (over-budget, trigger=$trigger, mode=${if (priorityOn) "priority" else "build-order"}): frame=${victim.label} reads=${victim.readsPerSweep}%.0f builtMem=${victim.memBytes / 1e6}%.1f MB builtTotal=${victim.bytes / 1e6}%.1f MB storedTotal=${stored / 1e6}%.1f MB target=${target / 1e6}%.1f MB")
+          f"[graft-index] DISK_ONLY demotion (over-budget, trigger=$trigger): frame=${victim.label} reads=${victim.readsPerSweep}%.0f builtMem=${victim.memBytes / 1e6}%.1f MB builtTotal=${victim.bytes / 1e6}%.1f MB storedTotal=${stored / 1e6}%.1f MB target=${target / 1e6}%.1f MB")
         victim.df.unpersist(blocking = true)
         victim.df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
         victim.df.count()

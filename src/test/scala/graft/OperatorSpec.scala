@@ -1165,35 +1165,6 @@ class OperatorSpec extends SparkSpec {
     assert(Dedup.demotionVictim(tied) == 2)
   }
 
-  test("index ladder knobs: validated, conf key named on bad values") {
-    // r18 advice fix: headroomFraction/healTierMaxMB used to parse
-    // with bare .toDouble/.toLong (opaque NumberFormatException), and
-    // an unvalidated headroom >= 1.0 makes the fit target <= 0 —
-    // demoting the ENTIRE resident set including multi-read frames.
-    val s = spark.newSession()
-    assert(Dedup.IndexHolder.confHeadroom(s) == 0.35) // measured default
-    s.conf.set("spark.graft.index.headroomFraction", "0.2")
-    assert(Dedup.IndexHolder.confHeadroom(s) == 0.2)
-    s.conf.set("spark.graft.index.headroomFraction", "0")
-    assert(Dedup.IndexHolder.confHeadroom(s) == 0.0) // A/B repro value
-    for (bad <- Seq("1.0", "1.5", "-0.1", "NaN", "lots")) {
-      s.conf.set("spark.graft.index.headroomFraction", bad)
-      val e = intercept[IllegalArgumentException](Dedup.IndexHolder.confHeadroom(s))
-      assert(e.getMessage.contains("spark.graft.index.headroomFraction"))
-    }
-    assert(Dedup.IndexHolder.confLong(s,
-      "spark.graft.index.healTierMaxMB", 64L, min = 0L) == 64L)
-    s.conf.set("spark.graft.index.healTierMaxMB", "128")
-    assert(Dedup.IndexHolder.confLong(s,
-      "spark.graft.index.healTierMaxMB", 64L, min = 0L) == 128L)
-    for (bad <- Seq("-1", "many")) {
-      s.conf.set("spark.graft.index.healTierMaxMB", bad)
-      val e = intercept[IllegalArgumentException](Dedup.IndexHolder.confLong(s,
-        "spark.graft.index.healTierMaxMB", 64L, min = 0L))
-      assert(e.getMessage.contains("spark.graft.index.healTierMaxMB"))
-    }
-  }
-
   // --- windowRank: TopK-aggregate form vs the declared window form ---
 
   test("windowRank: TopK aggregate form is row-identical to the row_number window form") {

@@ -5,7 +5,7 @@
 #   SPARK_GRAFT_SF_DIR=/tmp/graft_sf3 SPARK_GRAFT_CPUS=32 \
 #     SPARK_GRAFT_BENCH_SIDE=bench_sf3_r12.json tools/run_bench.sh
 # Extra env knobs (SPARK_GRAFT_BENCH_ONLY, SPARK_GRAFT_CONF,
-# SPARK_GRAFT_ROUND, SPARK_DRIVER_MEM) pass straight through.
+# SPARK_DRIVER_MEM) pass straight through.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 # SPARK_GRAFT_CLASSES: optional classpath snapshot override so a long
