@@ -67,13 +67,12 @@ object GraftSession {
       // Case-mapping table built off the task path (CaseMappingInit).
       .config(DefaultPluginsKey, sessionPlugins)
       // Propagate the per-bucket sort order of the bucketed silver
-      // tables (the ingest-written layout, IngestJob.load, and the
-      // registry's VendasMart.bucketedSilver each write one sorted
-      // file per bucket) into join planning — SPARK-28113 made the
-      // propagation opt-in, and without it a bucketed SMJ is
-      // exchange-free but re-sorts every bucket on every mart build,
-      // forfeiting half the layout's win. Harmless for non-bucketed
-      // reads.
+      // tables (PersistedLayout.write gives the ingest's and the
+      // registry's layouts one sorted file per bucket) into join
+      // planning — SPARK-28113 made the propagation opt-in, and
+      // without it a bucketed SMJ is exchange-free but re-sorts every
+      // bucket on every mart build, forfeiting half the layout's win.
+      // Harmless for non-bucketed reads.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // The AQE broadcast threshold stays at Spark's default. A raised
       // 48 MB bound shipped briefly to fix the sf10 mart pivot spill,

@@ -57,61 +57,13 @@ object VendasMart {
     martFrom(spark, sfDir, li, ord)
   }
 
-  /** Silver-layout bucketing option for the mart's one at-scale SMJ.
-    *
-    * Past the broadcast thresholds the lineitem⟕orders join is a
-    * sort-merge join whose both sides exchange on the order key
-    * (measured 1,115 MB of shuffle at sf3 — SCALE.md). A silver layer
-    * that WRITES the two fact tables bucketed+sorted on that key pays
-    * that shuffle once at ingest; every downstream mart build then
-    * sort-merge-joins bucket-to-bucket with no exchange and no sort —
-    * the standard warehouse layout for a join key that every gold job
-    * reuses. At 100 TB this is the difference between re-shuffling two
-    * fact tables per mart build and never shuffling them again.
-    *
-    * The writer repartitions onto the bucket column FIRST (same
-    * murmur3-pmod hash as the bucket id), so every bucket lands in
-    * exactly ONE file: Spark only trusts (and reuses) the `sortBy`
-    * ordering when a bucket is a single file — multiple part-files per
-    * bucket would keep a SortExec under the downstream SMJ even though
-    * the exchange is gone. Sort elision additionally requires
-    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true`
-    * (SPARK-28113 made ordering propagation opt-in in Spark 3.0);
-    * without the flag the join is exchange-free but re-sorts each
-    * bucket locally — a streaming pass over already-sorted data.
-    * BucketingSpec pins both regimes: no exchange always, and no sort
-    * with the flag set.
-    *
-    * Bucket metadata lives in the session catalog (`saveAsTable` —
-    * path-only parquet has nowhere to record it), so the tables land
-    * in the warehouse under the given names; a location a previous JVM
-    * left there without a catalog entry is cleared first
-    * ([[PersistedLayout.clearStaleLocation]]).
-    */
-  def bucketedSilver(spark: SparkSession, sfDir: String, nBuckets: Int,
-      liTable: String = "graft_silver_lineitem_b",
-      ordTable: String = "graft_silver_orders_b"): Unit = {
-    PersistedLayout.clearStaleLocation(spark, liTable)
-    PersistedLayout.clearStaleLocation(spark, ordTable)
-    Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount")
-      .repartition(nBuckets, col("l_orderkey"))
-      .write.bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
-      .mode("overwrite").format("parquet").saveAsTable(liTable)
-    Tables.orders(spark, sfDir)
-      .select("o_orderkey", "o_custkey", "o_orderdate")
-      .repartition(nBuckets, col("o_orderkey"))
-      .write.bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
-      .mode("overwrite").format("parquet").saveAsTable(ordTable)
-  }
-
-  /** The mart over a bucketed silver layout (see [[bucketedSilver]]):
-    * identical dataflow, fact sides read from the bucketed catalog
-    * tables so the l_orderkey=o_orderkey SMJ plans exchange-free.
+  /** The mart over the bucketed silver layout of the two fact tables
+    * (see [[ensureBucketedSilver]]): identical dataflow, fact sides
+    * read from the bucketed catalog tables so the
+    * l_orderkey=o_orderkey SMJ plans exchange-free.
     */
   def martBucketed(spark: SparkSession, sfDir: String,
-      liTable: String = "graft_silver_lineitem_b",
-      ordTable: String = "graft_silver_orders_b"): DataFrame =
+      liTable: String, ordTable: String): DataFrame =
     martFrom(spark, sfDir, spark.table(liTable), spark.table(ordTable))
 
   /** Bucket count of a silver layout written through `spark`: the one
@@ -143,14 +95,29 @@ object VendasMart {
   def SilverBuckets: Int = silverBuckets(SparkSession.active)
 
   /** One-time per-(session, corpus) bucketed-silver build backing
-    * `q_vendas_mart_bucketed` — the [[graft.operators.Dedup]]
-    * index-memo contract applied to the layout: repeated invocations
-    * return the same catalog table names without re-writing. Table
-    * names carry a corpus tag so two scale dirs never collide in one
-    * warehouse; a concurrent double-build is benign (`overwrite`,
-    * idempotent). The value records the width the layout was built
-    * at, and an entry at another width is a miss. Stopped-session
-    * keys are swept like the Dedup caches.
+    * `q_vendas_mart_bucketed`, at the session's width
+    * ([[silverBuckets]]) — the [[graft.operators.Dedup]] index-memo
+    * contract applied to the layout: repeated invocations return the
+    * same catalog table names without re-writing.
+    *
+    * Past the broadcast thresholds the mart's lineitem⟕orders join is
+    * a sort-merge join whose both sides exchange on the order key
+    * (measured 1,115 MB of shuffle at sf3 — SCALE.md). Writing the two
+    * fact tables bucketed and sorted on that key
+    * ([[PersistedLayout.write]], one file per bucket) pays that
+    * shuffle once; every mart build then sort-merge-joins bucket to
+    * bucket with no exchange and no sort. Sort elision additionally
+    * requires `spark.sql.legacy.bucketedTableScan.outputOrdering=true`
+    * (SPARK-28113; GraftSession.configure sets it). BucketingSpec pins
+    * both: no exchange, and no sort with the flag set.
+    *
+    * The tables are external, at their warehouse directories
+    * ([[PersistedLayout.warehousePath]]). Table names carry a corpus
+    * tag so two scale dirs never collide in one warehouse; a
+    * concurrent double-build is benign (`overwrite`, idempotent). The
+    * memo records the width the layout was built at, and an entry at
+    * another width is a miss. Stopped-session keys are swept like the
+    * Dedup caches.
     */
   private val silverCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Int, String, String)]
@@ -159,55 +126,41 @@ object VendasMart {
     */
   private[graft] def resetSilverCache(): Unit = silverCache.clear()
 
-  /** The layout at the session's own width ([[silverBuckets]]). */
-  def ensureBucketedSilver(spark: SparkSession, sfDir: String): (String, String) =
-    ensureBucketedSilver(spark, sfDir, silverBuckets(spark))
-
-  def ensureBucketedSilver(spark: SparkSession, sfDir: String,
-      nBuckets: Int): (String, String) = {
+  def ensureBucketedSilver(spark: SparkSession, sfDir: String): (String, String) = {
     silverCache.keySet.foreach { k =>
       if (k._1.sparkContext.isStopped) silverCache.remove(k)
     }
+    val nBuckets = silverBuckets(spark)
     val key = (spark, sfDir)
     if (silverCache.get(key).exists(_._1 != nBuckets)) silverCache.remove(key)
     val (_, li, ord) = silverCache.getOrElseUpdate(key, {
       val tag = sfDir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
-      val li = s"graft_silver_lineitem_b_$tag"
-      val ord = s"graft_silver_orders_b_$tag"
-      val liSrc = Tables.lineitem(spark, sfDir)
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount")
-      val ordSrc = Tables.orders(spark, sfDir)
-        .select("o_orderkey", "o_custkey", "o_orderdate")
+      val tables = Seq(
+        (s"graft_silver_lineitem_b_$tag", "l_orderkey", Tables.lineitem(spark, sfDir)
+          .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount")),
+        (s"graft_silver_orders_b_$tag", "o_orderkey", Tables.orders(spark, sfDir)
+          .select("o_orderkey", "o_custkey", "o_orderdate")))
       // Fingerprint the source corpus BEFORE a build reads it: a
       // corpus regenerated between the build's read and a post-build
       // listing would stamp the NEW listing onto buckets built from
       // the OLD data — the exact staleness the stamp exists to catch.
       val src = sourceStamp(spark, sfDir, nBuckets)
-      def reuse(table: String, key: String, schema: org.apache.spark.sql.types.StructType) =
+      val reused = tables.forall { case (table, k, df) =>
         PersistedLayout.reRegister(spark, table, PersistedLayout.warehousePath(spark, table),
-          key, schema, nBuckets, src)
-      val reused = reuse(li, "l_orderkey", liSrc.schema) && reuse(ord, "o_orderkey", ordSrc.schema)
-      if (!reused) {
-        // The reuse attempt may have half-succeeded (lineitem
-        // re-registered as an EXTERNAL table, orders refused — e.g. a
-        // prior session died between the two stamp writes). Rebuilding
-        // through that state breaks: saveAsTable(Overwrite) DROPS an
-        // external table but leaves its files, and the managed CTAS
-        // into the non-empty warehouse location then throws. So the
-        // rebuild path first drops BOTH names from the catalog and
-        // deletes BOTH warehouse locations unconditionally.
-        Seq(li, ord).foreach { t =>
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          PersistedLayout.dropLocation(spark, t)
-        }
-        bucketedSilver(spark, sfDir, nBuckets, li, ord)
-        // Stamp only on a fresh build: re-stamping on the reuse path
-        // would re-date a layout built from an OLDER corpus if the
-        // source were regenerated mid-session.
-        Seq(li, ord).foreach(t =>
-          PersistedLayout.stamp(spark, PersistedLayout.warehousePath(spark, t), src))
+          k, df.schema, nBuckets, src)
       }
-      (nBuckets, li, ord)
+      // A miss rebuilds both, even one that re-registered (a prior
+      // session may have died between the two stamp writes). The
+      // overwrite replaces the files at each directory whether or not
+      // the catalog holds the table. Only a fresh build stamps:
+      // re-stamping on the reuse path would re-date a layout built
+      // from an OLDER corpus if the source were regenerated
+      // mid-session.
+      if (!reused) tables.foreach { case (table, k, df) =>
+        PersistedLayout.write(df, table, PersistedLayout.warehousePath(spark, table),
+          k, nBuckets, src)
+      }
+      (nBuckets, tables(0)._1, tables(1)._1)
     })
     (li, ord)
   }

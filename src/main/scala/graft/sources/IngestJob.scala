@@ -100,18 +100,16 @@ final class IngestJob(spec: TableSpec) {
   /** Silver sink at `<silverRoot>/<prefix>`.
     *
     * A spec with a `bucketKey` is written in the layout the gold mart's
-    * fact join reads: repartitioned on the key to
-    * [[VendasMart.silverBuckets]] partitions, then `bucketBy`/`sortBy`
-    * the key through `saveAsTable` with the silver prefix as its path.
-    * That is an external table with one file per bucket, and the same
-    * Parquet at the same path, so plain readers (the checks,
-    * `--plain-silver` gold, the incremental mart) are unaffected. The
-    * ingest pays the key's shuffle once; every gold run then joins
-    * bucket to bucket without re-writing either fact table. After the
-    * files, a [[PersistedLayout]] stamp records the key, the width and
-    * the table's own file listing, so that gold in another JVM can
-    * re-register the files, and a rewritten or partly deleted
-    * directory never matches.
+    * fact join reads: [[PersistedLayout.write]] buckets and sorts it on
+    * the key at [[VendasMart.silverBuckets]], one file per bucket, as
+    * an external table at the silver prefix. That is the same Parquet
+    * at the same path, so plain readers (the checks, `--plain-silver`
+    * gold, the incremental mart) are unaffected. The ingest pays the
+    * key's shuffle once; every gold run then joins bucket to bucket
+    * without re-writing either fact table. The layout's stamp records
+    * the key, the width and the table's own file listing, so that gold
+    * in another JVM can re-register the files, and a rewritten or
+    * partly deleted directory never matches.
     *
     * `singleObject = true` mirrors the reference's
     * one-parquet-object-per-table layout (`…customer…py:71-78`) for
@@ -120,15 +118,12 @@ final class IngestJob(spec: TableSpec) {
     */
   def load(df: DataFrame, silverRoot: String, singleObject: Boolean = false): Unit = {
     val spark = df.sparkSession
-    val dir = IngestJob.silverDir(spark, silverRoot, spec)
+    val dir = IngestJob.silverDir(silverRoot, spec)
     (if (singleObject) None else spec.bucketKey) match {
       case Some(key) =>
         val n = VendasMart.silverBuckets(spark)
-        df.repartition(n, col(key))
-          .write.bucketBy(n, key).sortBy(key)
-          .option("path", dir.toString).mode("overwrite").format("parquet")
-          .saveAsTable(IngestJob.silverTable(spec))
-        PersistedLayout.stamp(spark, dir, IngestJob.fingerprint(spark, dir, key, n))
+        PersistedLayout.write(df, IngestJob.silverTable(spec), dir, key, n,
+          IngestJob.fingerprint(spark, dir, key, n))
       case None =>
         val out = if (singleObject) df.coalesce(1) else df
         out.write.mode("overwrite").parquet(dir.toString)
@@ -142,7 +137,7 @@ final class IngestJob(spec: TableSpec) {
     */
   private[graft] def bucketedTable(spark: SparkSession, silverRoot: String,
       n: Int): Option[String] = {
-    val dir = IngestJob.silverDir(spark, silverRoot, spec)
+    val dir = IngestJob.silverDir(silverRoot, spec)
     val table = IngestJob.silverTable(spec)
     spec.bucketKey.filter(key => PersistedLayout.reRegister(spark, table, dir, key,
       silverSchema(spark), n, IngestJob.fingerprint(spark, dir, key, n))).map(_ => table)
@@ -171,14 +166,8 @@ object IngestJob {
     */
   private[graft] def silverTable(spec: TableSpec): String = s"olist_silver_${spec.name}"
 
-  /** A spec's silver directory, qualified: a relative `path` given to
-    * `saveAsTable` would resolve under the warehouse, not where plain
-    * Parquet readers look.
-    */
-  private def silverDir(spark: SparkSession, silverRoot: String, spec: TableSpec): Path = {
-    val dir = new Path(s"$silverRoot/${spec.prefix}")
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
-  }
+  private def silverDir(silverRoot: String, spec: TableSpec): Path =
+    new Path(s"$silverRoot/${spec.prefix}")
 
   /** What a keyed silver table's stamp records: its bucket key and
     * width, then its own data-file listing.

@@ -47,9 +47,9 @@ object OlistVendas {
       silver(spark, silverRoot, OlistCatalog.orderItems).select(ItemCols: _*),
       silver(spark, silverRoot, OlistCatalog.orders).select(OrderCols: _*))
 
-  /** The mart with explicit fact sides — shared by the plain path and
-    * the bucketed-silver path so the dataflow cannot drift between
-    * layouts.
+  /** The mart with explicit fact sides — shared by the plain path,
+    * the bucketed-silver path and the streaming [[incrementalMart]],
+    * so the dataflow cannot drift between them.
     */
   private def martOver(spark: SparkSession, silverRoot: String,
       items: DataFrame, orders: DataFrame): DataFrame = {
@@ -66,7 +66,27 @@ object OlistVendas {
       .sum("payment_value")                                           // :91-92
 
     // joins :107-111, fillna :114-120, transforms+rename :123-149
-    martFrom(items, orders, products, customers, paymentsPivot)
+    items
+      .join(orders, Seq("order_id"), "left")
+      .join(products, Seq("product_id"), "left")
+      .join(customers, Seq("customer_id"), "left")
+      .join(paymentsPivot, Seq("order_id"), "left")
+      .na.fill(0.0, MoneyCols)
+      .select(
+        col("order_id").as("PEDIDO"),
+        col("product_id").as("ID_PRODUTO"),
+        col("customer_id").as("ID_CLIENTE"),
+        to_date(col("order_purchase_timestamp")).as("DATA_VENDA"),
+        col("price").as("VALOR_VENDA"),
+        col("freight_value").as("FRETE"),
+        translate(upper(col("product_category_name")), "_", " ").as("CATEGORIA_PRODUTO"),
+        upper(col("customer_city")).as("CIDADE_CLIENTE"),
+        col("customer_state").as("ESTADO_CLIENTE"),
+        col("boleto").as("VALOR_BOLETO"),
+        col("credit_card").as("VALOR_CREDITO"),
+        col("debit_card").as("VALOR_DEBITO"),
+        col("voucher").as("VALOR_VOUCHER"),
+        col("not_defined").as("VALOR_NAO_DEFINIDO"))
   }
 
   /** The mart at bucket width `nBuckets`, and which layout it read:
@@ -93,35 +113,6 @@ object OlistVendas {
     }
   }
 
-  /** The mart projection shared by the batch and streaming variants:
-    * joins the (possibly streaming) item grain against the static
-    * dimension frames and applies fillna / scalar transforms / the
-    * Portuguese rename. Extracted so the two variants cannot drift.
-    */
-  def martFrom(items: DataFrame, orders: DataFrame, products: DataFrame,
-      customers: DataFrame, paymentsPivot: DataFrame): DataFrame =
-    items
-      .join(orders, Seq("order_id"), "left")
-      .join(products, Seq("product_id"), "left")
-      .join(customers, Seq("customer_id"), "left")
-      .join(paymentsPivot, Seq("order_id"), "left")
-      .na.fill(0.0, MoneyCols)
-      .select(
-        col("order_id").as("PEDIDO"),
-        col("product_id").as("ID_PRODUTO"),
-        col("customer_id").as("ID_CLIENTE"),
-        to_date(col("order_purchase_timestamp")).as("DATA_VENDA"),
-        col("price").as("VALOR_VENDA"),
-        col("freight_value").as("FRETE"),
-        translate(upper(col("product_category_name")), "_", " ").as("CATEGORIA_PRODUTO"),
-        upper(col("customer_city")).as("CIDADE_CLIENTE"),
-        col("customer_state").as("ESTADO_CLIENTE"),
-        col("boleto").as("VALOR_BOLETO"),
-        col("credit_card").as("VALOR_CREDITO"),
-        col("debit_card").as("VALOR_DEBITO"),
-        col("voucher").as("VALOR_VOUCHER"),
-        col("not_defined").as("VALOR_NAO_DEFINIDO"))
-
   /** Incremental (streaming) gold mart: the order-items grain arrives
     * as a stream (new silver files); dimensions and the payments pivot
     * are static frames. Stream-static left joins are fully supported
@@ -137,15 +128,8 @@ object OlistVendas {
       .schema(itemsSchema)
       .parquet(s"$silverRoot/${OlistCatalog.orderItems.prefix}")
       .select(ItemCols: _*)
-    val orders = silver(spark, silverRoot, OlistCatalog.orders).select(OrderCols: _*)
-    val products = silver(spark, silverRoot, OlistCatalog.products)
-      .select("product_category_name", "product_id")
-    val customers = silver(spark, silverRoot, OlistCatalog.customers)
-      .select("customer_id", "customer_city", "customer_state")
-    val paymentsPivot = silver(spark, silverRoot, OlistCatalog.orderPayments)
-      .select("order_id", "payment_type", "payment_value")
-      .groupBy("order_id").pivot("payment_type", PaymentTypes).sum("payment_value")
-    martFrom(items, orders, products, customers, paymentsPivot)
+    martOver(spark, silverRoot, items,
+      silver(spark, silverRoot, OlistCatalog.orders).select(OrderCols: _*))
   }
 
   /** Stream→JDBC mirror via `foreachBatch` — the bridge for sinks

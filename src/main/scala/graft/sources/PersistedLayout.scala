@@ -4,9 +4,10 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.IOUtils
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTableType}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** A bucketed Parquet layout written once and trusted across sessions
@@ -24,17 +25,20 @@ import org.apache.spark.sql.types.StructType
   * the layout was built from and at what width) plus the layout's own
   * data-file count, and a layout is reused only when both still match.
   *
-  * Two users: [[graft.operators.VendasMart.ensureBucketedSilver]]
-  * (managed warehouse tables, fingerprinted by the source corpus
-  * listing) and the ingest's `order_id`-keyed silver tables
-  * ([[IngestJob.load]], external tables at the silver path,
-  * fingerprinted by their own file listing).
+  * It owns the layout's write ([[write]]: one file per bucket, an
+  * external table over the given directory, then the stamp), the
+  * stamp and the reuse ([[reRegister]]). Two users:
+  * [[graft.operators.VendasMart.ensureBucketedSilver]] (the registry's
+  * fact tables at their warehouse directories, fingerprinted by the
+  * source corpus listing) and the ingest's `order_id`-keyed silver
+  * tables ([[IngestJob.load]], at the silver path, fingerprinted by
+  * their own file listing).
   */
 object PersistedLayout {
 
   val StampFile = "_graft_src_stamp"
 
-  /** The default warehouse location of a managed table. */
+  /** A table's directory under the session's warehouse. */
   def warehousePath(spark: SparkSession, table: String): Path =
     new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
 
@@ -70,11 +74,30 @@ object PersistedLayout {
   private def layoutLine(fs: FileSystem, dir: Path): String =
     s"layoutFiles=${fs.listStatus(dir).count(isData)}"
 
-  /** Stamp the freshly written layout at `dir` with `fingerprint`. */
-  def stamp(spark: SparkSession, dir: Path, fingerprint: String): Unit = {
+  /** Write `df` as `table`'s bucketed layout at `dir`, then stamp it
+    * with `fingerprint`, which is evaluated after the files land.
+    *
+    * The frame is repartitioned onto `key` first (the same
+    * murmur3-pmod hash as the bucket id), so every bucket lands in
+    * exactly one file: Spark only trusts (and reuses) the `sortBy`
+    * ordering when a bucket is a single file. `dir` is the table's
+    * path, so the table is external; an overwrite replaces whatever
+    * files sit there, whether or not the catalog knows the table (a
+    * previous JVM's layout, a killed run's leftovers).
+    */
+  def write(df: DataFrame, table: String, dir: Path, key: String, n: Int,
+      fingerprint: => String): Unit = {
+    val spark = df.sparkSession
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(dir, StampFile), true)
-    try out.write(s"$fingerprint\n${layoutLine(fs, dir)}".getBytes(StandardCharsets.UTF_8))
+    // Qualified: a relative path given to saveAsTable would resolve
+    // under the warehouse, not where plain Parquet readers look.
+    val location = fs.makeQualified(dir)
+    df.repartition(n, col(key))
+      .write.bucketBy(n, key).sortBy(key)
+      .option("path", location.toString).mode("overwrite").format("parquet")
+      .saveAsTable(table)
+    val out = fs.create(new Path(location, StampFile), true)
+    try out.write(s"$fingerprint\n${layoutLine(fs, location)}".getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
@@ -120,27 +143,5 @@ object PersistedLayout {
          |INTO $nBuckets BUCKETS
          |LOCATION '$location'""".stripMargin)
     true
-  }
-
-  /** Delete a managed table's location that exists on disk but has no
-    * catalog entry. `saveAsTable` in `overwrite` mode only overwrites a
-    * table the catalog knows; with the in-memory catalog, a warehouse
-    * directory a previous JVM left (killed run, fresh session over the
-    * same repo) has none, and the write fails with
-    * LOCATION_ALREADY_EXISTS instead of overwriting. A table the
-    * catalog does know follows the normal overwrite path untouched.
-    */
-  def clearStaleLocation(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table)) dropLocation(spark, table)
-
-  /** Unconditionally delete a table's default warehouse location: the
-    * rebuild-path companion to a `DROP TABLE IF EXISTS` (dropping an
-    * EXTERNAL table leaves its files, and the managed CTAS into the
-    * non-empty location would then throw).
-    */
-  def dropLocation(spark: SparkSession, table: String): Unit = {
-    val path = warehousePath(spark, table)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
   }
 }

@@ -22,6 +22,9 @@ import graft.sources.{IngestJob, OlistVendas, Sinks}
   *   RunPipeline check <goldRoot> <jdbcUrl> <table>
   *     CI assertion stage: the gold mart parquet and the JDBC mirror
   *     must both materialize, be non-empty, and agree on row count.
+  *   RunPipeline grain <sfDir>
+  *     CI parity probe: the registry's vendas mart row count, which
+  *     must equal the harness star schema's lineitem count.
   *   RunPipeline <bronzeRoot> <silverRoot> <goldRoot>
   *     legacy single-application form (ingest + gold, no JDBC).
   *
@@ -82,36 +85,6 @@ object RunPipeline {
           s"gold parquet ($nGold rows) and JDBC mirror ($nJdbc rows) disagree")
         println(s"STAGE OK check rows=$nGold table=$table")
       }
-    case "mart" :: sfDir :: gold :: rest0 =>
-      // Registry-side (harness star schema) gold build through the
-      // production entry point, for end-to-end layout A/Bs at real
-      // scale. Bucketed silver is the default (r18 flip, same
-      // rationale as `gold`): the fact sides are laid out first, or
-      // re-registered from a previous JVM's stamped layout (timed
-      // separately as relayout_s), and the mart reads the bucketed
-      // catalog tables. `--plain-silver` keeps the no-layout form for
-      // A/B.
-      val (flags, rest) = rest0.partition(isLayoutFlag)
-      if (rest.nonEmpty) { usage(); sys.exit(2) }
-      val layout = layoutOrExit(flags)
-      withSpark { s =>
-        val buckets = bucketsIn(s, layout)
-        val tR0 = System.nanoTime()
-        val mart = buckets match {
-          case Some(n) =>
-            val (li, ord) = operators.VendasMart.ensureBucketedSilver(s, sfDir, n)
-            operators.VendasMart.martBucketed(s, sfDir, li, ord)
-          case None => operators.VendasMart.mart(s, sfDir)
-        }
-        val relayout = (System.nanoTime() - tR0) / 1e9
-        val t0 = System.nanoTime()
-        mart.write.mode("overwrite").parquet(s"$gold/vendas_mart")
-        val secs = (System.nanoTime() - t0) / 1e9
-        val n = s.read.parquet(s"$gold/vendas_mart").count()
-        println(f"STAGE OK mart rows=$n sf=$sfDir " +
-          f"buckets=${buckets.getOrElse(0)} relayout_s=$relayout%.2f secs=$secs%.2f")
-      }
-
     case "grain" :: sfDir :: Nil =>
       // CI parity probe: the registry's vendas_mart (the oracle-gated
       // dataflow, VendasMart.mart) must preserve the item grain — its
@@ -139,7 +112,7 @@ object RunPipeline {
   private[graft] def isLayoutFlag(arg: String): Boolean =
     arg.startsWith("--bucketed-silver") || arg == "--plain-silver"
 
-  /** Layout-flag parsing for `gold`/`mart`, before any session
+  /** Layout-flag parsing for `gold`, before any session
     * starts: `None` keeps plain silver (`--plain-silver`, or
     * `--bucketed-silver=0` so orchestration templates can pass the
     * flag unconditionally and toggle via a variable); `Some(Some(n))`
@@ -183,11 +156,10 @@ object RunPipeline {
     System.err.println(
       """usage: RunPipeline ingest <bronzeRoot> <silverRoot>
         |       RunPipeline gold <silverRoot> <goldRoot> [--bucketed-silver[=N] | --plain-silver] [jdbcUrl table]
-        |       RunPipeline mart <sfDir> <goldRoot> [--bucketed-silver[=N] | --plain-silver]
         |       RunPipeline check <goldRoot> <jdbcUrl> <table>
         |       RunPipeline grain <sfDir>
         |       RunPipeline <bronzeRoot> <silverRoot> <goldRoot>
-        |(bucketed silver is the default for gold/mart, at the session's shuffle width
+        |(bucketed silver is the default for gold, at the session's shuffle width
         | if set, else at a local session's cores; --plain-silver keeps the no-layout form.
         | gold reads silver plain at a width the ingest did not write)""".stripMargin)
 }

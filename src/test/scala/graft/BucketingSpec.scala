@@ -71,7 +71,7 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed silver layout makes the vendas mart's fact join exchange-free") {
     // The mart-level version of the co-bucketed join above: write the
-    // two fact tables through VendasMart.bucketedSilver, rebuild the
+    // two fact tables through PersistedLayout.write, rebuild the
     // mart from them, and assert the l_orderkey=o_orderkey join subtree
     // contains no exchange. Broadcast is disabled so the join plans the
     // way it does past the thresholds at scale (SMJ) — AQE off for a
@@ -80,9 +80,9 @@ class BucketingSpec extends SparkSpec {
     val savedAqe = spark.conf.get(aqeKey)
     // Ordering propagation from bucketed scans is opt-in since Spark
     // 3.0 (SPARK-28113): without it the planner re-sorts each bucket
-    // locally even though bucketedSilver writes one sorted file per
+    // locally even though the writer leaves one sorted file per
     // bucket. The elision needs BOTH this flag and the single-file
-    // layout (the repartition in bucketedSilver). GraftSession.configure
+    // layout (the writer's repartition). GraftSession.configure
     // sets it on every session, the shared one included.
     withConfs(aqeKey -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       ordKey -> "true")(bucketedMartBody())
@@ -92,11 +92,26 @@ class BucketingSpec extends SparkSpec {
     assert(spark.conf.get(aqeKey) == savedAqe)
   }
 
+  /** Drops `tables` and deletes their warehouse directories: dropping
+    * an external table leaves its files.
+    */
+  private def dropWithFiles(tables: String*): Unit = tables.foreach { t =>
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val dir = sources.PersistedLayout.warehousePath(spark, t)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir)) fs.delete(dir, true)
+  }
+
   private def bucketedMartBody(): Unit =
     try {
       val sfDir = "/root/testdata/sf0.001"
-      operators.VendasMart.bucketedSilver(spark, sfDir, 4,
-        "t_li_b", "t_ord_b")
+      def write(table: String, key: String, df: org.apache.spark.sql.DataFrame) =
+        sources.PersistedLayout.write(df, table,
+          sources.PersistedLayout.warehousePath(spark, table), key, 4, "test")
+      write("t_li_b", "l_orderkey", Tables.lineitem(spark, sfDir)
+        .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount"))
+      write("t_ord_b", "o_orderkey", Tables.orders(spark, sfDir)
+        .select("o_orderkey", "o_custkey", "o_orderdate"))
       val bucketed = operators.VendasMart.martBucketed(spark, sfDir,
         "t_li_b", "t_ord_b")
 
@@ -106,7 +121,7 @@ class BucketingSpec extends SparkSpec {
       // The fact-fact join (the one bucketing targets) must have no
       // exchange below it; the dimension joins above it are untouched.
       val factJoin = exchangeFreeFactJoin(bucketed, "l_orderkey", "o_orderkey")
-      // And SORT-free: bucketedSilver repartitions onto the bucket
+      // And SORT-free: the writer repartitions onto the bucket
       // column before the write, so each bucket is a single file and
       // Spark reuses the sortBy ordering instead of re-sorting under
       // the SMJ. (With multiple part-files per bucket this assertion
@@ -117,10 +132,7 @@ class BucketingSpec extends SparkSpec {
       }
       assert(sorts.isEmpty,
         s"expected sort-free bucketed fact join (single file per bucket), got:\n$factJoin")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS t_li_b")
-      spark.sql("DROP TABLE IF EXISTS t_ord_b")
-    }
+    } finally dropWithFiles("t_li_b", "t_ord_b")
 
   /** Run `body` at shuffle width `n`, AQE off and broadcast disabled
     * (so the fact join plans as the at-scale sort-merge join).
@@ -176,31 +188,37 @@ class BucketingSpec extends SparkSpec {
 
   test("a layout stamped at another width rebuilds instead of re-registering") {
     val sfDir = "/root/testdata/sf0.001"
-    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(t: String): Set[String] = {
+      val dir = sources.PersistedLayout.warehousePath(spark, t)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+        .map(_.getPath.getName).filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    }
     operators.VendasMart.resetSilverCache()
     val (li, ord) = atWidth(3)(operators.VendasMart.ensureBucketedSilver(spark, sfDir))
-    // A new JVM: the width-3 files and stamps stay on disk, the
-    // in-memory catalog forgets both tables.
+    val width3 = Seq(li, ord).map(t => t -> dataFiles(t)).toMap
+    // A new JVM: the width-3 files and stamps stay on disk (the tables
+    // are external), the in-memory catalog forgets both tables.
     for (t <- Seq(li, ord)) {
-      val dir = new org.apache.hadoop.fs.Path(wh, t.toLowerCase)
-      val aside = new org.apache.hadoop.fs.Path(wh, s"${t.toLowerCase}_aside")
-      assert(fs.rename(dir, aside))
       spark.sql(s"DROP TABLE $t")
-      assert(fs.rename(aside, dir))
-      assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_src_stamp")))
+      assert(width3(t).size == 3, t)
+      val dir = sources.PersistedLayout.warehousePath(spark, t)
+      assert(dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(new org.apache.hadoop.fs.Path(dir, sources.PersistedLayout.StampFile)), t)
     }
     operators.VendasMart.resetSilverCache()
     atWidth(5) {
       assert(operators.VendasMart.ensureBucketedSilver(spark, sfDir) == ((li, ord)))
-      // Re-registered would be an EXTERNAL table over the 3 old files.
-      for (t <- Seq(li, ord)) assert(layoutOf(t) == ((Some(5), "MANAGED", 5)), t)
+      // Re-registered would be a width-5 table over the 3 old files.
+      for (t <- Seq(li, ord)) {
+        assert(layoutOf(t) == ((Some(5), "EXTERNAL", 5)), t)
+        assert(dataFiles(t).intersect(width3(t)).isEmpty, s"$t kept width-3 files")
+      }
     }
     // Same session, back to width 3: the catalog's width-5 tables are
     // not reused under the wrong count either.
     atWidth(3) {
       operators.VendasMart.ensureBucketedSilver(spark, sfDir)
-      for (t <- Seq(li, ord)) assert(layoutOf(t) == ((Some(3), "MANAGED", 3)), t)
+      for (t <- Seq(li, ord)) assert(layoutOf(t) == ((Some(3), "EXTERNAL", 3)), t)
       exchangeFreeFactJoin(operators.VendasMart.martBucketed(spark, sfDir, li, ord),
         "l_orderkey", "o_orderkey")
     }
@@ -211,8 +229,8 @@ class BucketingSpec extends SparkSpec {
     // exit while their files survive in the warehouse;
     // PersistedLayout.reRegister re-attaches them via external-table
     // DDL iff the _graft_src_stamp still matches the source corpus.
-    // Simulate "previous session" by copying a freshly-built managed
-    // table's directory to a name the catalog has never seen.
+    // Simulate "previous session" by copying a freshly-built table's
+    // directory to a name the catalog has never seen.
     val sfDir = "/root/testdata/sf0.001"
     val liSrc = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount")
@@ -226,11 +244,8 @@ class BucketingSpec extends SparkSpec {
       "l_orderkey", liSrc.schema, n, src)
     try {
       // Build + stamp under one name; clone the files under another.
-      liSrc.repartition(n, col("l_orderkey"))
-        .write.bucketBy(n, "l_orderkey")
-        .sortBy("l_orderkey").mode("overwrite").format("parquet")
-        .saveAsTable("t_reuse_src")
-      sources.PersistedLayout.stamp(spark, loc("t_reuse_src"), src)
+      sources.PersistedLayout.write(liSrc, "t_reuse_src", loc("t_reuse_src"),
+        "l_orderkey", n, src)
       org.apache.hadoop.fs.FileUtil.copy(fs, loc("t_reuse_src"),
         fs, loc("t_reuse_orphan"), false, conf)
       org.apache.hadoop.fs.FileUtil.copy(fs, loc("t_reuse_src"),
@@ -266,12 +281,7 @@ class BucketingSpec extends SparkSpec {
       fs.delete(victim, false)
       assert(!reRegister("t_reuse_partial"))
       assert(!spark.catalog.tableExists("t_reuse_partial"))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS t_reuse_src")
-      spark.sql("DROP TABLE IF EXISTS t_reuse_orphan") // external: files remain
-      Seq("t_reuse_orphan", "t_reuse_stale", "t_reuse_partial").foreach(t =>
-        if (fs.exists(loc(t))) fs.delete(loc(t), true))
-    }
+    } finally dropWithFiles("t_reuse_src", "t_reuse_orphan", "t_reuse_stale", "t_reuse_partial")
   }
 
   test("a half-re-registered layout rebuilds cleanly instead of failing the CTAS") {

@@ -167,10 +167,6 @@ class OlistPipelineSpec extends SparkSpec {
     assert(mirrored == batch)
   }
 
-  /** The warehouse names an older gold re-laid its fact sides out
-    * under. Gold no longer writes there; a miss reads silver plain.
-    */
-  private val relayoutTables = Seq("olist_silver_items_b", "olist_silver_orders_b")
   private val factSpecs = Seq(OlistCatalog.orderItems, OlistCatalog.orders)
   private def fs = new Path(spark.conf.get("spark.sql.warehouse.dir"))
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -193,13 +189,26 @@ class OlistPipelineSpec extends SparkSpec {
 
   private def goldRows(gold: String) = rowBag(spark.read.parquet(s"$gold/olist/vendas"))
 
-  /** Deletes what an older JVM left at the [[relayoutTables]] locations. */
-  private def clearRelayoutLocations(): Unit =
-    relayoutTables.foreach(PersistedLayout.dropLocation(spark, _))
+  /** Every file and directory under the warehouse directory, with its
+    * length and mtime.
+    */
+  private def warehouseListing(): Seq[String] = {
+    def walk(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap(s =>
+      s"${s.getPath} ${s.getLen} ${s.getModificationTime}" +:
+        (if (s.isDirectory) walk(s.getPath) else Nil))
+    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    if (fs.exists(wh)) walk(wh).sorted else Nil
+  }
 
-  private def assertNoRelayout(what: String): Unit =
-    for (t <- relayoutTables)
-      assert(!fs.exists(PersistedLayout.warehousePath(spark, t)), s"$what: $t re-laid-out")
+  /** Runs `gold` and asserts it left the warehouse directory's listing
+    * as it found it: gold reads a layout or silver, and writes none.
+    */
+  private def leavesWarehouse[T](what: String)(gold: => T): T = {
+    val before = warehouseListing()
+    val result = gold
+    assert(warehouseListing() == before, s"$what: gold wrote under the warehouse")
+    result
+  }
 
   test("bucketed gold re-runs over a warehouse location a previous JVM left behind") {
     val bronze = tmpDir("obronze")
@@ -207,26 +216,24 @@ class OlistPipelineSpec extends SparkSpec {
     val gold = tmpDir("ogold")
     writeBronze(bronze)
     IngestJob.runAll(spark, bronze, silver)
-    // A previous JVM's re-layout: files under the managed locations, no
-    // entry in this session's in-memory catalog.
-    clearRelayoutLocations()
+    // A previous JVM's files under the warehouse locations of the
+    // silver tables' names, with no entry in this session's catalog.
     val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val stale = for (t <- relayoutTables) yield {
-      val f = new Path(new Path(wh, t), "part-00000-stale_00000.c000.snappy.parquet")
-      val out = fs.create(f, true)
-      try out.write("stale".getBytes("UTF-8")) finally out.close()
-      f
-    }
-    // A width the ingest did not write reads silver plain, and leaves
-    // those locations as it found them.
-    val w = VendasMart.silverBuckets(spark) + 1
-    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "plain")
-    assert(spark.read.parquet(s"$gold/olist/vendas").count() == 3)
-    for (f <- stale) {
-      assert(fs.getFileStatus(f).getLen == "stale".length, f)
-      assert(fs.listStatus(f.getParent).length == 1, f.getParent)
-    }
-    relayoutTables.foreach(t => assert(!spark.catalog.tableExists(t), t))
+    val staleDirs = factSpecs.map(spec => new Path(wh, IngestJob.silverTable(spec)))
+    try {
+      for (d <- staleDirs) {
+        val out = fs.create(new Path(d, "part-00000-stale_00000.c000.snappy.parquet"), true)
+        try out.write("stale".getBytes("UTF-8")) finally out.close()
+      }
+      // Gold in place, and at a width the ingest did not write (plain),
+      // leaves those files as it found them.
+      val w = VendasMart.silverBuckets(spark)
+      for ((width, layout) <- Seq(w -> "silver", (w + 1) -> "plain")) {
+        assert(leavesWarehouse(s"width $width")(
+          OlistVendas.run(spark, silver, gold, buckets = Some(width))) == layout)
+        assert(spark.read.parquet(s"$gold/olist/vendas").count() == 3)
+      }
+    } finally staleDirs.foreach(fs.delete(_, true))
   }
 
   test("the ingest writes orders and order_items bucketed; gold reads them in place") {
@@ -234,7 +241,6 @@ class OlistPipelineSpec extends SparkSpec {
     val silver = tmpDir("lsilver")
     val gold = tmpDir("lgold")
     writeBronze(bronze)
-    clearRelayoutLocations()
     IngestJob.runAll(spark, bronze, silver)
     val w = VendasMart.silverBuckets(spark)
     for (spec <- factSpecs) {
@@ -246,8 +252,8 @@ class OlistPipelineSpec extends SparkSpec {
       val files = dataFiles(factDir(silver, spec))
       assert(files.nonEmpty && files.size <= w, s"${spec.name}: ${files.keys}")
     }
-    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "silver")
-    assertNoRelayout("in place")
+    assert(leavesWarehouse("in place")(
+      OlistVendas.run(spark, silver, gold, buckets = Some(w))) == "silver")
     assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
     // Past the broadcast threshold the fact join sort-merges over the
     // silver buckets themselves, with no exchange.
@@ -301,7 +307,6 @@ class OlistPipelineSpec extends SparkSpec {
   test("gold reads silver plain when its files, stamp or width do not match") {
     val bronze = tmpDir("fbronze")
     writeBronze(bronze)
-    clearRelayoutLocations()
     val w = VendasMart.silverBuckets(spark)
     val items = OlistCatalog.orderItems
     val cases: Seq[(String, String => Int)] = Seq(
@@ -323,9 +328,9 @@ class OlistPipelineSpec extends SparkSpec {
       val gold = tmpDir("fgold")
       IngestJob.runAll(spark, bronze, silver)
       val asked = spoil(silver)
-      assert(OlistVendas.run(spark, silver, gold, buckets = Some(asked)) == "plain", what)
+      assert(leavesWarehouse(what)(
+        OlistVendas.run(spark, silver, gold, buckets = Some(asked))) == "plain", what)
       assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
-      assertNoRelayout(what)
     }
   }
 
@@ -334,16 +339,15 @@ class OlistPipelineSpec extends SparkSpec {
     val silver = tmpDir("sosilver")
     val gold = tmpDir("sogold")
     writeBronze(bronze)
-    clearRelayoutLocations()
     OlistCatalog.all.foreach(IngestJob(_).run(spark, bronze, silver, singleObject = true))
     for (spec <- factSpecs) {
       assert(dataFiles(factDir(silver, spec)).size == 1, spec.name)
       assert(!fs.exists(new Path(factDir(silver, spec), PersistedLayout.StampFile)))
     }
     val w = VendasMart.silverBuckets(spark)
-    assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "plain")
+    assert(leavesWarehouse("singleObject")(
+      OlistVendas.run(spark, silver, gold, buckets = Some(w))) == "plain")
     assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
-    assertNoRelayout("singleObject")
   }
 
   /** Whether `plan` reads a file-based relation under `root`. A
