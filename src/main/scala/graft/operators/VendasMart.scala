@@ -94,6 +94,16 @@ object VendasMart {
   /** [[silverBuckets]] of the active session. */
   def SilverBuckets: Int = silverBuckets(SparkSession.active)
 
+  /** The layouts [[ensureBucketedSilver]] built or re-registered:
+    * per (session, corpus), the width and the two table names.
+    */
+  private val silverCache =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Int, String, String)]
+  /** Test hook: forget memoized layouts so a spec can exercise the
+    * re-register / rebuild paths within one JVM.
+    */
+  private[graft] def resetSilverCache(): Unit = silverCache.clear()
+
   /** One-time per-(session, corpus) bucketed-silver build backing
     * `q_vendas_mart_bucketed`, at the session's width
     * ([[silverBuckets]]) — the [[graft.operators.Dedup]] index-memo
@@ -114,18 +124,10 @@ object VendasMart {
     * The tables are external, at their warehouse directories
     * ([[PersistedLayout.warehousePath]]). Table names carry a corpus
     * tag so two scale dirs never collide in one warehouse; a
-    * concurrent double-build is benign (`overwrite`, idempotent). The
-    * memo records the width the layout was built at, and an entry at
-    * another width is a miss. Stopped-session keys are swept like the
-    * Dedup caches.
+    * concurrent double-build is benign (`overwrite`, idempotent). A
+    * memo entry at another width is a miss. Stopped-session keys are
+    * swept like the Dedup caches.
     */
-  private val silverCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Int, String, String)]
-  /** Test hook: forget memoized layouts so a spec can exercise the
-    * re-register / rebuild paths within one JVM.
-    */
-  private[graft] def resetSilverCache(): Unit = silverCache.clear()
-
   def ensureBucketedSilver(spark: SparkSession, sfDir: String): (String, String) = {
     silverCache.keySet.foreach { k =>
       if (k._1.sparkContext.isStopped) silverCache.remove(k)

@@ -25,9 +25,9 @@ import org.apache.spark.sql.types.StructType
   * the layout was built from and at what width) plus the layout's own
   * data-file count, and a layout is reused only when both still match.
   *
-  * It owns the layout's write ([[write]]: one file per bucket, an
-  * external table over the given directory, then the stamp), the
-  * stamp and the reuse ([[reRegister]]). Two users:
+  * It owns the write ([[write]]: one file per bucket, an external
+  * table over the given directory), the stamp and the reuse
+  * ([[reRegister]]). Two users:
   * [[graft.operators.VendasMart.ensureBucketedSilver]] (the registry's
   * fact tables at their warehouse directories, fingerprinted by the
   * source corpus listing) and the ingest's `order_id`-keyed silver
