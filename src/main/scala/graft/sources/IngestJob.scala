@@ -4,11 +4,14 @@ import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.net.URI
 import java.nio.charset.StandardCharsets
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.VendasMart
 
@@ -51,25 +54,36 @@ final class IngestJob(spec: TableSpec) {
     * still drive the by-name alignment, so reordered/extra/missing
     * columns behave identically to the inferring variant.
     *
-    * One CSV read maps every file by the FIRST file's header, so a
-    * prefix whose files disagree on their headers is read per header:
-    * the files are grouped by their first line, each group is read and
-    * aligned on its own, and the groups are unioned. A prefix with one
-    * header stays a single read.
+    * Each file's header is read once, on the driver ([[IngestJob.headers]]),
+    * and parsed as Spark's CSV reader parses it. The read declares the
+    * all-string schema those names give and keeps `header=true`, so
+    * every file's header row is still skipped, and Spark starts no job
+    * to learn the names: this method starts no Spark job at all.
+    *
+    * One CSV read maps every file by one header, so a prefix whose
+    * files disagree on their headers is read per header: the files are
+    * grouped by their parsed names, each group is read and aligned on
+    * its own, and the groups are unioned. A prefix with one header
+    * stays a single read of the prefix. Files with no header line give
+    * no rows; a prefix of only such files gives the declared columns
+    * and no rows.
     */
   def extract(spark: SparkSession, bronzeRoot: String): DataFrame = {
-    val reader = spark.read
-      .option("header", true)
-      .option("sep", ",")
+    def read(names: Seq[String], paths: String*): DataFrame = align(spark.read
+      .schema(IngestJob.stringSchema(names))
+      .options(IngestJob.csvOptions)
       .option("mode", "PERMISSIVE")
+      .csv(paths: _*))
     val prefix = s"$bronzeRoot/${spec.prefix}"
-    val byHeader = spark.read.text(prefix).inputFiles.toSeq
-      .map(f => new Path(new URI(f)).toString).sorted
-      .groupBy(IngestJob.firstLine(spark, _))
-    if (byHeader.size <= 1) align(reader.csv(prefix))
-    else byHeader.values.toSeq.sortBy(_.head)
-      .map(files => align(reader.csv(files: _*)))
-      .reduce(_ union _)
+    val byHeader = IngestJob.headers(spark, prefix)
+      .groupMap(_._2)(_._1).removed(Nil).toSeq
+    byHeader match {
+      case Seq() => align(spark.createDataFrame(java.util.List.of[Row](), StructType(Nil)))
+      case Seq((names, _)) => read(names, prefix)
+      case groups => groups.sortBy(_._2.head)
+        .map { case (names, files) => read(names, files: _*) }
+        .reduce(_ union _)
+    }
   }
 
   /** By-name alignment: every declared column selected (cast to its
@@ -175,18 +189,47 @@ object IngestJob {
   private def fingerprint(spark: SparkSession, dir: Path, key: String, n: Int): String =
     (s"bucketBy=$key buckets=$n" +: PersistedLayout.listing(spark, dir)).mkString("\n")
 
-  /** A file's first line (its CSV header), read through Hadoop's
-    * FileSystem and the codec its extension names, as Spark reads it;
-    * empty for an empty file.
+  /** The CSV options of every bronze read. [[headers]] parses with
+    * them too, so the names it gives are the names the read would infer.
     */
-  private def firstLine(spark: SparkSession, file: String): String = {
+  private[graft] val csvOptions: Map[String, String] = Map("header" -> "true", "sep" -> ",")
+
+  /** Every file under `prefix`, sorted, with the column names Spark's
+    * CSV reader gives its header: the line is parsed as CSV (quoted
+    * names, a quoted comma) and made safe as
+    * `TextInputCSVDataSource.inferFromDataset` makes it, so blank and
+    * duplicate names come out as they do when Spark infers them. Nil
+    * for a file with no header line.
+    */
+  private[graft] def headers(spark: SparkSession, prefix: String): Seq[(String, Seq[String])] = {
+    val opts = new CSVOptions(csvOptions,
+      spark.sessionState.conf.csvColumnPruning, spark.sessionState.conf.sessionLocalTimeZone)
+    val parser = new CsvParser(opts.asParserSettings)
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    spark.read.text(prefix).inputFiles.toSeq
+      .map(f => new Path(new URI(f)).toString).sorted
+      .map(f => f -> firstLine(spark, f).flatMap(l => Option(parser.parseLine(l)))
+        .fold(Seq.empty[String])(CSVUtils.makeSafeHeader(_, caseSensitive, opts).toSeq))
+  }
+
+  /** The all-string schema a CSV read with these header names declares. */
+  private[graft] def stringSchema(names: Seq[String]): StructType =
+    StructType(names.map(StructField(_, StringType)))
+
+  /** A file's first non-blank line (its CSV header), read through
+    * Hadoop's FileSystem and the codec its extension names, as Spark
+    * reads it: a leading UTF-8 byte-order mark is dropped, as Hadoop's
+    * `LineRecordReader` drops it. None for a file with no such line.
+    */
+  private def firstLine(spark: SparkSession, file: String): Option[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val path = new Path(file)
     val raw = path.getFileSystem(conf).open(path)
     val in = Option(new CompressionCodecFactory(conf).getCodec(path))
       .fold[InputStream](raw)(_.createInputStream(raw))
     val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-    try Option(reader.readLine()).fold("")(_.stripSuffix("\r"))
+    try (Option(reader.readLine()).map(_.stripPrefix("\uFEFF")).iterator ++
+      Iterator.continually(reader.readLine()).takeWhile(_ != null)).find(_.trim.nonEmpty)
     finally reader.close()
   }
 

@@ -2,12 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
-import graft.sources.TableSpec
+import graft.sources.{IngestJob, TableSpec}
 
 /** Structured Streaming surface. The reference is batch-only — every
   * DAG runs `schedule_interval="@once"` (`…customer…py:19`,
@@ -29,14 +30,27 @@ object Streaming {
   /** Declared-schema CSV file-source stream over a bronze prefix —
     * streaming twin of `IngestJob.extract` (+ effective timestamp
     * transform), parquet sink, AvailableNow trigger.
+    *
+    * A stream reads every file by one schema, fixed at start. When the
+    * prefix holds files then, that schema is the first file's header
+    * (as `IngestJob.extract` names it), read as strings and aligned by
+    * name to the declared schema; before any file lands it is the
+    * declared schema itself. `enforceSchema=false` checks each file's
+    * header against it, so a later file with another header fails its
+    * micro-batch instead of landing its columns by position.
     */
   def ingestStream(spark: SparkSession, spec: TableSpec, bronzeRoot: String,
       silverRoot: String, checkpointRoot: String): StreamingQuery = {
-    val raw = spark.readStream
-      .option("header", true)
-      .option("sep", ",")
-      .schema(spec.schema)
-      .csv(s"$bronzeRoot/${spec.prefix}")
+    val prefix = s"$bronzeRoot/${spec.prefix}"
+    val dir = new Path(prefix)
+    val reader = spark.readStream
+      .options(IngestJob.csvOptions)
+      .option("enforceSchema", false)
+    val header =
+      if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) None
+      else IngestJob.headers(spark, prefix).map(_._2).find(_.nonEmpty)
+    val raw = header.fold(reader.schema(spec.schema).csv(prefix))(names =>
+      IngestJob(spec).align(reader.schema(IngestJob.stringSchema(names)).csv(prefix)))
     val cast = spec.tsCols.foldLeft(raw: DataFrame)(
       (d, c) => d.withColumn(c, try_to_timestamp(col(c))))
     cast.writeStream

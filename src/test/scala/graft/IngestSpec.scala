@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graft.ListenerShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 import graft.sources.{IngestJob, OlistCatalog, TableSpec}
@@ -142,5 +144,98 @@ class IngestSpec extends SparkSpec {
     assert(rows(1).isNullAt(df.columns.indexOf("order_item_id")))
     assert(rows(1).isNullAt(df.columns.indexOf("price")))
     assert(rows(1).getAs[Double]("freight_value") == 1.0)
+  }
+
+  private val customerHeader =
+    OlistCatalog.customers.schema.fieldNames.mkString(",")
+
+  private def customerRows(bronze: String): Seq[Seq[String]] = {
+    val df = IngestJob(OlistCatalog.customers).extract(spark, bronze)
+    assert(df.columns.toSeq == OlistCatalog.customers.schema.fieldNames.toSeq)
+    df.collect().map(r => df.columns.toSeq.map(r.getAs[String])).sortBy(_.head).toSeq
+  }
+
+  test("a header with a UTF-8 byte-order mark names its first column without it") {
+    val bronze = tmpDir("bronze")
+    val d = s"$bronze/olist/customers"
+    writeCsv(d, "a.csv", "\uFEFF" + customerHeader, "c1,u1,01310,sao paulo,SP")
+    writeCsv(d, "b.csv", customerHeader, "c2,u2,20040,rio de janeiro,RJ")
+    assert(customerRows(bronze) == Seq(
+      Seq("c1", "u1", "01310", "sao paulo", "SP"),
+      Seq("c2", "u2", "20040", "rio de janeiro", "RJ")))
+  }
+
+  test("quoted header names and a quoted comma inside a data cell parse as CSV") {
+    val bronze = tmpDir("bronze")
+    val d = s"$bronze/olist/customers"
+    writeCsv(d, "a.csv",
+      OlistCatalog.customers.schema.fieldNames.map(n => s""""$n"""").mkString(","),
+      "c1,u1,01310,\"sao paulo, centro\",SP")
+    writeCsv(d, "b.csv", customerHeader, "c2,u2,20040,\"rio, de janeiro\",RJ")
+    assert(customerRows(bronze) == Seq(
+      Seq("c1", "u1", "01310", "sao paulo, centro", "SP"),
+      Seq("c2", "u2", "20040", "rio, de janeiro", "RJ")))
+  }
+
+  test("an empty file among data files adds no rows") {
+    val bronze = tmpDir("bronze")
+    val d = s"$bronze/olist/customers"
+    writeCsv(d, "a.csv", customerHeader, "c1,u1,01310,sao paulo,SP")
+    writeCsv(d, "b.csv")
+    writeCsv(d, "c.csv", customerHeader.split(",").reverse.mkString(","),
+      "RJ,rio de janeiro,20040,u2,c2")
+    assert(customerRows(bronze) == Seq(
+      Seq("c1", "u1", "01310", "sao paulo", "SP"),
+      Seq("c2", "u2", "20040", "rio de janeiro", "RJ")))
+  }
+
+  test("a prefix of only empty files gives the declared columns and no rows") {
+    val bronze = tmpDir("bronze")
+    val d = s"$bronze/olist/customers"
+    writeCsv(d, "a.csv")
+    writeCsv(d, "b.csv")
+    assert(customerRows(bronze).isEmpty)
+  }
+
+  test("a duplicated declared name in a header is renamed on both copies and reads null") {
+    val bronze = tmpDir("bronze")
+    val d = s"$bronze/olist/customers"
+    // Spark's safe header names the copies customer_id0 and
+    // customer_id2, so neither matches the declared column.
+    writeCsv(d, "a.csv", "customer_id,customer_unique_id,customer_id",
+      "c1,u1,c1b")
+    assert(customerRows(bronze) == Seq(Seq(null, "u1", null, null, null)))
+  }
+
+  test("extract starts no Spark job, for one header or for three") {
+    val bronze1 = tmpDir("bronze")
+    writeCsv(s"$bronze1/olist/customers", "a.csv", customerHeader,
+      "c1,u1,01310,sao paulo,SP")
+    writeCsv(s"$bronze1/olist/customers", "b.csv", customerHeader,
+      "c2,u2,20040,rio de janeiro,RJ")
+    val bronze3 = tmpDir("bronze")
+    val declared = OlistCatalog.customers.schema.fieldNames.toSeq
+    writeCsv(s"$bronze3/olist/customers", "a.csv", declared.mkString(","),
+      "c1,u1,01310,sao paulo,SP")
+    writeCsv(s"$bronze3/olist/customers", "b.csv", declared.reverse.mkString(","),
+      "RJ,rio de janeiro,20040,u2,c2")
+    writeCsv(s"$bronze3/olist/customers", "c.csv", (declared :+ "note").mkString(","),
+      "c3,u3,30110,belo horizonte,MG,late")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsIn(bronze: String): Int = {
+      ListenerShim.drain(spark.sparkContext)
+      jobs.set(0)
+      IngestJob(OlistCatalog.customers).extract(spark, bronze)
+      ListenerShim.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsIn(bronze1) == 0, "jobs for one header")
+      assert(jobsIn(bronze3) == 0, "jobs for three headers")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

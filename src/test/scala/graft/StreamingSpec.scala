@@ -46,6 +46,31 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$silver/olist/customers").count() == 3)
   }
 
+  test("CSV ingest stream aligns a reordered header by name; a later header fails its batch") {
+    val bronze = tmpDir("sbronze")
+    val silver = tmpDir("ssilver")
+    val ckpt = tmpDir("sckpt")
+    val declared = OlistCatalog.customers.schema.fieldNames.toSeq
+    val p = Paths.get(bronze, "olist/customers", "a.csv")
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, declared.reverse.mkString(",") + "\nSP,osasco,06000,u9,c9")
+
+    val q = Streaming.ingestStream(spark, OlistCatalog.customers, bronze, silver, ckpt)
+    q.awaitTermination(60000)
+    val out = spark.read.parquet(s"$silver/olist/customers")
+    val rows = out.collect()
+    assert(rows.length == 1)
+    assert(declared.map(rows.head.getAs[String]) == Seq("c9", "u9", "06000", "osasco", "SP"))
+
+    // The stream's schema is the first file's header: a file with the
+    // declared order fails its micro-batch instead of landing by position.
+    Files.writeString(Paths.get(bronze, "olist/customers", "b.csv"),
+      declared.mkString(",") + "\nc3,u3,30110,bh,MG")
+    val q2 = Streaming.ingestStream(spark, OlistCatalog.customers, bronze, silver, ckpt)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.awaitTermination(60000))
+    assert(spark.read.parquet(s"$silver/olist/customers").count() == 1)
+  }
+
   test("watermarked tumbling window aggregates by hour and type") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String, Double)]
