@@ -75,7 +75,7 @@ final class IngestJob(spec: TableSpec) {
       .option("mode", "PERMISSIVE")
       .csv(paths: _*))
     val prefix = s"$bronzeRoot/${spec.prefix}"
-    val byHeader = IngestJob.headers(spark, prefix).toSeq
+    val byHeader = IngestJob.headers(spark, prefix)
       .groupMap(_._2)(_._1).removed(Nil).toSeq
     byHeader match {
       case Seq() => align(spark.createDataFrame(java.util.List.of[Row](), StructType(Nil)))
@@ -199,16 +199,15 @@ object IngestJob {
     * names, a quoted comma) and made safe as
     * `TextInputCSVDataSource.inferFromDataset` makes it, so blank and
     * duplicate names come out as they do when Spark infers them. Nil
-    * for a file with no header line. Each file is opened only when the
-    * iterator reaches it.
+    * for a file with no header line.
     */
-  private[graft] def headers(spark: SparkSession, prefix: String): Iterator[(String, Seq[String])] = {
+  private[graft] def headers(spark: SparkSession, prefix: String): Seq[(String, Seq[String])] = {
     val opts = new CSVOptions(csvOptions,
       spark.sessionState.conf.csvColumnPruning, spark.sessionState.conf.sessionLocalTimeZone)
     val parser = new CsvParser(opts.asParserSettings)
     val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
     spark.read.text(prefix).inputFiles.toSeq
-      .map(f => new Path(new URI(f)).toString).sorted.iterator
+      .map(f => new Path(new URI(f)).toString).sorted
       .map(f => f -> firstLine(spark, f).flatMap(l => Option(parser.parseLine(l)))
         .fold(Seq.empty[String])(CSVUtils.makeSafeHeader(_, caseSensitive, opts).toSeq))
   }

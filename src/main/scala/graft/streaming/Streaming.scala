@@ -31,26 +31,39 @@ object Streaming {
     * streaming twin of `IngestJob.extract` (+ effective timestamp
     * transform), parquet sink, AvailableNow trigger.
     *
-    * A stream reads every file by one schema, fixed at start. When the
-    * prefix holds files then, that schema is the first file's header
-    * (as `IngestJob.extract` names it), read as strings and aligned by
-    * name to the declared schema; before any file lands it is the
-    * declared schema itself. `enforceSchema=false` checks each file's
-    * header against it, so a later file with another header fails its
-    * micro-batch instead of landing its columns by position.
+    * A stream reads every file by one schema, fixed at start, so it
+    * takes the one header the prefix's files share then (named as
+    * `IngestJob.extract` names it), or the declared names before any
+    * file lands. It reads those columns as strings and aligns them by
+    * name to the declared schema, casting as the batch extract casts.
+    * Files with more than one header at start fail the start, naming
+    * a file of each: the batch extract reads such a prefix per header,
+    * a stream cannot. `enforceSchema=false` checks each later file's
+    * header against the stream's, so a file with another header fails
+    * its micro-batch instead of landing its columns by position. Every
+    * file's header is read on the driver at each start, as the batch
+    * extract reads them.
     */
   def ingestStream(spark: SparkSession, spec: TableSpec, bronzeRoot: String,
       silverRoot: String, checkpointRoot: String): StreamingQuery = {
     val prefix = s"$bronzeRoot/${spec.prefix}"
     val dir = new Path(prefix)
-    val reader = spark.readStream
+    val byHeader =
+      if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) Nil
+      else IngestJob.headers(spark, prefix).groupMap(_._2)(_._1).removed(Nil).toSeq
+    val names = byHeader match {
+      case Seq() => spec.schema.fieldNames.toSeq
+      case Seq((header, _)) => header
+      case groups => throw new IllegalArgumentException(
+        s"A CSV stream over $prefix reads one header, but its files have ${groups.size}: " +
+          groups.map { case (h, files) => s"${files.head} has ${h.mkString(",")}" }
+            .sorted.mkString("; "))
+    }
+    val raw = IngestJob(spec).align(spark.readStream
       .options(IngestJob.csvOptions)
       .option("enforceSchema", false)
-    val header =
-      if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) None
-      else IngestJob.headers(spark, prefix).map(_._2).find(_.nonEmpty)
-    val raw = header.fold(reader.schema(spec.schema).csv(prefix))(names =>
-      IngestJob(spec).align(reader.schema(IngestJob.stringSchema(names)).csv(prefix)))
+      .schema(IngestJob.stringSchema(names))
+      .csv(prefix))
     val cast = spec.tsCols.foldLeft(raw: DataFrame)(
       (d, c) => d.withColumn(c, try_to_timestamp(col(c))))
     cast.writeStream

@@ -46,29 +46,97 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$silver/olist/customers").count() == 3)
   }
 
-  test("CSV ingest stream aligns a reordered header by name; a later header fails its batch") {
+  /** A customers bronze prefix under a fresh root holding `files`
+    * (name -> contents), and fresh silver and checkpoint roots.
+    */
+  private def customersBronze(files: (String, String)*): (String, String, String) = {
     val bronze = tmpDir("sbronze")
-    val silver = tmpDir("ssilver")
-    val ckpt = tmpDir("sckpt")
-    val declared = OlistCatalog.customers.schema.fieldNames.toSeq
-    val p = Paths.get(bronze, "olist/customers", "a.csv")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, declared.reverse.mkString(",") + "\nSP,osasco,06000,u9,c9")
+    files.foreach { case (name, body) => writeBronze(bronze, name, body) }
+    (bronze, tmpDir("ssilver"), tmpDir("sckpt"))
+  }
 
-    val q = Streaming.ingestStream(spark, OlistCatalog.customers, bronze, silver, ckpt)
-    q.awaitTermination(60000)
-    val out = spark.read.parquet(s"$silver/olist/customers")
-    val rows = out.collect()
+  private def writeBronze(bronze: String, name: String, body: String): Unit = {
+    val p = Paths.get(bronze, "olist/customers", name)
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, body)
+  }
+
+  private def customersStream(bronze: String, silver: String, ckpt: String) =
+    Streaming.ingestStream(spark, OlistCatalog.customers, bronze, silver, ckpt)
+
+  private def silverCustomers(silver: String) =
+    spark.read.parquet(s"$silver/olist/customers")
+
+  private val declared = OlistCatalog.customers.schema.fieldNames.toSeq
+
+  test("CSV ingest stream aligns a reversed header by name; another header fails the next start") {
+    val (bronze, silver, ckpt) =
+      customersBronze("a.csv" -> (declared.reverse.mkString(",") + "\nSP,osasco,06000,u9,c9"))
+    customersStream(bronze, silver, ckpt).awaitTermination(60000)
+    val rows = silverCustomers(silver).collect()
     assert(rows.length == 1)
     assert(declared.map(rows.head.getAs[String]) == Seq("c9", "u9", "06000", "osasco", "SP"))
 
-    // The stream's schema is the first file's header: a file with the
-    // declared order fails its micro-batch instead of landing by position.
-    Files.writeString(Paths.get(bronze, "olist/customers", "b.csv"),
-      declared.mkString(",") + "\nc3,u3,30110,bh,MG")
-    val q2 = Streaming.ingestStream(spark, OlistCatalog.customers, bronze, silver, ckpt)
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.awaitTermination(60000))
-    assert(spark.read.parquet(s"$silver/olist/customers").count() == 1)
+    // A file in the declared order now makes two headers under the
+    // prefix: the stream refuses to start, naming a file of each.
+    writeBronze(bronze, "b.csv", declared.mkString(",") + "\nc3,u3,30110,bh,MG")
+    val e = intercept[IllegalArgumentException](customersStream(bronze, silver, ckpt))
+    assert(e.getMessage.contains("a.csv has customer_state,") &&
+      e.getMessage.contains("b.csv has customer_id,"), e.getMessage)
+    assert(silverCustomers(silver).count() == 1)
+  }
+
+  test("CSV ingest stream: two headers present at the first start fail it before any batch") {
+    val (bronze, silver, ckpt) = customersBronze(
+      "a.csv" -> (declared.mkString(",") + "\nc1,u1,01310,sao paulo,SP"),
+      "b.csv" -> (declared.reverse.mkString(",") + "\nSP,osasco,06000,u9,c9"))
+    intercept[IllegalArgumentException](customersStream(bronze, silver, ckpt))
+    assert(!Files.exists(Paths.get(silver, "olist/customers")))
+    assert(!Files.exists(Paths.get(ckpt, OlistCatalog.customers.name)))
+    // The batch extract reads the same prefix per header.
+    val batch = graft.sources.IngestJob(OlistCatalog.customers).extract(spark, bronze)
+    assert(batch.select("customer_id").as[String].collect().sorted.toSeq == Seq("c1", "c9"))
+  }
+
+  test("CSV ingest stream: an appended column lands by name alone, but not after the declared header") {
+    val appended = (declared :+ "customer_tier").mkString(",")
+    val (bronze, silver, ckpt) =
+      customersBronze("a.csv" -> (appended + "\nc1,u1,01310,sao paulo,SP,gold"))
+    customersStream(bronze, silver, ckpt).awaitTermination(60000)
+    val rows = silverCustomers(silver).collect()
+    assert(rows.length == 1)
+    assert(rows.head.schema.fieldNames.toSeq == declared)
+    assert(declared.map(rows.head.getAs[String]) == Seq("c1", "u1", "01310", "sao paulo", "SP"))
+
+    // After a run over the declared header, a file with the appended
+    // column is a second header: the stream refuses to start, where
+    // the batch extract reads both files.
+    val (bronze2, silver2, ckpt2) =
+      customersBronze("a.csv" -> (declared.mkString(",") + "\nc1,u1,01310,sao paulo,SP"))
+    customersStream(bronze2, silver2, ckpt2).awaitTermination(60000)
+    writeBronze(bronze2, "b.csv", appended + "\nc2,u2,20040,rio,RJ,silver")
+    intercept[IllegalArgumentException](customersStream(bronze2, silver2, ckpt2))
+    assert(silverCustomers(silver2).count() == 1)
+    assert(graft.sources.IngestJob(OlistCatalog.customers).extract(spark, bronze2).count() == 2)
+  }
+
+  test("CSV ingest stream: a duplicated or a blank header name streams as the batch extract reads it") {
+    // makeSafeHeader renames the copies (customer_id0, customer_id1) and
+    // the blank (_c1), so the declared names they stood for read null.
+    for ((header, id) <- Seq(
+        "customer_id,customer_id,customer_zip_code_prefix,customer_city,customer_state" -> null,
+        "customer_id,,customer_zip_code_prefix,customer_city,customer_state" -> "c1")) {
+      val (bronze, silver, ckpt) =
+        customersBronze("a.csv" -> (header + "\nc1,u1,01310,sao paulo,SP"))
+      val q = customersStream(bronze, silver, ckpt)
+      q.awaitTermination(60000)
+      assert(q.exception.isEmpty, q.exception)
+      val rows = silverCustomers(silver).collect().toSeq
+      assert(rows.map(r => declared.map(r.getAs[String])) ==
+        Seq(Seq(id, null, "01310", "sao paulo", "SP")), header)
+      assert(rows == graft.sources.IngestJob(OlistCatalog.customers).extract(spark, bronze)
+        .collect().toSeq, header)
+    }
   }
 
   test("watermarked tumbling window aggregates by hour and type") {
