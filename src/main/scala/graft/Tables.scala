@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog of the harness star-schema tables (see TESTDATA.md /
   * FIXTURES.md §A). One parquet file per table under `sfDir`.
@@ -10,15 +14,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `scripts/bronze_to_silver/ingestion_customer_bronze_to_silver.py:74-78`);
   * here the scale-factor directory plays the role of the silver bucket.
   *
-  * Scans stay lazy `spark.read.parquet` handles — Catalyst prunes columns
+  * Scans stay lazy Parquet read handles — Catalyst prunes columns
   * and pushes predicates into the vectorized parquet reader, so callers
   * should `.select`/`.filter` directly on these frames rather than
   * materializing them. At cluster scale the same accessors work on
-  * `s3a://` paths unchanged.
+  * `s3a://` paths unchanged. A table's first read in a session infers
+  * its schema, which costs a Spark job to read a Parquet footer; later
+  * reads declare that schema ([[table]]).
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** Per (session, table path): the data files the inferring read's
+    * file index listed, as (path, length, mtime), and the schema it
+    * inferred from them.
+    */
+  private val schemas =
+    TrieMap.empty[(SparkSession, String), (Seq[(String, Long, Long)], StructType)]
+
+  /** The Parquet table `name` under `sfDir`. The first read in a session
+    * infers the schema; a later read declares the schema memoized for
+    * the path and keeps it only while its own file index lists the same
+    * data files, so a table rewritten in place is inferred again and a
+    * hit lists the files no more often than an inferring read does.
+    * Entries of stopped sessions are swept on every read.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    schemas.keySet.foreach { k =>
+      if (k._1.sparkContext.isStopped) schemas.remove(k)
+    }
+    val path = s"$sfDir/$name.parquet"
+    schemas.get((spark, path))
+      .flatMap { case (files, schema) =>
+        Some(spark.read.schema(schema).parquet(path)).filter(dataFiles(_) == files) }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        schemas.put((spark, path), (dataFiles(df), df.schema))
+        df
+      }
+  }
+
+  /** The data files a read's file index listed for it: no new listing. */
+  private def dataFiles(df: DataFrame): Seq[(String, Long, Long)] =
+    df.queryExecution.analyzed.collect {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+        h.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    }.flatten.sorted
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

@@ -19,10 +19,10 @@ import graft.sources.PersistedLayout
   *   - Portuguese rename map (`:133-149`)                  → aliased select
   *
   * Scale notes (100 TB design):
-  *   - The pivot is a partial-aggregating hash aggregate on the grouping
-  *     key (map-side combine), shuffled once on `user_id`; the explicit
-  *     value list pins the output schema so no extra distinct-values job
-  *     runs (Spark would otherwise launch one to discover pivot columns).
+  *   - The pivot is one partial-aggregating hash aggregate on the
+  *     grouping key (map-side combine), shuffled once on `user_id`
+  *     ([[pivotSum]]); the explicit value list pins the output schema,
+  *     and no job runs to discover the pivot columns.
   *   - All joins are declarative equi-joins; the dims and the pivot
   *     carry a [[BuildSide]] hint from their counted size, the fact
   *     join is left to Catalyst/AQE.
@@ -32,19 +32,35 @@ import graft.sources.PersistedLayout
   */
 object VendasMart {
 
-  /** Pivot event amounts per user into one column per event type.
-    * Mirror of the payments pivot-sum (reference `s2g/vendas.py:91-92`).
-    * The explicit value list keeps the schema stable even when a type is
-    * absent at a given scale factor — same reason the reference's fillna
-    * lists all five payment types (`s2g/vendas.py:116-120`).
+  /** The event types [[pivotEvents]] makes columns of. The explicit
+    * list keeps the schema stable even when a type is absent at a given
+    * scale factor — same reason the reference's fillna lists all five
+    * payment types (`s2g/vendas.py:116-120`).
     */
   val EventTypes: Seq[String] = Seq("click", "error", "purchase", "signup", "view")
 
+  /** Event amounts summed per user into one column per event type
+    * ([[pivotSum]] over [[EventTypes]]). Mirror of the payments
+    * pivot-sum (reference `s2g/vendas.py:91-92`).
+    */
   def pivotEvents(events: DataFrame): DataFrame =
-    events
-      .groupBy("user_id")
-      .pivot("event_type", EventTypes)
-      .sum("value")
+    pivotSum(events, "user_id", "event_type", "value", EventTypes)
+
+  /** `df.groupBy(key).pivot(typeCol, values).sum(valueCol)`, planned as
+    * one aggregate of one `sum(CASE WHEN typeCol = v THEN valueCol END)`
+    * per listed value, the form [[pivotCase]] states to the oracle. A
+    * row whose type is null or unlisted adds to no column, and a group
+    * with no value of a type reads null there, as in Spark's pivot.
+    * Spark's pivot plans a second aggregate on (key, type) under its
+    * `pivotfirst`, so two shuffles, four hash aggregates and a
+    * `pivotfirst` that whole-stage codegen does not compile; this is one
+    * shuffle on `key` between two codegen'd hash aggregates.
+    */
+  def pivotSum(df: DataFrame, key: String, typeCol: String, valueCol: String,
+      values: Seq[String]): DataFrame = {
+    val sums = values.map(v => sum(when(col(typeCol) === v, col(valueCol))).as(v))
+    df.groupBy(key).agg(sums.head, sums.tail: _*)
+  }
 
   def eventsPivot(spark: SparkSession, sfDir: String): DataFrame =
     pivotEvents(Tables.events(spark, sfDir))

@@ -160,7 +160,7 @@ final class IngestJob(spec: TableSpec) {
   /** The schema [[run]] writes, from analysing the pipeline over an
     * empty all-string frame: no file is read.
     */
-  private def silverSchema(spark: SparkSession): StructType =
+  private[graft] def silverSchema(spark: SparkSession): StructType =
     transform(align(spark.createDataFrame(java.util.List.of[Row](),
       IngestJob.stringSchema(spec.schema.fieldNames.toSeq)))).schema
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.VendasMart
+
 /** The reference's silver→gold "vendas" mart on the *actual Olist
   * schemas* (`scripts/silver_to_gold/ingestion_vendas_silver_to_gold.py`)
   * — the literal port, exercised end-to-end by OlistPipelineSpec over
@@ -12,7 +14,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Stage map (reference line cites):
   *   - 5 silver scans + projections (`:44-104`)     → pruned parquet reads
-  *   - payments pivot-sum (`:91-92`)                → groupBy.pivot(explicit values).sum
+  *                                                    under the ingest's schema
+  *   - payments pivot-sum (`:91-92`)                → one sum(CASE …) aggregate
+  *                                                    per explicit value
   *   - 4-way left join on item grain (`:107-111`)   → chained left equi-joins
   *   - fillna(0) ×7 money cols (`:114-120`)         → na.fill(0.0, …)
   *   - to-date (`:123`), upper (`:126-127`),
@@ -20,10 +24,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   - Portuguese rename ×14 (`:133-149`)           → one aliased select
   *
   * Scale: the only shuffles are the pivot aggregation (partial agg,
-  * keyed on order_id) and — beyond broadcast thresholds — the joins;
-  * dimension sides (products, customers) broadcast automatically. The
-  * explicit pivot value list pins the schema AND skips Spark's
-  * distinct-values discovery job.
+  * keyed on order_id, one exchange: [[VendasMart.pivotSum]]) and —
+  * beyond broadcast thresholds — the joins; dimension sides (products,
+  * customers) broadcast automatically. The explicit pivot value list
+  * pins the schema, so no job runs to discover the pivot columns, and
+  * every silver read declares the schema the ingest writes
+  * ([[IngestJob.silverSchema]]), so no job runs to read a Parquet
+  * footer either.
   */
 object OlistVendas {
 
@@ -39,8 +46,9 @@ object OlistVendas {
   private val ItemCols = Seq("order_id", "product_id", "price", "freight_value").map(col) // :77
   private val OrderCols = Seq("order_id", "customer_id", "order_purchase_timestamp").map(col) // :65
 
+  /** A silver table under the schema its ingest writes. */
   def silver(spark: SparkSession, silverRoot: String, spec: TableSpec): DataFrame =
-    spark.read.parquet(s"$silverRoot/${spec.prefix}")
+    spark.read.schema(IngestJob(spec).silverSchema(spark)).parquet(s"$silverRoot/${spec.prefix}")
 
   def mart(spark: SparkSession, silverRoot: String): DataFrame =
     martOver(spark, silverRoot,
@@ -60,10 +68,8 @@ object OlistVendas {
     val customers = silver(spark, silverRoot, OlistCatalog.customers)
       .select("customer_id", "customer_city", "customer_state")       // :104
 
-    val paymentsPivot = payments
-      .groupBy("order_id")
-      .pivot("payment_type", PaymentTypes)
-      .sum("payment_value")                                           // :91-92
+    val paymentsPivot = VendasMart.pivotSum(payments,
+      "order_id", "payment_type", "payment_value", PaymentTypes)      // :91-92
 
     // joins :107-111, fillna :114-120, transforms+rename :123-149
     items
@@ -122,10 +128,8 @@ object OlistVendas {
     * data was re-running the whole DAG (`@once`, re-read everything).
     */
   def incrementalMart(spark: SparkSession, silverRoot: String): DataFrame = {
-    val itemsSchema = spark.read
-      .parquet(s"$silverRoot/${OlistCatalog.orderItems.prefix}").schema
     val items = spark.readStream
-      .schema(itemsSchema)
+      .schema(IngestJob(OlistCatalog.orderItems).silverSchema(spark))
       .parquet(s"$silverRoot/${OlistCatalog.orderItems.prefix}")
       .select(ItemCols: _*)
     martOver(spark, silverRoot, items,
@@ -155,8 +159,9 @@ object OlistVendas {
     * bucketed at that width where the ingest wrote them so, the DAG's
     * case and the default, and plain silver otherwise
     * ([[bucketedMart]]). The mirror copies the gold parquet just
-    * written rather than computing the mart a second time. Returns
-    * the layout the fact sides were read in: `silver` or `plain`.
+    * written, read under the mart's schema, rather than computing the
+    * mart a second time. Returns the layout the fact sides were read
+    * in: `silver` or `plain`.
     */
   def run(spark: SparkSession, silverRoot: String, goldRoot: String,
       jdbc: Option[Sinks.JdbcTarget] = None,
@@ -167,7 +172,7 @@ object OlistVendas {
     }
     val out = s"$goldRoot/olist/vendas"
     m.write.mode("overwrite").parquet(out)
-    jdbc.foreach(t => Sinks.jdbcReplace(spark.read.parquet(out), t))
+    jdbc.foreach(t => Sinks.jdbcReplace(spark.read.schema(m.schema).parquet(out), t))
     layout
   }
 }

@@ -89,13 +89,19 @@ class ExplainSpec extends SparkSpec {
     }
   }
 
-  test("pivot carries the explicit value list (no distinct-discovery job)") {
-    // With explicit pivot values the plan is a single aggregate chain;
-    // Spark's value-discovery variant would have run a separate job by
-    // the time the plan exists. Assert the five typed columns are in
-    // the schema without any action having run.
+  test("pivot is one aggregate over the explicit value list: one exchange, no pivotfirst") {
+    // The explicit value list puts the five typed columns in the schema
+    // without any action having run (Spark's value-discovery variant
+    // would have run a job by now). One sum(CASE …) per value plans a
+    // partial and a final hash aggregate around a single shuffle on
+    // user_id; Spark's pivot plans a second aggregate on (user_id,
+    // event_type) and a pivotfirst, so two exchanges and four.
     val df = VendasMart.eventsPivot(spark, sf)
     assert(df.columns.toSeq == "user_id" +: VendasMart.EventTypes)
+    val plan = df.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+    assert("HashAggregate".r.findAllIn(plan).size == 2, plan)
+    assert(!plan.contains("pivotfirst"), plan)
   }
 
   test("salted aggregation plans two aggregate stages (skew defense shape)") {

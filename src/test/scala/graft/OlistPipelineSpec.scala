@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.ListenerShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.DateType
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -264,6 +265,31 @@ class OlistPipelineSpec extends SparkSpec {
       exchangeFreeFactJoin(m, "order_id")
       assertSameRows(m, OlistVendas.mart(spark, silver))
     }
+  }
+
+  test("gold over ingest-written silver starts no job outside a SQL execution") {
+    // A Parquet read that infers its schema starts a job of its own, with
+    // no SQL execution id, to read a footer; gold declares every schema.
+    val bronze = tmpDir("fbronze")
+    val silver = tmpDir("fsilver")
+    val gold = tmpDir("fgold")
+    writeBronze(bronze)
+    IngestJob.runAll(spark, bronze, silver)
+    val w = VendasMart.silverBuckets(spark)
+    val bare = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == null))
+          bare.incrementAndGet()
+    }
+    ListenerShim.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(OlistVendas.run(spark, silver, gold, buckets = Some(w)) == "silver")
+      ListenerShim.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(bare.get == 0, "jobs with no SQL execution id")
+    assertSameBags(goldRows(gold), rowBag(OlistVendas.mart(spark, silver)))
   }
 
   test("a new JVM's gold re-registers the ingest's layout from its stamp, files untouched") {

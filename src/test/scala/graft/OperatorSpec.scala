@@ -30,6 +30,34 @@ class OperatorSpec extends SparkSpec {
     assert(r1.isNullAt(p.columns.indexOf("purchase"))) // absent type -> null column
   }
 
+  test("pivotSum equals Spark's pivot-sum row for row on generated rows") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // Types: listed, unlisted and null; "never" is listed but never
+    // drawn. Amounts are quarters, so every sum is exact whatever order
+    // the partial sums merge in, or null. Group 99 holds only nulls.
+    val types = Seq("a", "b", "c", "never")
+    val row = for {
+      k <- Gen.choose(0, 7)
+      t <- Gen.frequency(6 -> Gen.oneOf("a", "b", "c"), 1 -> Gen.const("z"),
+        1 -> Gen.const(null: String))
+      v <- Gen.option(Gen.choose(-40, 40).map(_ / 4.0))
+      n <- Gen.option(Gen.choose(-5L, 5L))
+    } yield (k, t, v, n)
+    for (seed <- 1L to 4L) {
+      val rows = Gen.listOfN(200, row).pureApply(Gen.Parameters.default, Seed(seed)) ++
+        Seq((99, "a", None, None), (99, null, None, None))
+      val df = rows.toDF("k", "t", "v", "n").repartition(3)
+      for (value <- Seq("v", "n")) {
+        val got = VendasMart.pivotSum(df, "k", "t", value, types)
+        val want = df.groupBy("k").pivot("t", types).sum(value)
+        assert(got.schema == want.schema, s"seed $seed, $value")
+        assert(got.orderBy("k").collect().toSeq == want.orderBy("k").collect().toSeq,
+          s"seed $seed, $value")
+      }
+    }
+  }
+
   test("vendas mart: 0-filled money columns, no null amounts") {
     val m = VendasMart.mart(spark, sf)
     val amounts = Seq("click", "error", "purchase", "signup", "view")
