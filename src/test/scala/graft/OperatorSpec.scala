@@ -388,34 +388,51 @@ class OperatorSpec extends SparkSpec {
     assert(out.values.sum == 2 + 2 + 4)
   }
 
-  test("label propagation converges on a diameter-20 chain, off the clique happy path") {
-    // The LSH pair graph is clique unions (diameter <= ~4), so the
-    // production loop never runs deep. A path graph with the MIN id at
-    // one END forces one-hop-per-iteration propagation across the full
-    // diameter — exercising the iteration guard region and the
-    // per-iteration O(|E|) join shape far beyond the happy path.
+  /** A path graph over ids 100..120 with the MIN id at one END, so
+    * labels spread one hop per round across the full diameter 20, plus
+    * a disjoint triangle to keep several components in play.
+    */
+  private def diameter20Chain(): org.apache.spark.sql.DataFrame = {
     val rnd = new scala.util.Random(7)
     val others = rnd.shuffle((101L to 120L).toVector)
     val pathNodes = 100L +: others // min id first -> worst-case spread
     val chain = pathNodes.sliding(2).map { p =>
       (math.min(p(0), p(1)), math.max(p(0), p(1)))
     }.toSeq
-    // Plus a disjoint triangle to keep multiple components in play.
     val tri = Seq((500L, 501L), (500L, 502L), (501L, 502L))
-    val pairs = (chain ++ tri).toDF("a_id", "b_id")
-    val out = Dedup.clusterPairsOf(pairs).collect()
+    (chain ++ tri).toDF("a_id", "b_id")
+  }
+
+  test("label propagation converges on a diameter-20 chain, off the clique happy path") {
+    // The LSH pair graph is clique unions (diameter <= ~4), so the
+    // production loop never runs deep. The chain forces
+    // one-hop-per-iteration propagation across the full diameter —
+    // exercising the iteration guard region and the per-iteration
+    // O(|E|) join shape far beyond the happy path.
+    val out = Dedup.clusterPairsOf(diameter20Chain()).collect()
       .map(r => r.getAs[Long]("cluster") ->
         (r.getAs[Long]("cluster_size"), r.getAs[String]("members"))).toMap
     assert(out.keySet == Set(100L, 500L))
     assert(out(100L)._1 == 21L)
     assert(out(100L)._2 == (100L to 120L).mkString(","))
     assert(out(500L)._1 == 3L)
-    // The chain genuinely ran deep: one extra iteration confirms
-    // convergence, so diameter 20 needs >= 20 passes, well past the
-    // clique regime yet safely under the 50-iteration guard.
-    assert(Dedup.lastPropagationIters > 5,
-      s"expected deep propagation, got ${Dedup.lastPropagationIters} iters")
-    assert(Dedup.lastPropagationIters < 50)
+    // The chain genuinely ran deep: 20 hops, then one pass in which no
+    // label changes confirms convergence.
+    assert(Dedup.lastPropagationIters == 21,
+      s"expected 20 hops plus one confirming pass, got ${Dedup.lastPropagationIters} iters")
+  }
+
+  test("label propagation on the diameter-20 chain starts 3 jobs a round") {
+    // Each round computes the next labels and a `changed` flag in one
+    // aggregate (its stage is one job), takes one lazy checkpoint of
+    // them and runs one action that fills it and counts the changed
+    // rows. Rounds after the first add the frontier's broadcast; round
+    // 1 pushes every doc's id without a join. An eager checkpoint, a
+    // Dataset count or a second checkpoint per round shows here as
+    // more jobs.
+    val jobs = jobsStarted(Dedup.clusterPairsOf(diameter20Chain()))
+    assert(Dedup.lastPropagationIters == 21)
+    assert(jobs == 2 + 3 * 20, s"$jobs jobs over ${Dedup.lastPropagationIters} rounds")
   }
 
   test("char-n-gram language ID identifies real multilingual text, including zh by script") {
@@ -1191,6 +1208,56 @@ class OperatorSpec extends SparkSpec {
     assert(Dedup.demotionVictim(equalReads) == 1)
     val tied = Seq(("a", 100L, 1.0), ("b", 100L, 1.0), ("c", 100L, 1.0))
     assert(Dedup.demotionVictim(tied) == 2)
+  }
+
+  /** A fresh copy of the test corpus's documents and embeddings, so
+    * the index memo (keyed on session and directory) starts empty.
+    */
+  private def corpusCopy(name: String): String = {
+    val dir = tmpDir(name)
+    for (t <- Seq("documents", "embeddings")) java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/$t.parquet"), java.nio.file.Paths.get(dir, s"$t.parquet"))
+    dir
+  }
+
+  test("prewarm on the test corpus starts 26 jobs") {
+    // Each persisted frame is filled by one noop write, plus AQE's
+    // stage jobs where its plan shuffles, and prewarm touches each
+    // frame once. A count per fill, a recount in prewarm or an eager
+    // checkpoint per propagation round shows here as more jobs.
+    val dir = corpusCopy("prewarmjobs")
+    val jobs = jobsStarted(Dedup.prewarm(spark, dir))
+    assert(jobs == 26, s"prewarm started $jobs jobs")
+  }
+
+  test("prewarm fills every resident frame's cache at the ladder's tier") {
+    // Every test-corpus frame is small: multi-read frames start at
+    // MEMORY_AND_DISK and once-read frames upgrade to it after their
+    // first fill. Fully cached means the fill computed every partition.
+    import org.apache.spark.storage.StorageLevel
+    val dir = corpusCopy("prewarmfill")
+    Dedup.prewarm(spark, dir)
+    val frames = Map(
+      "fingerprints" -> Dedup.fingerprints(spark, dir),
+      "shingle_index" -> Dedup.shingleIndex(spark, dir),
+      "minhash_signatures" -> Dedup.minHashSignatures(spark, dir),
+      "lsh_pairs" -> Dedup.minHashPairs(spark, dir),
+      "clusters" -> Dedup.nearDupClusters(spark, dir))
+    val resident = Dedup.IndexHolder.demoteLock.synchronized {
+      Dedup.IndexHolder.residents.filter(r => frames.get(r.label).exists(_ eq r.df)).toSeq
+    }
+    assert(resident.map(_.label).sorted == frames.keys.toSeq.sorted)
+    val infos = spark.sparkContext.getRDDStorageInfo.map(i => i.id -> i).toMap
+    for (r <- resident) {
+      assert(r.df.storageLevel == StorageLevel.MEMORY_AND_DISK, r.label)
+      assert(r.rddIds.nonEmpty, s"${r.label}: no cached RDD")
+      for (id <- r.rddIds) {
+        val i = infos(id)
+        assert(i.storageLevel == StorageLevel.MEMORY_AND_DISK, r.label)
+        assert(i.numCachedPartitions == i.numPartitions,
+          s"${r.label}: ${i.numCachedPartitions} of ${i.numPartitions} partitions cached")
+      }
+    }
   }
 
   // --- windowRank: TopK-aggregate form vs the declared window form ---

@@ -78,6 +78,26 @@ trait SparkSpec extends AnyFunSuite {
     factJoin.get
   }
 
+  /** Spark jobs started while `body` runs, counted by a listener that
+    * sees every event: the bus is drained before it is attached and
+    * before it is removed.
+    */
+  def jobsStarted(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerShim.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerShim.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   /** Fresh per-suite scratch dir under target/. */
   def tmpDir(name: String): String = {
     val p = java.nio.file.Files.createTempDirectory(
